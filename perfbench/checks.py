@@ -70,3 +70,23 @@ def check_curation(out: str, report: str, n_input: int, expected_ids) -> list[st
         problems.append(f"{report}: {passed} docs pass the filters but {len(ids)} are curated")
     return problems
 
+
+
+def check_ingest(landing: str, sink: str) -> list[str]:
+    """The exact-dedup sink holds each distinct landed text once (the
+    distinct texts computed here, independently of the program) and
+    accepts no doc_id twice."""
+    con = duckdb.connect()
+    problems = []
+    ids = [r[0] for r in _sink_rows(con, sink, "doc_id")]
+    if len(ids) != len(set(ids)):
+        problems.append(f"{sink}: a doc_id is accepted twice")
+    want = {r[0] for r in con.execute(
+        f"SELECT DISTINCT coalesce(text, '') FROM read_parquet('{landing}/*.parquet')"
+    ).fetchall()}
+    got = [r[0] for r in _sink_rows(con, sink, "coalesce(text, '')")]
+    if len(got) != len(set(got)) or set(got) != want:
+        problems.append(
+            f"{sink}: {len(got)} texts ({len(set(got))} distinct), landed {len(want)} distinct"
+        )
+    return problems

@@ -1,10 +1,14 @@
 """Per-layer metrics of a traced run, gathered from outside the program:
 spans around the public calls of each layer, Spark's status store,
-and the files the run wrote."""
+a streaming-query listener, and the files the run wrote."""
 
 from __future__ import annotations
 
 import os
+import time
+from datetime import datetime
+
+import pyarrow.parquet as pq
 
 from measure import dir_usage, spark_history, wrap
 
@@ -18,38 +22,82 @@ def _union_s(intervals: list[tuple[float, float]]) -> float:
     return total
 
 
+def _rows(path: str) -> int:
+    return sum(
+        pq.ParquetFile(os.path.join(d, n)).metadata.num_rows
+        for d, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
+def _epoch_s(iso: str) -> float:
+    return datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp()
+
+
 class Layers:
     def __init__(self, spark, tracer) -> None:
         self.spark, self.tracer = spark, tracer
         self.persists = 0
+        self.progress: list[dict] = []
 
     def install(self) -> None:
-        """Wrap the layers' public calls and start recording spans."""
+        """Wrap the layers' public calls. Spans are recorded while the
+        tracer is enabled; the wrappers cost nothing otherwise."""
+        from pyspark.sql.streaming import StreamingQueryListener
+
         from classification_pyspark_spark.operators import caching, graph
         from classification_pyspark_spark.plans import runner
         from classification_pyspark_spark.sources import io
+        from classification_pyspark_spark.streaming import corpus
 
         tr = self.tracer
         wrap(tr, runner, "run_task", "runner.task")
         wrap(tr, graph, "connected_components", "graph.cc")
+        wrap(tr, corpus, "ingest_batch", "stream.batch")
         wrap(tr, io, "save_data_observed", "io.save_observed")
 
         release = caching.release_tracked
 
         def counted_release(*args, **kwargs):
             n = release(*args, **kwargs)
-            self.persists += n
+            if tr.enabled:
+                self.persists += n
             return n
 
         caching.release_tracked = counted_release
 
-        tr.enabled = True
+        progress = self.progress
 
-    def collect(self, phase: dict, wl, cores: int) -> dict:
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                p = event.progress
+                progress.append({"at": _epoch_s(p.timestamp), "rows": p.numInputRows,
+                                 **p.durationMs})
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        self.spark.streams.addListener(Listener())
+
+    def collect(self, passes: list[dict], wl, cores: int) -> dict:
+        """Per-pass means over ``passes``, the traced ones."""
         tr = self.tracer
-        passes = phase["passes"]
         n = len(passes)
         ops = [o for p in passes for o in p["ops"]]
+        in_ops = lambda t: any(o["start"] <= t <= o["end"] for o in ops)  # noqa: E731
+        # progress events reach the listener asynchronously
+        deadline = time.time() + 10
+        while (len([p for p in self.progress if in_ops(p["at"])]) < len(tr.named("stream.batch"))
+               and time.time() < deadline):
+            time.sleep(0.1)
+        progress = [p for p in self.progress if in_ops(p["at"])]
         jobs, stages = spark_history(self.spark)
         jobs = [j for j in jobs if j.get("submissionTime") is not None]
 
@@ -98,6 +146,7 @@ class Layers:
 
         stored = [d for p in passes for d in wl.stored_dirs(p["dir"])]
         written = [dir_usage(d) for d in stored]
+        sink_rows = sum(_rows(d) for d in stored if os.path.basename(d) == "sink")
         op_wall = sum(o["latency_s"] for o in ops)
         run_s = total("executorRunTime") / 1000
 
@@ -128,19 +177,29 @@ class Layers:
             "runner.overhead_s": (overhead, "s"),
             "io.bytes_written": (sum(w[0] for w in written), "bytes"),
             "io.files_written": (sum(w[1] for w in written), "count"),
+            "stream.batches": (len(progress), "count"),
+            "stream.batch_s": (sum(p.get("triggerExecution", 0) for p in progress) / 1000, "s"),
+            "stream.add_batch_s": (sum(p.get("addBatch", 0) for p in progress) / 1000, "s"),
+            "stream.input_rows": (sum(p["rows"] for p in progress), "count"),
+            "stream.index_rows": (
+                sum(_rows(d) for d in stored if os.path.basename(d) == "index"), "count"),
         }
         # per pass, like the end-to-end metrics
         m = {k: (v / n, u) for k, (v, u) in m.items()}
         m["spark.slot_busy_frac"] = (run_s / (op_wall * cores), "frac")
+        # rows the ingest sinks accepted per row offered to them
+        offered = wl.offered_rows() * n
+        m["stream.accept_frac"] = (sink_rows / offered if offered else 0.0, "frac")
         return m
 
-    def self_time_check(self) -> dict:
-        """Per operation: the self times of its span subtree must add up
-        to the operation's wall time."""
-        self_t = self.tracer.self_times()
-        worst = 0.0
-        for op in self.tracer.named("op"):
-            subtree = [op] + self.tracer.descendants(op["id"])
-            wall = op["end"] - op["start"]
-            worst = max(worst, abs(sum(self_t[s["id"]] for s in subtree) - wall) / wall)
-        return {"ops": len(self.tracer.named("op")), "max_rel_diff": worst}
+    def span_check(self, ops: list[dict]) -> dict:
+        """Each traced operation's span against its latency measured
+        around it. Self times over an operation's span subtree add up to
+        the span's duration by construction (a span's self time is its
+        duration minus its children's), so this gap is what the span
+        tree leaves out of the operation's wall time."""
+        spans = self.tracer.named("op")
+        gaps = [o["latency_s"] - (s["end"] - s["start"]) for o, s in zip(ops, spans)]
+        return {"ops": len(spans), "matched": len(spans) == len(ops),
+                "max_gap_s": max(gaps, default=0.0),
+                "max_gap_frac": max((g / o["latency_s"] for g, o in zip(gaps, ops)), default=0.0)}

@@ -66,17 +66,6 @@ class Tracer:
                 covered[s["parent"]] = covered.get(s["parent"], 0.0) + s["end"] - s["start"]
         return {s["id"]: s["end"] - s["start"] - covered.get(s["id"], 0.0) for s in self.spans}
 
-    def descendants(self, root: int) -> list[dict]:
-        kids: dict[int, list[dict]] = {}
-        for s in self.spans:
-            kids.setdefault(s["parent"], []).append(s)
-        out, todo = [], [root]
-        while todo:
-            for s in kids.get(todo.pop(), []):
-                out.append(s)
-                todo.append(s["id"])
-        return out
-
 
 def wrap(tracer: Tracer, module, attr: str, span_name: str) -> None:
     """Trace every later call to ``module.attr``. The program imports

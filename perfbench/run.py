@@ -9,9 +9,11 @@ One client runs each workload's operations in a closed loop on
 (at least one pass). Outputs are checked after the timed phase. The
 last stdout line is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}`` — end-to-end metrics
-with ``--trace 0``, per-layer metrics with ``--trace 1``. The line
-before it is the full record (seed, rationale, host readings, per-op
-latencies and job counts), also appended to
+with ``--trace 0``, per-layer metrics with ``--trace 1``. A traced run
+alternates untraced and traced passes, so that the tracing overhead is
+measured in one process under the same warm state. The line before it
+is the full record (seed, rationale, host readings, per-op latencies
+and job counts), also appended to
 ``.bench_build/perfbench/results.jsonl``; traced runs write their
 spans to ``.bench_build/perfbench/spans/``.
 
@@ -69,8 +71,9 @@ def setup_env(work: str) -> dict:
     os.environ["TMPDIR"] = tmp
     return {
         # -Xms: start the heap at 4 GB instead of 1/64 of RAM; how far G1
-        # grew it early on otherwise made whole runs 1.5x slower or faster
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms4g",
+        # grew it early on otherwise made whole runs 1.5x slower or faster.
+        # Pre-touched, so first-touch page faults stay out of the passes.
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms4g -XX:+AlwaysPreTouch",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
     }
 
@@ -109,9 +112,13 @@ def stop_spark(spark, tree) -> None:
 
 
 def run_pass(wl, spark, tracer, pass_dir, count_rdds: bool) -> dict:
+    """One pass; its ``wall_s`` leaves out the ``prepare`` steps."""
     ops = []
-    t0 = time.perf_counter()
-    for name, op in wl.ops(spark, pass_dir):
+    wall = 0.0
+    for name, prepare, op in wl.ops(spark, pass_dir):
+        if prepare is not None:
+            prepare()
+        t0 = time.perf_counter()
         rdds0 = spark.sparkContext._jsc.getPersistentRDDs().size() if count_rdds else 0
         start = time.time()
         o0 = time.perf_counter()
@@ -127,17 +134,24 @@ def run_pass(wl, spark, tracer, pass_dir, count_rdds: bool) -> dict:
         wl.clear(spark)
         ops.append({"name": name, "start": start, "end": start + latency,
                     "latency_s": latency, "ok": ok, "leaked_rdds": max(0, leaked)})
-    return {"dir": pass_dir, "wall_s": time.perf_counter() - t0, "ops": ops}
+        wall += time.perf_counter() - t0
+    return {"dir": pass_dir, "wall_s": wall, "ops": ops, "traced": tracer.enabled}
 
 
-def timed_phase(wl, spark, tracer, work, seconds, tree, count_rdds) -> dict:
+def timed_phase(wl, spark, tracer, work, seconds, tree, traced: bool) -> dict:
+    """Whole passes until ``seconds`` have elapsed, at least
+    ``wl.passes`` of them. Traced: untraced and traced passes take
+    turns, at least two of each."""
     passes = []
     cpu0 = tree.cpu_s()
     tree.start()
     t0 = time.perf_counter()
-    while len(passes) < wl.passes or time.perf_counter() - t0 < seconds:
+    least = max(wl.passes, 4) if traced else wl.passes
+    while len(passes) < least or time.perf_counter() - t0 < seconds or (traced and len(passes) % 2):
+        tracer.enabled = traced and len(passes) % 2 == 1
         passes.append(run_pass(wl, spark, tracer, os.path.join(work, f"pass{len(passes)}"),
-                               count_rdds))
+                               tracer.enabled))
+    tracer.enabled = False
     tree.stop()
     return {"passes": passes, "cpu_s": tree.cpu_s() - cpu0, "peak_kb": tree.peak_kb,
             "live_heap_mb": live_heap_mb(spark)}
@@ -162,19 +176,6 @@ def live_heap_mb(spark) -> float:
     return used
 
 
-def reference_wall(workload: str, seed: int) -> float | None:
-    """Untraced ``wall_s`` of this workload from earlier runs in this
-    checkout: the same seed if there is one, else the median of all."""
-    try:
-        with open(os.path.join(OUT, "results.jsonl")) as f:
-            recs = [json.loads(line) for line in f]
-    except OSError:
-        return None
-    mine = [r for r in recs if r["workload"] == workload and r["trace"] == 0]
-    pool = [r for r in mine if r["seed"] == seed] or mine
-    return statistics.median(r["e2e"]["wall_s"] for r in pool) if pool else None
-
-
 def write_spans(tracer, workload: str, seed: int) -> None:
     d = os.path.join(OUT, "spans")
     os.makedirs(d, exist_ok=True)
@@ -188,7 +189,9 @@ def end_to_end(wl, phase, setup_s) -> tuple[dict, dict]:
     ops = [o for p in passes for o in p["ops"]]
     lat = [o["latency_s"] for o in ops]
     tail_s, tail_pct = tail(lat)
-    stored = sum(measure.dir_usage(d)[0] for d in wl.stored_dirs(passes[-1]["dir"]))
+    last = passes[-1]["dir"]
+    stored = sum(measure.dir_usage(d)[0] for d in wl.stored_dirs(last))
+    input_bytes = wl.input_bytes(last)
     metrics = {
         "setup_s": (setup_s, "s"),
         "wall_s": (statistics.median(p["wall_s"] for p in passes), "s"),
@@ -197,11 +200,11 @@ def end_to_end(wl, phase, setup_s) -> tuple[dict, dict]:
         "cpu_s": (phase["cpu_s"] / len(passes), "s"),
         "live_heap_mb": (phase["live_heap_mb"], "MB"),
         "ok_frac": (sum(o["ok"] for o in ops) / len(ops), "frac"),
-        "disk_bytes_per_input_byte": (1 + stored / wl.input_bytes, "ratio"),
+        "disk_bytes_per_input_byte": (1 + stored / input_bytes, "ratio"),
     }
     info = {"op_tail_pct": tail_pct, "op_samples": len(lat), "passes": len(passes),
             "peak_rss_mb": phase["peak_kb"] / 1024,
-            "stored_bytes": stored, "input_bytes": wl.input_bytes}
+            "stored_bytes": stored, "input_bytes": input_bytes}
     return metrics, info
 
 
@@ -225,7 +228,7 @@ def main() -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         why = {w["name"]: w["why"] for w in json.load(f)["workloads"]}[args.workload]
     traced = bool(args.trace)
-    tracer = measure.Tracer(enabled=False)  # Layers.install() turns it on
+    tracer = measure.Tracer(enabled=False)  # on for the traced passes only
     wl = WORKLOADS[args.workload](args.seed, work, tracer)
     wl.stage()
 
@@ -247,23 +250,22 @@ def main() -> int:
     try:
         if traced:
             layers = Layers(spark, tracer)
-            ref_wall = reference_wall(args.workload, args.seed)
-            if ref_wall is None:
-                # no untraced run of this workload in this checkout yet:
-                # time an untraced pass here first
-                ref_wall = run_pass(wl, spark, tracer, os.path.join(work, "ref"), False)["wall_s"]
             layers.install()
         phase = timed_phase(wl, spark, tracer, work, args.seconds, tree, traced)
         e2e, info = end_to_end(wl, phase, setup_s)
         if traced:
-            metrics = layers.collect(phase, wl, CORES)
+            on = [p for p in phase["passes"] if p["traced"]]
+            off = [p for p in phase["passes"] if not p["traced"]]
+            overhead = (statistics.median(p["wall_s"] for p in on)
+                        / statistics.median(p["wall_s"] for p in off) - 1)
+            metrics = layers.collect(on, wl, CORES)
             metrics.update({
                 "peak_rss_mb": (info["peak_rss_mb"], "MB"),
                 "session.start_s": (session_start_s, "s"),
                 "session.warmup_s": (warmup_s, "s"),
                 "host.calibration_s": (host["calibration_s"], "s"),
                 "host.cpu_pressure": (host["cpu_pressure"], "frac"),
-                "trace.overhead_frac": (e2e["wall_s"][0] / ref_wall - 1, "frac"),
+                "trace.overhead_frac": (overhead, "frac"),
             })
         else:
             metrics = e2e
@@ -279,14 +281,14 @@ def main() -> int:
         "note": f"session.DEFAULT_CONF sets spark.driver.memory={DEFAULT_CONF['spark.driver.memory']}"
                 f" on a host with {os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') / 2**30:.1f} GiB RAM",
         "host": host, "setup_s": setup_s, "session_start_s": session_start_s,
-        "warmup_s": warmup_s, **info, "problems": problems,
+        "warmup_s": warmup_s, **wl.warmup_info(), **info, "problems": problems,
         "e2e": {k: v[0] for k, v in e2e.items()},
         "ops": [{k: o[k] for k in ("name", "latency_s", "ok")} | (
             {"jobs": o["jobs"]} if "jobs" in o else {}) for o in ops],
     }
     if traced:
         record["layers"] = {k: v[0] for k, v in metrics.items()}
-        record["self_time_check"] = layers.self_time_check()
+        record["span_check"] = layers.span_check([o for p in on for o in p["ops"]])
         write_spans(tracer, args.workload, args.seed)
     os.makedirs(OUT, exist_ok=True)
     with open(os.path.join(OUT, "results.jsonl"), "a") as f:

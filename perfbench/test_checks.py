@@ -15,7 +15,13 @@ import pytest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [os.path.dirname(HERE), HERE]
 
-from checks import check_curation, check_queries, compare_frames, oracle_con  # noqa: E402
+from checks import (  # noqa: E402
+    check_curation,
+    check_ingest,
+    check_queries,
+    compare_frames,
+    oracle_con,
+)
 from workloads import QUERY_MIX, SF_DIR  # noqa: E402
 
 from classification_pyspark_spark.catalog import TABLES  # noqa: E402
@@ -82,3 +88,35 @@ def test_correct_curation_passes(tmp_path):
 def test_corrupted_curation_fails(tmp_path, curated, n_docs):
     assert check_curation(*_curation_dirs(tmp_path, curated, n_docs), 4, [1, 2])
 
+
+
+def _ingest_dirs(tmp_path, landed, accepted):
+    """``landed``/``accepted``: (doc_id, text) rows; the sink is written
+    as two epoch partitions, as the ingest writes it."""
+    landing, sink = tmp_path / "landing", tmp_path / "sink"
+    landing.mkdir()
+    for i, part in enumerate((accepted[:1], accepted[1:])):
+        (sink / f"epoch={i}").mkdir(parents=True)
+        pq.write_table(pa.table({"doc_id": [r[0] for r in part], "text": [r[1] for r in part]},
+                                schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())])),
+                       sink / f"epoch={i}" / "part-0.parquet")
+    pq.write_table(pa.table({"doc_id": [r[0] for r in landed], "text": [r[1] for r in landed]}),
+                   landing / "round0-00.parquet")
+    return str(landing), str(sink)
+
+
+LANDED = [(1, "a"), (2, "b"), (3, "a"), (4, "c")]
+
+
+def test_correct_ingest_passes(tmp_path):
+    assert check_ingest(*_ingest_dirs(tmp_path, LANDED, [(1, "a"), (2, "b"), (4, "c")])) == []
+
+
+@pytest.mark.parametrize(
+    "accepted",
+    [[(1, "a"), (2, "b")], [(1, "a"), (2, "b"), (3, "a"), (4, "c")],
+     [(1, "a"), (2, "b"), (2, "c")], [(1, "a"), (2, "b"), (4, "d")]],
+    ids=["text_missing", "duplicate_text", "doc_id_twice", "text_never_landed"],
+)
+def test_corrupted_ingest_fails(tmp_path, accepted):
+    assert check_ingest(*_ingest_dirs(tmp_path, LANDED, accepted))
