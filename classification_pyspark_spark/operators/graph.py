@@ -1,35 +1,87 @@
-"""Distributed connected components — the pairs-to-clusters step of
-every dedup pipeline (north-star extension; no reference counterpart:
+"""Connected components — the pairs-to-clusters step of every dedup
+pipeline (north-star extension; no reference counterpart:
 `abhirup77/classification-pyspark` has no graph ops).
 
 Near-dup detection (minhash / simhash / jaccard / cosine) emits PAIRS;
 deduplication needs CLUSTERS (one canonical doc per transitive group).
 That closure is a connected-components computation on the similarity
-graph.
+graph; every vertex is labeled with the minimum vertex id of its
+component.
 
-Implementation: iterative min-label propagation on DataFrames —
-every vertex starts labeled with its own id; each round takes the min
-of its neighbors' labels; converges when no label changes, at which
-point every vertex carries the minimum vertex id of its component.
-Plain propagation needs rounds = eccentricity of the component min
-(shallow for near-clique dedup groups, but LSH band buckets CHAIN:
-the sf0.1 curation graph measured diameter 9). From round 3 on, each
-round therefore also contracts labels through themselves (pointer
-jumping, ``component <- label(component)``, Kiveris et al.'s
-shortcutting) so label distance closes exponentially instead of
-one hop per round — measured 9 -> 6 rounds and ~4.3s -> ~2.8s on the
-sf0.1 curation graph while near-clique graphs (converged before
-round 3) never pay the extra join. Each round is one edge-frame join
-+ one union-agg (labels are vertex-sized, the join is edge-frame-
-sized — neither is guaranteed broadcast-eligible at cluster scale);
-lineage is truncated with ``localCheckpoint`` each round so actions
-don't re-execute prior rounds.
+``connected_components`` picks one of two paths from the size of the
+symmetrized edge frame, the way SystemML (VLDB 2016) picks single-node
+or distributed execution from a size estimate:
+
+- **Local** (at most ``LOCAL_MAX_EDGES`` directed edges): one bounded
+  ``limit(LOCAL_MAX_EDGES + 1).toArrow()`` brings the edges to the
+  driver, a vectorised numpy union-find labels them, and the labels
+  come back as a ``createDataFrame`` local relation. Dedup graphs are
+  this size: the sf0.1 curation graph has ~1,100 edges, on which the
+  distributed rounds ran ~70 Spark jobs.
+- **Distributed** (above it): iterative min-label propagation on
+  DataFrames. Every vertex starts labeled with its own id; each round
+  takes the min of its neighbors' labels; it converges when no label
+  changes. Plain propagation needs rounds = eccentricity of the
+  component min (LSH band buckets CHAIN: the sf0.1 curation graph
+  measured diameter 9), so from round 3 on each round also contracts
+  labels through themselves (pointer jumping, ``component <-
+  label(component)``, Kiveris et al.'s shortcutting): 9 -> 6 rounds on
+  that graph. Each round is one edge-frame join + one union-agg, and
+  lineage is truncated with ``localCheckpoint`` each round so actions
+  don't re-execute prior rounds.
+
+Both paths return the same ``(vertex, component)`` set; tests force a
+path by monkeypatching ``LOCAL_MAX_EDGES``.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Directed rows of the symmetrized edge frame (each undirected edge
+# counts twice) at or under which CC runs on the driver. Measured on
+# local[4], CC plus one aggregate over its output: a 1M-edge chain
+# (2M directed rows, minimum at the far end) took 2.9-3.6s on the
+# local path against 48-52s distributed; the sf0.1 curation graph
+# (1,148 edges) 0.20s against 2.6-2.8s. The bound also caps what the
+# driver holds: 2M rows of two longs is ~32 MB of Arrow.
+LOCAL_MAX_EDGES = 2_000_000
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``. ``DataFrame.unpersist``
+    does not: the checkpoint persists the RDD under the frame's
+    ``LogicalRDD`` leaf, not a cached plan. A reliable checkpoint
+    persists nothing, so this is a no-op for it."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _local_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find over the symmetric edge list ``a -> b``. Returns
+    ``(vertices, labels)`` as indices into the sorted distinct ids, so
+    the smallest index of a component is its minimum id.
+
+    Every round hooks each root onto the smallest root across its
+    edges (``np.minimum.at``; parents only ever point to smaller
+    indices, so the forest stays acyclic), then jumps pointers until
+    every vertex points at its root. A tree with an edge to another
+    tree merges every round, so rounds are O(log V)."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a) :]
+    parent = np.arange(len(ids))
+    while True:
+        ru, rv = parent[u], parent[v]
+        if np.array_equal(ru, rv):
+            return ids, parent
+        np.minimum.at(parent, ru, rv)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
 
 
 def connected_components(
@@ -41,22 +93,38 @@ def connected_components(
     shortcut_from: int = 3,
 ) -> DataFrame:
     """Label every vertex of the undirected edge list with the minimum
-    vertex id reachable from it. Returns ``(vertex, component)``.
+    vertex id reachable from it. Returns ``(vertex, component)`` with
+    the input id type.
 
-    Every round materializes the vertex-sized label frame with an
-    eager ``localCheckpoint``: iterative DataFrame loops otherwise
-    re-execute the entire accumulated lineage at EVERY action (the
-    convergence probe and the next round both re-derived rounds
-    1..i-1 — measured 74s for a job that runs in ~8s with per-round
-    truncation at sf0.1). The checkpoint is cheap because labels are
-    one row per vertex, far smaller than the edge frame.
+    The edge list is symmetrized in ONE pass over the caller's pair
+    pipeline (explode of both orientations; a two-branch union would
+    re-run the pipeline per branch) and truncated, so the caller's
+    pipeline runs once whichever path follows. One bounded
+    ``limit(LOCAL_MAX_EDGES + 1).toArrow()`` then decides the path:
 
-    Round shape (r09 rewrite — same labels, fewer/cheaper jobs):
+    - **Local** (at most ``LOCAL_MAX_EDGES`` rows, no null ids):
+      ``_local_labels`` on the collected columns; the labels return
+      as a local relation, so no further Spark job runs, and the
+      edge checkpoint is released at once. ``max_iterations`` and
+      ``shortcut_from`` do not apply (the union-find always reaches
+      its fixpoint).
+    - **Distributed**: rounds of label propagation, below.
 
-    - The edge list is symmetrized in ONE pass over the caller's pair
-      pipeline (explode of both orientations; the old two-branch union
-      either re-ran the pipeline per branch or needed an extra
-      materialization barrier to avoid it).
+    The threshold was set by timing both paths on the sf0.1 curation
+    graph and on a synthetic 1M-edge chain (2M directed rows) on
+    ``local[4]``; the local path won on both by 13-15x (timings at
+    ``LOCAL_MAX_EDGES``). Above it the driver would hold the whole
+    edge list.
+
+    Distributed rounds: every round materializes the vertex-sized
+    label frame with an eager ``localCheckpoint``: iterative DataFrame
+    loops otherwise re-execute the entire accumulated lineage at EVERY
+    action (measured 74s for a job that runs in ~8s with per-round
+    truncation at sf0.1). Each superseded round's checkpoint is
+    released once the next one has materialized; the edge checkpoint
+    when the loop ends. The final labels' checkpoint stays: the
+    returned frame reads it.
+
     - Each round is a single union-aggregate: ``min(component)`` over
       {own label} ∪ {in-neighbor labels}, with the old label carried
       as ``min(component) over own rows`` — no second vertex-keyed
@@ -64,8 +132,7 @@ def connected_components(
       ``new < old`` on the already-materialized frame.
     - From round ``shortcut_from`` on, labels are additionally
       contracted through themselves (``component <- label(component)``
-      — pointer jumping), so chain-shaped graphs (LSH band buckets
-      chain; the sf0.1 curation graph measured diameter 9) converge in
+      — pointer jumping), so chain-shaped graphs converge in
       O(log D) rounds instead of D. Graphs that converge earlier never
       pay the extra join; measured 9 -> 6 rounds, ~4.3s -> ~2.8s on
       the curation graph, identical labels.
@@ -111,11 +178,26 @@ def connected_components(
         .distinct()
     )
 
+    small = sym.limit(LOCAL_MAX_EDGES + 1).toArrow()
+    if small.num_rows <= LOCAL_MAX_EDGES and small["a"].null_count == 0:
+        _release(sym)
+        a = small["a"]
+        ids, labels = _local_labels(a.to_numpy(), small["b"].to_numpy())
+        vertex = pa.array(ids, type=a.type)
+        schema = sym.select(
+            F.col("a").alias("vertex"), F.col("a").alias("component")
+        ).schema
+        return sym.sparkSession.createDataFrame(
+            pa.table([vertex, vertex.take(labels)], names=["vertex", "component"]),
+            schema,
+        )
+
     labels = _truncate(
         sym.select(F.col("a").alias("vertex"))
         .distinct()
         .select("vertex", F.col("vertex").alias("component"))
     )
+    checkpoint = labels
     for i in range(max_iterations):
         # one union-aggregate replaces join-then-left-join: the new
         # label is min over {own} ∪ {neighbors}, and the OLD label
@@ -141,8 +223,11 @@ def connected_components(
             # canonicalization-sensitive and does not reliably fire
             # for the aliased lookup projection), doubling the
             # round's edge-frame work. The persist is lazy — zero
-            # extra jobs — and the broadcast build of the lookup side
-            # populates the cache before the probe side reads it.
+            # extra jobs — and best-effort: when the lookup
+            # side is broadcast, its build fills the cache before the
+            # probe side reads it; under a sort-merge join both scans
+            # run in one job and may each compute a partition the
+            # other has not cached yet (extra work, same labels).
             round_persist = upd = upd.persist()
             lk = upd.select(
                 F.col("vertex").alias("__cv"), F.col("component").alias("__cc")
@@ -161,14 +246,17 @@ def connected_components(
                 (F.col("component") < F.col("__old")).alias("__changed"),
             )
         )
+        # the new round is materialized: the superseded labels and the
+        # cached round aggregate are dead weight from here on
+        _release(checkpoint)
+        checkpoint = new_labels
         if round_persist is not None:
-            # the checkpoint above materialized the round; the cached
-            # aggregate is dead weight from here on
             round_persist.unpersist()
         changed = new_labels.filter("__changed").limit(1).count()
         labels = new_labels.drop("__changed")
         if changed == 0:
             break
+    _release(sym)
     return labels
 
 

@@ -25,3 +25,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def cc_paths(monkeypatch):
+    """``for path in cc_paths():`` runs the loop body once per
+    connected-components path, forced through ``LOCAL_MAX_EDGES``
+    (-1: no edge frame is small enough for the driver)."""
+    from classification_pyspark_spark.operators import graph
+
+    local = graph.LOCAL_MAX_EDGES
+
+    def paths():
+        for path, bound in (("local", local), ("distributed", -1)):
+            monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", bound)
+            yield path
+
+    return paths

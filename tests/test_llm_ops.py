@@ -345,7 +345,7 @@ def test_hot_bucket_guards_default_on(spark):
     assert ngram_jaccard_pairs(boiler, "text", "doc_id", "lang").count() == 0
 
 
-def test_minhash_star_edges_connectivity_equivalent(spark):
+def test_minhash_star_edges_connectivity_equivalent(spark, cc_paths):
     """Star edges (bucket-min form) must yield byte-identical connected
     components to the pair form — the contract that lets CC-only
     consumers (curation near-dup collapse, production dedup) swap in
@@ -368,40 +368,41 @@ def test_minhash_star_edges_connectivity_equivalent(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     pairs = minhash_candidate_pairs(df, "text", "doc_id", max_bucket_size=None)
     stars = minhash_star_edges(df, "text", "doc_id", max_bucket_size=None)
-    cc_pairs = {
-        r.vertex: r.component
-        for r in connected_components(
-            pairs.select("id_a", "id_b"), "id_a", "id_b"
-        ).collect()
-    }
-    cc_stars = {
-        r.vertex: r.component
-        for r in connected_components(stars, "id_a", "id_b").collect()
-    }
-    assert cc_pairs and cc_stars == cc_pairs
     # 8-member bucket: pair form emits k(k-1)/2 = 28 pairs, star form
     # k-1 = 7 edges per band (un-deduped across bands) — strictly fewer
     assert stars.count() < pairs.count()
-    # the hot-bucket guard applies identically (8 > cap 4 -> that
-    # bucket contributes no edges in either form): components still match
-    capped_pairs = {
-        r.vertex: r.component
-        for r in connected_components(
-            minhash_candidate_pairs(df, "text", "doc_id", max_bucket_size=4)
-            .select("id_a", "id_b"),
-            "id_a",
-            "id_b",
-        ).collect()
-    }
-    capped_stars = {
-        r.vertex: r.component
-        for r in connected_components(
-            minhash_star_edges(df, "text", "doc_id", max_bucket_size=4),
-            "id_a",
-            "id_b",
-        ).collect()
-    }
-    assert capped_stars == capped_pairs
+    for path in cc_paths():
+        cc_pairs = {
+            r.vertex: r.component
+            for r in connected_components(
+                pairs.select("id_a", "id_b"), "id_a", "id_b"
+            ).collect()
+        }
+        cc_stars = {
+            r.vertex: r.component
+            for r in connected_components(stars, "id_a", "id_b").collect()
+        }
+        assert cc_pairs and cc_stars == cc_pairs, path
+        # the hot-bucket guard applies identically (8 > cap 4 -> that
+        # bucket contributes no edges in either form): components still match
+        capped_pairs = {
+            r.vertex: r.component
+            for r in connected_components(
+                minhash_candidate_pairs(df, "text", "doc_id", max_bucket_size=4)
+                .select("id_a", "id_b"),
+                "id_a",
+                "id_b",
+            ).collect()
+        }
+        capped_stars = {
+            r.vertex: r.component
+            for r in connected_components(
+                minhash_star_edges(df, "text", "doc_id", max_bucket_size=4),
+                "id_a",
+                "id_b",
+            ).collect()
+        }
+        assert capped_stars == capped_pairs, path
 
 
 def test_resize_media_budget_and_determinism(spark):

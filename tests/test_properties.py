@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -561,3 +561,35 @@ def test_conformal_two_pass_equals_direct_selection(spark, tmp_path_factory, sco
         r = got[seg]
         assert (r["n"], r["k"]) == (n, k)
         assert _m.isclose(r["threshold"], round(want, 4), abs_tol=1e-9), (seg, vals)
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 12), st.integers(0, 12)), max_size=25
+    ),
+    id_type=st.sampled_from(["bigint", "string"]),
+)
+@example(edges=[], id_type="bigint")
+@example(edges=[], id_type="string")
+@example(edges=[(3, 3), (1, 2), (2, 1), (1, 2), (10, 3), (3, 2)], id_type="string")
+@settings(**SETTINGS)
+def test_connected_components_local_equals_distributed(spark, cc_paths, edges, id_type):
+    """The driver-side union-find and the distributed rounds label every
+    graph identically: self-loops, duplicate and reversed edges, the
+    empty graph, and string ids (whose minimum is lexicographic: "v10"
+    sorts before "v2")."""
+    from classification_pyspark_spark.operators.graph import connected_components
+
+    rows = [(f"v{a}", f"v{b}") for a, b in edges] if id_type == "string" else edges
+    df = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+    got = {}
+    for path in cc_paths():
+        out = connected_components(df)
+        assert out.schema.simpleString() == (
+            f"struct<vertex:{id_type},component:{id_type}>"
+        )
+        # the local path returns a local relation: no Spark job reads it
+        assert out.isLocal() == (path == "local")
+        got[path] = sorted(map(tuple, out.collect()))
+    assert got["local"] == got["distributed"]
+    assert {v for v, _ in got["local"]} == {v for e in rows for v in e}

@@ -70,7 +70,7 @@ def test_rolling_range_frame_known_answer(spark):
     assert got[(2, "2024-01-01")] == 5.0
 
 
-def test_connected_components_known_graph(spark):
+def test_connected_components_known_graph(spark, cc_paths):
     from classification_pyspark_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -78,15 +78,16 @@ def test_connected_components_known_graph(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20), (23, 20)],
         "src bigint, dst bigint",
     )
-    got = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert got == {
-        1: 1, 2: 1, 3: 1, 4: 1,
-        10: 10, 11: 10,
-        20: 20, 21: 20, 22: 20, 23: 20,
-    }
+    for path in cc_paths():
+        got = {r.vertex: r.component for r in connected_components(edges).collect()}
+        assert got == {
+            1: 1, 2: 1, 3: 1, 4: 1,
+            10: 10, 11: 10,
+            20: 20, 21: 20, 22: 20, 23: 20,
+        }, path
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, cc_paths):
     """checkpoint_dir= switches localCheckpoint -> reliable checkpoint
     (fault-tolerant storage; survives executor loss on a cluster):
     identical labels, and the checkpoint dir actually receives RDD
@@ -99,24 +100,25 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20), (23, 20)],
         "src bigint, dst bigint",
     )
-    ckpt = str(tmp_path / "cc_ckpt")
-    got = {
-        r.vertex: r.component
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    assert got == {
-        1: 1, 2: 1, 3: 1, 4: 1,
-        10: 10, 11: 10,
-        20: 20, 21: 20, 22: 20, 23: 20,
-    }
-    # reliable checkpoints were written under the requested dir
-    written = [
-        os.path.join(r, f) for r, _, fs in os.walk(ckpt) for f in fs
-    ]
-    assert written, "no reliable checkpoint data written"
+    for path in cc_paths():
+        ckpt = str(tmp_path / f"cc_ckpt_{path}")
+        got = {
+            r.vertex: r.component
+            for r in connected_components(edges, checkpoint_dir=ckpt).collect()
+        }
+        assert got == {
+            1: 1, 2: 1, 3: 1, 4: 1,
+            10: 10, 11: 10,
+            20: 20, 21: 20, 22: 20, 23: 20,
+        }, path
+        # reliable checkpoints were written under the requested dir
+        written = [
+            os.path.join(r, f) for r, _, fs in os.walk(ckpt) for f in fs
+        ]
+        assert written, f"no reliable checkpoint data written ({path})"
 
 
-def test_connected_components_long_chain_exercises_shortcut(spark):
+def test_connected_components_long_chain_exercises_shortcut(spark, cc_paths):
     """A path graph whose min sits at one END forces label distance =
     path length — the worst case for plain min-label propagation and
     exactly the topology the r09 pointer-jumping rewrite (shortcut
@@ -134,11 +136,12 @@ def test_connected_components_long_chain_exercises_shortcut(spark):
     chain = [(ids[i], ids[i + 1]) for i in range(n - 1)]
     extra = [(100, 200), (200, 300)]  # a second small component
     edges = spark.createDataFrame(chain + extra, "src bigint, dst bigint")
-    got = {
-        r.vertex: r.component
-        for r in connected_components(edges, max_iterations=50).collect()
-    }
-    assert got == {**{v: 1 for v in ids}, 100: 100, 200: 100, 300: 100}
+    for path in cc_paths():
+        got = {
+            r.vertex: r.component
+            for r in connected_components(edges, max_iterations=50).collect()
+        }
+        assert got == {**{v: 1 for v in ids}, 100: 100, 200: 100, 300: 100}, path
 
 
 def test_connected_components_shortcut_persists_round_aggregate(spark, monkeypatch):
@@ -147,8 +150,12 @@ def test_connected_components_shortcut_persists_round_aggregate(spark, monkeypat
     reuse for the aliased lookup side is canonicalization-sensitive,
     and without the persist the edge-frame join + union-aggregate
     evaluates twice per shortcut round. The pin: >= 1 persist happens
-    on a shortcut-forcing chain, and every persist is released."""
+    on a shortcut-forcing chain, and every persist is released. A
+    property of the distributed rounds, so that path is forced."""
+    from classification_pyspark_spark.operators import graph
     from classification_pyspark_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", -1)
 
     ids = list(range(12, 0, -1))  # descending chain: min at the far end
     chain = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]

@@ -12,6 +12,7 @@ components) EXECUTE those stages during the dump.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -21,25 +22,28 @@ sys.path.insert(0, ".")
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf = "/root/testdata/sf0.1"
-    for a in sys.argv[1:]:
-        if a.startswith("--sf="):
-            sf = a.split("=", 1)[1]
-    outdir, names = args[0], args[1:]
-    os.makedirs(outdir, exist_ok=True)
+    ap = argparse.ArgumentParser(description="Dump formatted plans of registered queries.")
+    ap.add_argument("outdir")
+    ap.add_argument("queries", nargs="+", metavar="query")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    args = ap.parse_args()
 
     from classification_pyspark_spark.operators.caching import release_tracked
     from classification_pyspark_spark.queries import QUERIES
     from classification_pyspark_spark.session import get_spark
 
+    unknown = [n for n in args.queries if n not in QUERIES]
+    if unknown:
+        ap.error(f"unknown query name(s): {', '.join(unknown)}")
+    os.makedirs(args.outdir, exist_ok=True)
+
     spark = get_spark("dump_plan")
-    for name in names:
-        df = QUERIES[name](spark, sf)
+    for name in args.queries:
+        df = QUERIES[name](spark, args.sf)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(outdir, f"{name}.txt")
+        path = os.path.join(args.outdir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(txt)
         counts = {
