@@ -171,6 +171,8 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     """
     from pyspark.sql import Window
 
+    from .curation import source_funnel
+    from .operators.caching import track
     from .operators.dedup_fuzzy import minhash_star_edges
     from .operators.text import langid_expr, quality_score_expr
 
@@ -187,7 +189,9 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         quality_score_expr("text").alias("__q"),
         F.md5("text").alias("__digest"),
     )
-    kept = flagged.filter((F.col("__lg") == F.col("lang")) & (F.col("__q") >= min_quality))
+    lang_ok = F.col("__lg") == F.col("lang")
+    passed_lq = lang_ok & (F.col("__q") >= min_quality)
+    kept = flagged.filter(passed_lq)
     scores = None
     if max_ppl is not None:
         # LM-perplexity gate (CCNet-style): score against the corpus
@@ -200,10 +204,10 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         # the written files.
         from .operators.text import bigram_lm_perplexity
 
-        scores = (
-            bigram_lm_perplexity(d, "text", "doc_id", keep_threshold=float(max_ppl))
-            .select("doc_id", "keep")
-            .persist()
+        scores = track(
+            bigram_lm_perplexity(d, "text", "doc_id", keep_threshold=float(max_ppl)).select(
+                "doc_id", "keep"
+            )
         )
         kept = kept.join(scores.filter(F.col("keep") == 1).select("doc_id"), "doc_id")
     # exact dedup first (digest window, keep lowest doc_id) ...
@@ -212,7 +216,7 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     # ranking, AND the final anti-join — without it the corpus-wide
     # langid+quality+digest pipeline re-executes per consumer (the
     # same re-execution hazard the `scores` persist above avoids)
-    exact = kept.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn").persist()
+    exact = track(kept.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn"))
     # ... then near-dup removal: guarded banded pairs -> connected
     # components -> keep the HIGHEST-QUALITY member of each near-dup
     # cluster (tie: lowest doc_id). Transitively complete — a chain
@@ -236,16 +240,14 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         .filter(F.col("__kr") > 1)
         .select("doc_id")
     )
+    surv = exact.join(losers, "doc_id", "left_anti")
     cut_spans = bool(params.get("cut_spans", False))
-    surv = None
     if cut_spans:
         from .operators.dedup_fuzzy import duplicated_span_extents, span_cut_rewrite
 
         # persist: the survivor frame feeds span detection (two
-        # consumers inside the operator), the rewrite base, and the
-        # final column join — unpersisted, the full curation pipeline
-        # would re-execute per consumer
-        surv = exact.join(losers, "doc_id", "left_anti").persist()
+        # consumers inside the operator) and the rewrite base
+        surv = track(surv)
         spans = duplicated_span_extents(
             surv,
             "text",
@@ -254,107 +256,65 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
             min_span=int(params.get("min_span", 50)),
             ordered=False,  # cut list feeds the rewrite, not a report
         )
-        rew = span_cut_rewrite(surv, spans, "text", "doc_id")
-        curated = (
-            surv.join(rew, "doc_id")
-            .filter(F.col("n_kept") > 0)  # docs cut to nothing are dropped
-            .select(
-                "doc_id",
-                # untouched docs keep their ORIGINAL text (ADVICE r8: a
-                # corpus-wide lossy normalization behind one knob was a
-                # surprising default); only actually-cut docs carry the
-                # canonical-punct rewrite
-                F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
-                .otherwise(F.col("kept_text"))
-                .alias("text"),
-                "source",
-                "lang",
-                F.col("__q").alias("quality"),
-                (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
-            )
+        # persist: the rewrite feeds the curated sink AND the report's
+        # cut totals — the span lineage runs once
+        cut = track(surv.join(span_cut_rewrite(surv, spans, "text", "doc_id"), "doc_id"))
+        curated = cut.filter(F.col("n_kept") > 0).select(  # docs cut to nothing are dropped
+            "doc_id",
+            # untouched docs keep their ORIGINAL text (ADVICE r8: a
+            # corpus-wide lossy normalization behind one knob was a
+            # surprising default); only actually-cut docs carry the
+            # canonical-punct rewrite
+            F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
+            .otherwise(F.col("kept_text"))
+            .alias("text"),
+            "source",
+            "lang",
+            F.col("__q").alias("quality"),
+            (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
         )
     else:
-        curated = exact.join(losers, "doc_id", "left_anti").select(
-            "doc_id", "text", "source", "lang", F.col("__q").alias("quality")
-        )
+        curated = surv.select("doc_id", "text", "source", "lang", F.col("__q").alias("quality"))
     curated.write.mode("overwrite").parquet(out)
     # count from the written files (footer metadata), NOT from
     # `curated` — that lineage would re-run the whole scoring +
     # minhash pair join a second time just for the status message
     n = spark.read.parquet(out).count()
     if report_out:
-        if max_ppl is not None:
+        rep_src, ppl_drop = flagged, F.lit(0)
+        if scores is not None:
             # attribute perplexity-gate drops too: docs that passed the
             # lang + quality filters but scored keep=0
             rep_src = flagged.join(
                 scores.select("doc_id", F.col("keep").alias("__ppl_keep")), "doc_id", "left"
             )
-        else:
-            rep_src = flagged.withColumn("__ppl_keep", F.lit(1))
-        passed_lq = (F.col("__lg") == F.col("lang")) & (F.col("__q") >= min_quality)
-        report = (
-            rep_src.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(F.when(F.col("__lg") != F.col("lang"), 1).otherwise(0))
-                .cast("long")
-                .alias("n_dropped_lang"),
-                F.sum(
-                    F.when(
-                        (F.col("__lg") == F.col("lang")) & (F.col("__q") < min_quality), 1
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_dropped_quality"),
-                F.sum(F.when(passed_lq & (F.coalesce("__ppl_keep", F.lit(0)) == 0), 1).otherwise(0))
-                .cast("long")
-                .alias("n_dropped_ppl"),
+            ppl_drop = F.when(passed_lq & (F.coalesce("__ppl_keep", F.lit(0)) == 0), 1)
+        parts = [
+            (
+                rep_src,
+                {
+                    "n_docs": F.lit(1),
+                    "n_dropped_lang": F.when(~lang_ok, 1),
+                    "n_dropped_quality": F.when(lang_ok & (F.col("__q") < min_quality), 1),
+                    "n_dropped_ppl": ppl_drop,
+                },
             )
-        )
+        ]
         if cut_spans:
-            from .operators.text import punct_tokens_expr
-
-            # per-source cut totals of WRITTEN survivors from the sink
-            # files (cheap re-read, same reason as the count above) ...
-            written = spark.read.parquet(out).select("doc_id", "source", "tokens_cut")
-            kept_cuts = written.groupBy("source").agg(
-                F.sum("tokens_cut").cast("long").alias("__cut_kept")
-            )
-            # ... plus the zero-kept docs (ADVICE r8: dropped-to-nothing
-            # docs appeared in no n_dropped_* column and their tokens
-            # were missing from tokens_cut, so the funnel didn't tie
-            # out). They are exactly the survivors absent from the sink;
-            # their cut size is their FULL token count — an anti-join on
-            # the persisted survivor frame, never a span-detection rerun.
-            zero_kept = (
-                surv.join(written.select("doc_id"), "doc_id", "left_anti")
-                .groupBy("source")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_dropped_cut"),
-                    F.sum(F.size(punct_tokens_expr(F.col("text"))))
-                    .cast("long")
-                    .alias("__cut_dropped"),
+            # every survivor's cut: tokens_cut counts ALL cut tokens
+            # (a zero-kept doc's whole token count included, ADVICE r8)
+            # and n_dropped_cut the docs the cut left empty, so the
+            # funnel ties out against the sink
+            parts.append(
+                (
+                    cut,
+                    {
+                        "n_dropped_cut": F.when(F.col("n_kept") == 0, 1),
+                        "tokens_cut": F.col("n_tokens") - F.col("n_kept"),
+                    },
                 )
             )
-            report = (
-                report.join(kept_cuts, "source", "left")
-                .join(zero_kept, "source", "left")
-                .withColumn("n_dropped_cut", F.coalesce("n_dropped_cut", F.lit(0).cast("long")))
-                .withColumn(
-                    "tokens_cut",
-                    (
-                        F.coalesce("__cut_kept", F.lit(0).cast("long"))
-                        + F.coalesce("__cut_dropped", F.lit(0).cast("long"))
-                    ).cast("long"),
-                )
-                .drop("__cut_kept", "__cut_dropped")
-            )
-        report.write.mode("overwrite").parquet(report_out)
-    exact.unpersist()
-    if surv is not None:
-        surv.unpersist()
-    if scores is not None:
-        scores.unpersist()
+        source_funnel(parts).write.mode("overwrite").parquet(report_out)
     return TaskStatus(True, f"{n} curated docs")
 
 

@@ -835,15 +835,14 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
+    from .curation import inject
     from .operators.text import langid_expr, quality_score_expr
 
     d = spread_for_compute(
         load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
-    injected = d.filter(F.col("doc_id") % 40 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    corpus = d.unionByName(injected)
+    text = F.col("text")
+    corpus = inject(d, [(F.lit(True), 0, text), (F.col("doc_id") % 40 == 0, 1000000, text)])
     flags = corpus.select(
         "doc_id",
         "source",

@@ -836,128 +836,32 @@ def corpus_curation_full(
     (every 3rd test doc under +2e6 ids — the decontamination stage
     provably fires: their 5-gram overlap with the eval set is 1.0).
 
-    Scale shape (r10 form): the corpus is built in ONE pass (each doc
-    explodes into its 0-2 injected copies — one scan, no per-branch
-    re-evaluation); the corpus-heavy work is ONE flags projection
-    (fused token-stat folds, persisted — consumed by the funnel
-    aggregate and the survivor pipeline), the LM count tables
-    (vocabulary-bounded unigrams, AQE-skew-safe bigram counting), the
-    STAR-form minhash edges on exact survivors (bucket-min edges,
-    O(k) per band bucket — connectivity-identical to the pair join,
-    which this query never outputs), the gram-keyed decontamination
-    join (train grams never pair with docs, only with the DISTINCT
-    eval gram set), a range-partitioned global cumsum for packing,
-    and ONE tagged-union funnel aggregate (no per-stage join fan-in).
-    Every join key is bounded (band buckets / gram vocabulary /
-    dimension-sized source rollups); nothing is pairwise on the corpus.
+    Scale shape: injection through near-dup removal is the shared front
+    in ``curation.py``, and the funnel is its one ``source_funnel``
+    aggregate. The tail adds a gram-keyed decontamination join against
+    the DISTINCT eval gram set and a range-partitioned packing cumsum;
+    nothing is pairwise on the corpus.
     """
-    from pyspark.sql import Window
-
+    from .curation import dedup_front, inject, source_funnel
     from .operators.caching import track
-    from .operators.dedup_fuzzy import minhash_star_edges
-    from .operators.graph import connected_components
     from .operators.sampling import hash_split_expr
-    from .operators.text import (
-        alnum_token_stats_expr,
-        bigram_lm_perplexity,
-        langid_expr,
-        punct_ratio_expr,
-        punct_tokens_expr,
-        rolling_gram_hash_sql,
-        ws_tok_sql,
-        ws_token_stats_expr,
-    )
+    from .operators.text import punct_tokens_expr, rolling_gram_hash_sql, ws_tok_sql
     from .operators.windows import global_cumsum
 
     d = spread_for_compute(
         load_table(spark, sf_dir, "documents").select("doc_id", "text", "source", "lang")
     )
     s = d.select("*", hash_split_expr("doc_id").alias("__split"))
-    # one-pass injection (r10): each doc explodes into its 0-2 corpus
-    # copies (train row + every-40th train dup under +1e6 + every-3rd
-    # test clone under +2e6) instead of the old 3-branch union, which
-    # re-evaluated the scan+split PER BRANCH and multiplied the spread
-    # partitioning by the branch count (3x32 = 96 map tasks over 4,393
-    # docs at sf0.1; at 100 TB, 3 corpus scans instead of 1). Same
-    # multiset of (doc_id, text, source, lang) rows.
-    is_tr = F.col("__split") == "train"
-    copies = F.array(
-        F.when(is_tr, F.struct(F.col("doc_id"), F.col("text"))),
-        F.when(
-            is_tr & (F.col("doc_id") % 40 == 0),
-            F.struct((F.col("doc_id") + 1000000).alias("doc_id"), F.col("text")),
-        ),
-        F.when(
-            (~is_tr) & (F.col("doc_id") % 3 == 0),
-            F.struct((F.col("doc_id") + 2000000).alias("doc_id"), F.col("text")),
-        ),
-    )
-    corpus = track(
-        s.select(
-            "source",
-            "lang",
-            F.explode(F.filter(copies, lambda c: c.isNotNull())).alias("__c"),
-        ).select(
-            F.col("__c.doc_id").alias("doc_id"),
-            F.col("__c.text").alias("text"),
-            "source",
-            "lang",
-        )
-    )
-    ppl = bigram_lm_perplexity(corpus, "text", "doc_id", keep_threshold=31.0).select(
-        "doc_id", "keep"
-    )
-    base = corpus.select(
-        "doc_id",
-        "source",
-        "lang",
-        "text",
-        ws_token_stats_expr("text").alias("__ws"),
-        alnum_token_stats_expr("text").alias("__al"),
-        punct_ratio_expr("text").alias("__punct"),
-        langid_expr("text").alias("__lg"),
-        F.md5("text").alias("__digest"),
-    )
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    gopher_ok = (
-        F.col("__ws.n").between(50, 100000)
-        & mwl.between(3.0, 10.0)
-        & (F.col("__ws.stop") >= 2)
-        & (F.col("__punct") <= 0.1)
-    )
-    flags = track(
-        base.select(
-            "doc_id",
-            "source",
-            "text",
-            "__digest",
-            (F.col("__lg") == F.col("lang")).alias("lang_ok"),
-            gopher_ok.alias("gopher_ok"),
-        )
-        .join(ppl, "doc_id")
-        .withColumn("ppl_ok", F.col("keep") == 1)
-        .drop("keep")
-    )
-    lq = flags.filter("lang_ok AND gopher_ok AND ppl_ok").withColumn(
-        "rn", F.row_number().over(Window.partitionBy("__digest").orderBy("doc_id"))
-    )
-    exact = track(lq.filter("rn = 1").select("doc_id", "source", "text"))
-    # max_bucket_size=None is the oracle-parity form (exhaustive
-    # bucket membership); the sf1+ sweep runs the documented production
-    # configuration (hot-bucket guard ON) via scale_sweep's
-    # PRODUCTION_MODE, same posture as minhash_dup_pairs. r10: the CC
-    # edge list is the STAR form (bucket-min edges, O(k) per bucket,
-    # connectivity-identical) — the pair list was never an output here.
-    edges = minhash_star_edges(
-        exact, "text", "doc_id", max_bucket_size=max_bucket_size
-    )
-    cc = connected_components(edges, "id_a", "id_b")
-    losers = cc.filter(F.col("vertex") != F.col("component")).select(
-        F.col("vertex").alias("doc_id")
-    )
-    nd = track(exact.join(losers, "doc_id", "left_anti"))
+    is_tr, text = F.col("__split") == "train", F.col("text")
+    corpus = inject(
+        s,
+        [
+            (is_tr, 0, text),
+            (is_tr & (F.col("doc_id") % 40 == 0), 1000000, text),
+            (~is_tr & (F.col("doc_id") % 3 == 0), 2000000, text),
+        ],
+    ).drop("__split")
+    nd, parts = dedup_front(corpus, max_bucket_size)
     five = F.expr(rolling_gram_hash_sql(ws_tok_sql("text"), 5, pad_short=True))
     eval_grams = (
         s.filter(F.col("__split") == "test").select(F.explode(five).alias("tgram")).distinct()
@@ -982,68 +886,21 @@ def corpus_curation_full(
         "n_tokens",
         F.floor((F.col("cum_n_tokens") - 1) / 2048).cast("long").alias("pack_id"),
     )
-    # funnel tail (r10): ONE aggregate over a tagged union of the five
-    # stage frames replaces five per-source aggregates + four broadcast
-    # left joins — same values (every later stage's sources are a
-    # subset of flags', so the group-key set is unchanged, and sums
-    # over absent tags are NULL -> coalesce 0 exactly like the old
-    # left-join NULLs). One exchange on `source` instead of five.
-    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
-    nul = F.lit(None).cast("long")
-
-    def _stage(df_, st, v1=one, v2=zero, v3=zero, v4=zero, pk=nul):
-        return df_.select(
-            "source",
-            F.lit(st).alias("__st"),
-            v1.cast("long").alias("__v1"),
-            v2.cast("long").alias("__v2"),
-            v3.cast("long").alias("__v3"),
-            v4.cast("long").alias("__v4"),
-            pk.cast("long").alias("__pk"),
-        )
-
-    u = (
-        _stage(
-            flags,
-            0,
-            v2=F.when(~F.col("lang_ok"), 1).otherwise(0),
-            v3=F.when(F.col("lang_ok") & ~F.col("gopher_ok"), 1).otherwise(0),
-            v4=F.when(
-                F.col("lang_ok") & F.col("gopher_ok") & ~F.col("ppl_ok"), 1
-            ).otherwise(0),
-        )
-        .unionByName(_stage(lq.filter("rn > 1"), 1))
-        .unionByName(_stage(exact.join(losers, "doc_id"), 2))
-        .unionByName(_stage(nd.join(dropc, "doc_id"), 3))
-        .unionByName(_stage(kpack, 4, v2=F.col("n_tokens"), pk=F.col("pack_id")))
-    )
-    st = F.col("__st")
-
-    def _sum(stage, col, name):
-        return (
-            F.coalesce(F.sum(F.when(st == stage, F.col(col))), zero)
-            .cast("long")
-            .alias(name)
-        )
-
-    return (
-        u.groupBy("source")
-        .agg(
-            _sum(0, "__v1", "n_docs"),
-            _sum(0, "__v2", "n_dropped_lang"),
-            _sum(0, "__v3", "n_dropped_gopher"),
-            _sum(0, "__v4", "n_dropped_ppl"),
-            _sum(1, "__v1", "n_dropped_exact"),
-            _sum(2, "__v1", "n_dropped_neardup"),
-            _sum(3, "__v1", "n_dropped_contam"),
-            _sum(4, "__v1", "n_kept"),
-            _sum(4, "__v2", "kept_tokens"),
-            F.countDistinct(F.when(st == 4, F.col("__pk")))
-            .cast("long")
-            .alias("n_packs_spanned"),
-        )
-        .orderBy("source")
-    )
+    one = F.lit(1)
+    return source_funnel(
+        parts
+        + [
+            (nd.join(dropc, "doc_id"), {"n_dropped_contam": one}),
+            (
+                kpack,
+                {
+                    "n_kept": one,
+                    "kept_tokens": F.col("n_tokens"),
+                    "n_packs_spanned": F.col("pack_id"),
+                },
+            ),
+        ]
+    ).orderBy("source")
 
 
 _CURATION_SURGICAL_SQL = r"""
@@ -1256,37 +1113,20 @@ def corpus_curation_surgical(
     2 docs cut to zero), and the oracle replays whatever the data
     yields at every scale.
 
-    Scale shape: identical to ``corpus_curation_full`` through the
-    near-dup stage (one-pass injected corpus, one persisted flags
-    projection, vocabulary-bounded LM tables, star-form minhash edges
-    with the parametrized ``max_bucket_size`` production guard, one
-    tagged-union funnel aggregate). The surgical stage adds the two span plans the
-    wave-10/11 queries already audited (anchor-complement islands — no
-    gram self-join; broadcastable eval gram set semi-join) plus a
-    doc-partitioned interval-union window over the CUT LISTS (two rows
-    per span, nowhere near corpus-sized) and the same range-partitioned
-    packing cumsum. The DuckDB oracle replays all of it, including the
-    recursive-CTE connected components and the interval union.
+    Scale shape: the front and the funnel are the shared ones in
+    ``curation.py``. The surgical stage adds the two audited span plans
+    (anchor-complement islands, no gram self-join; a broadcastable eval
+    gram semi-join), a doc-partitioned interval-union window over the
+    cut lists, and the packing cumsum. The DuckDB oracle replays all of
+    it, including the recursive-CTE connected components.
     """
     from pyspark.sql import Window
 
+    from .curation import dedup_front, inject, source_funnel
     from .operators.caching import track
-    from .operators.dedup_fuzzy import (
-        duplicated_span_extents,
-        minhash_star_edges,
-    )
-    from .operators.graph import connected_components
+    from .operators.dedup_fuzzy import duplicated_span_extents
     from .operators.sampling import hash_split_expr
-    from .operators.text import (
-        alnum_token_stats_expr,
-        bigram_lm_perplexity,
-        langid_expr,
-        punct_ratio_expr,
-        punct_tok_sql,
-        punct_tokens_expr,
-        rolling_gram_hash_sql,
-        ws_token_stats_expr,
-    )
+    from .operators.text import punct_tok_sql, punct_tokens_expr, rolling_gram_hash_sql
     from .operators.windows import global_cumsum, merge_intervals
 
     d = spread_for_compute(
@@ -1294,94 +1134,21 @@ def corpus_curation_surgical(
     )
     s = d.select("*", hash_split_expr("doc_id").alias("__split"))
     test = s.filter(F.col("__split") == "test").drop("__split")
-    # one-pass injection (r10, same rewrite as corpus_curation_full):
-    # each doc explodes into its 0-2 corpus copies (train row +
-    # every-40th train dup +1e6 + every-6th test clone +2e6 + chimera
-    # +3e6) instead of the old 4-branch union — that union re-evaluated
-    # the scan+split per branch and multiplied the spread partitioning
-    # by the branch count (4x32 = 128 map tasks over 4,393 docs at
-    # sf0.1; at 100 TB, 4 corpus scans instead of 1). Same multiset.
-    is_tr = F.col("__split") == "train"
-    copies = F.array(
-        F.when(is_tr, F.struct(F.col("doc_id"), F.col("text"))),
-        F.when(
-            is_tr & (F.col("doc_id") % 40 == 0),
-            F.struct((F.col("doc_id") + 1000000).alias("doc_id"), F.col("text")),
-        ),
-        F.when(
-            (~is_tr) & (F.col("doc_id") % 6 == 0),
-            F.struct((F.col("doc_id") + 2000000).alias("doc_id"), F.col("text")),
-        ),
-        F.when(
-            (~is_tr) & (F.col("doc_id") % 6 == 3),
-            F.struct(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
-                F.expr("concat(text, ' ', substring(text, 1, 400))").alias("text"),
+    is_tr, text = F.col("__split") == "train", F.col("text")
+    corpus = inject(
+        s,
+        [
+            (is_tr, 0, text),
+            (is_tr & (F.col("doc_id") % 40 == 0), 1000000, text),
+            (~is_tr & (F.col("doc_id") % 6 == 0), 2000000, text),
+            (
+                ~is_tr & (F.col("doc_id") % 6 == 3),
+                3000000,
+                F.expr("concat(text, ' ', substring(text, 1, 400))"),
             ),
-        ),
-    )
-    corpus = track(
-        s.select(
-            "source",
-            "lang",
-            F.explode(F.filter(copies, lambda c: c.isNotNull())).alias("__c"),
-        ).select(
-            F.col("__c.doc_id").alias("doc_id"),
-            F.col("__c.text").alias("text"),
-            "source",
-            "lang",
-        )
-    )
-    ppl = bigram_lm_perplexity(corpus, "text", "doc_id", keep_threshold=31.0).select(
-        "doc_id", "keep"
-    )
-    base = corpus.select(
-        "doc_id",
-        "source",
-        "lang",
-        "text",
-        ws_token_stats_expr("text").alias("__ws"),
-        alnum_token_stats_expr("text").alias("__al"),
-        punct_ratio_expr("text").alias("__punct"),
-        langid_expr("text").alias("__lg"),
-        F.md5("text").alias("__digest"),
-    )
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    gopher_ok = (
-        F.col("__ws.n").between(50, 100000)
-        & mwl.between(3.0, 10.0)
-        & (F.col("__ws.stop") >= 2)
-        & (F.col("__punct") <= 0.1)
-    )
-    flags = track(
-        base.select(
-            "doc_id",
-            "source",
-            "text",
-            "__digest",
-            (F.col("__lg") == F.col("lang")).alias("lang_ok"),
-            gopher_ok.alias("gopher_ok"),
-        )
-        .join(ppl, "doc_id")
-        .withColumn("ppl_ok", F.col("keep") == 1)
-        .drop("keep")
-    )
-    lq = flags.filter("lang_ok AND gopher_ok AND ppl_ok").withColumn(
-        "rn", F.row_number().over(Window.partitionBy("__digest").orderBy("doc_id"))
-    )
-    exact = track(lq.filter("rn = 1").select("doc_id", "source", "text"))
-    # star-form CC edges (r10): connectivity-identical, O(k) per band
-    # bucket — the pair list is not an output of this query
-    edges = minhash_star_edges(
-        exact, "text", "doc_id", max_bucket_size=max_bucket_size
-    )
-    cc = connected_components(edges, "id_a", "id_b")
-    losers = cc.filter(F.col("vertex") != F.col("component")).select(
-        F.col("vertex").alias("doc_id")
-    )
-    nd = track(exact.join(losers, "doc_id", "left_anti"))
+        ],
+    ).drop("__split")
+    nd, parts = dedup_front(corpus, max_bucket_size)
     # --- surgical stage: two cut lists over the same punct tokenization ---
     dspan = track(
         duplicated_span_extents(
@@ -1459,80 +1226,28 @@ def corpus_curation_surgical(
     kpack = global_cumsum(kept, "doc_id", ["kt"]).select(
         "source", "kt", F.floor((F.col("cum_kt") - 1) / 2048).cast("long").alias("pack_id")
     )
-    # funnel tail (r10, same rewrite as corpus_curation_full): ONE
-    # aggregate over a tagged union of the five stage frames replaces
-    # five per-source aggregates + four broadcast left joins — same
-    # values (later stages' sources are subsets of flags', sums over
-    # absent tags are NULL -> coalesce 0 exactly like the old
-    # left-join NULLs). One exchange on `source` instead of five.
-    one = F.lit(1).cast("long")
-    nul = F.lit(None).cast("long")
-
-    def _stage(df_, st, v1=one, v2=zero, v3=zero, v4=zero, pk=nul):
-        return df_.select(
-            "source",
-            F.lit(st).alias("__st"),
-            v1.cast("long").alias("__v1"),
-            v2.cast("long").alias("__v2"),
-            v3.cast("long").alias("__v3"),
-            v4.cast("long").alias("__v4"),
-            pk.cast("long").alias("__pk"),
-        )
-
-    u = (
-        _stage(
-            flags,
-            0,
-            v2=F.when(~F.col("lang_ok"), 1).otherwise(0),
-            v3=F.when(F.col("lang_ok") & ~F.col("gopher_ok"), 1).otherwise(0),
-            v4=F.when(
-                F.col("lang_ok") & F.col("gopher_ok") & ~F.col("ppl_ok"), 1
-            ).otherwise(0),
-        )
-        .unionByName(_stage(lq.filter("rn > 1"), 1))
-        .unionByName(_stage(exact.join(losers, "doc_id"), 2))
-        .unionByName(
-            _stage(
+    return source_funnel(
+        parts
+        + [
+            (
                 perdoc,
-                3,
-                v1=F.col("cut_dup"),
-                v2=F.col("cut_contam"),
-                v3=F.col("cut"),
-                v4=F.when(F.col("n_tokens") - F.col("cut") <= 0, 1).otherwise(0),
-            )
-        )
-        .unionByName(_stage(kpack, 4, v2=F.col("kt"), pk=F.col("pack_id")))
-    )
-    st = F.col("__st")
-
-    def _sum(stage, col, name):
-        return (
-            F.coalesce(F.sum(F.when(st == stage, F.col(col))), zero)
-            .cast("long")
-            .alias(name)
-        )
-
-    return (
-        u.groupBy("source")
-        .agg(
-            _sum(0, "__v1", "n_docs"),
-            _sum(0, "__v2", "n_dropped_lang"),
-            _sum(0, "__v3", "n_dropped_gopher"),
-            _sum(0, "__v4", "n_dropped_ppl"),
-            _sum(1, "__v1", "n_dropped_exact"),
-            _sum(2, "__v1", "n_dropped_neardup"),
-            _sum(3, "__v1", "tokens_cut_dup"),
-            _sum(3, "__v2", "tokens_cut_contam"),
-            _sum(3, "__v3", "tokens_cut"),
-            _sum(3, "__v4", "n_dropped_cut"),
-            _sum(4, "__v1", "n_kept"),
-            _sum(4, "__v2", "kept_tokens"),
-            F.countDistinct(F.when(st == 4, F.col("__pk")))
-            .cast("long")
-            .alias("n_packs_spanned"),
-        )
-        .orderBy("source")
-    )
+                {
+                    "tokens_cut_dup": F.col("cut_dup"),
+                    "tokens_cut_contam": F.col("cut_contam"),
+                    "tokens_cut": F.col("cut"),
+                    "n_dropped_cut": F.when(F.col("n_tokens") - F.col("cut") <= 0, 1),
+                },
+            ),
+            (
+                kpack,
+                {
+                    "n_kept": F.lit(1),
+                    "kept_tokens": F.col("kt"),
+                    "n_packs_spanned": F.col("pack_id"),
+                },
+            ),
+        ]
+    ).orderBy("source")
 
 
 @query(

@@ -1,9 +1,20 @@
-"""Tests for the surgical curation funnel: the interval-union operator's
-known answers and the funnel's conservation/staging invariants."""
+"""Tests for the curation funnels: the interval-union operator's known
+answers, the surgical funnel's conservation/staging invariants, and the
+three registry funnels' DuckDB oracle parity at the sf0.01 gate scale."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
+
+
+@pytest.fixture
+def gate_sf(sf_dir):
+    """The sf0.01 star schema next to the smoke one: the correctness
+    gate's scale."""
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
 
 
 def test_merge_intervals_known_answers(spark):
@@ -78,20 +89,52 @@ def test_surgical_funnel_invariants(spark, sf_dir):
         assert r["kept_tokens"] >= 0 and r["n_packs_spanned"] <= max(r["n_kept"], 0) * 2
 
 
-def test_surgical_stages_fire_at_gate_scale(spark):
-    """At the driver's sf0.01 gate scale, the injections make every
-    surgical path non-trivial: some dup tokens cut, some contam tokens
-    cut, and at least one doc cut to zero (the full-eval-clone path)."""
+def _oracle_diff(name, sf, cols, rows):
+    """Differences between a query's rows and its DuckDB oracle at
+    ``sf``, by ``tools/check_oracle.frame_key`` (the registry's rule)."""
+    import duckdb
+
+    from classification_pyspark_spark.catalog import TABLES
+    from classification_pyspark_spark.queries import ORACLES
+    from tools.check_oracle import frame_key
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    res = con.execute(ORACLES[name])
+    wc, wk = frame_key([c[0] for c in res.description], res.fetchall())
+    gc, gk = frame_key(list(cols), [tuple(r) for r in rows])
+    if gc != wc:
+        return f"columns {gc}, oracle has {wc}"
+    if gk != wk:
+        diffs = [(a, b) for a, b in zip(gk, wk) if a != b][:3]
+        return f"{len(gk)} rows, oracle has {len(wk)}; first diffs {diffs}"
+    return None
+
+
+@pytest.mark.parametrize("name", ["corpus_curation", "corpus_curation_full"])
+def test_curation_matches_oracle_at_gate_scale(spark, gate_sf, name):
+    """The curation funnels equal their DuckDB oracles at the sf0.01
+    gate scale (``corpus_curation_surgical`` is checked by the
+    next test, from the same run that checks its stages)."""
     from classification_pyspark_spark.queries import QUERIES
 
-    tot = (
-        QUERIES["corpus_curation_surgical"](spark, "/root/testdata/sf0.01")
-        .agg(
-            F.sum("tokens_cut_dup").alias("d"),
-            F.sum("tokens_cut_contam").alias("c"),
-            F.sum("n_dropped_cut").alias("z"),
-            F.sum("n_kept").alias("k"),
-        )
-        .collect()[0]
-    )
-    assert tot["d"] > 0 and tot["c"] > 0 and tot["z"] > 0 and tot["k"] > 0
+    df = QUERIES[name](spark, gate_sf)
+    diff = _oracle_diff(name, gate_sf, df.columns, df.collect())
+    assert diff is None, diff
+
+
+def test_surgical_stages_fire_at_gate_scale(spark, gate_sf):
+    """At the driver's sf0.01 gate scale, the injections make every
+    surgical path non-trivial: some dup tokens cut, some contam tokens
+    cut, and at least one doc cut to zero (the full-eval-clone path).
+    The funnel also equals its DuckDB oracle there."""
+    from classification_pyspark_spark.queries import QUERIES
+
+    df = QUERIES["corpus_curation_surgical"](spark, gate_sf)
+    rows = df.collect()
+    diff = _oracle_diff("corpus_curation_surgical", gate_sf, df.columns, rows)
+    assert diff is None, diff
+    tot = {c: sum(r[c] for r in rows) for c in df.columns if c != "source"}
+    assert tot["tokens_cut_dup"] > 0 and tot["tokens_cut_contam"] > 0
+    assert tot["n_dropped_cut"] > 0 and tot["n_kept"] > 0

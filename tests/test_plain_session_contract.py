@@ -5,8 +5,11 @@ session.py's conf (timezone, legacy parquet flags, Arrow) passes
 tools/check_oracle.py locally and then dies in the driver. Round 1
 lost its whole bench run to exactly this class of bug.
 
-Runs at sf0.001 and only asserts execution (schema + >=0 rows); value
-parity is tools/check_oracle.py's job.
+The sweep goes through the entry point ``__spark_entry__.queries()``,
+runs each query fully and converts its rows to Python, so it is also
+the registry-wide smoke test. Runs at
+sf0.001 and only asserts execution (non-empty schema + rows collected);
+value parity is tools/check_oracle.py's job.
 """
 
 from __future__ import annotations
@@ -36,13 +39,20 @@ def plain_spark(spark):
 
 
 def test_every_registry_query_runs_on_plain_session(plain_spark: SparkSession):
-    from classification_pyspark_spark.queries import QUERIES
+    import __spark_entry__ as entrymod
+
+    from classification_pyspark_spark.operators.caching import release_tracked
 
     failures: dict[str, str] = {}
-    for name, fn in QUERIES.items():
+    for name, fn in entrymod.queries().items():
         try:
             df = fn(plain_spark, SF)
-            df.write.format("noop").mode("overwrite").save()
+            if not df.columns:
+                failures[name] = "no columns"
+                continue
+            df.collect()
         except Exception as e:  # noqa: BLE001 - collecting all failures
             failures[name] = str(e).splitlines()[0][:200]
+        finally:
+            release_tracked()
     assert not failures, f"{len(failures)} queries fail on a plain session: {failures}"

@@ -47,6 +47,12 @@ def main() -> int:
             "spark.eventLog.dir": f"file://{evdir}",
         },
     )
+    # getOrCreate hands back an already-running session unchanged, and
+    # event logging is fixed when the SparkContext starts
+    if spark.sparkContext.getConf().get("spark.eventLog.enabled", "false") != "true":
+        print("job_profile: the Spark session has no event log "
+              "(an earlier session without spark.eventLog.enabled was reused)", file=sys.stderr)
+        return 2
     fn = QUERIES[args.query]
     # warm-up: same plan shape at sf0.001 pays codegen/JIT. Job
     # descriptions are thread-local and inherited by EVERY job the rep
@@ -72,6 +78,9 @@ def main() -> int:
     time.sleep(1.0)
 
     logs = sorted(glob.glob(f"{evdir}/*"), key=os.path.getmtime)
+    if not logs:
+        print(f"job_profile: Spark wrote no event log to {evdir}", file=sys.stderr)
+        return 2
     latest = logs[-1]
     if os.path.isdir(latest):
         # Spark 4 event-log v2 layout: a directory of events_<n>_* files
