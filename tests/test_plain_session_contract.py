@@ -6,8 +6,7 @@ tools/check_oracle.py locally and then dies in the driver. Round 1
 lost its whole bench run to exactly this class of bug.
 
 The sweep goes through the entry point ``__spark_entry__.queries()``,
-runs each query fully and converts its rows to Python, so it is also
-the registry-wide smoke test. Runs at
+runs each query fully and converts its rows to Python. Runs at
 sf0.001 and only asserts execution (non-empty schema + rows collected);
 value parity is tools/check_oracle.py's job.
 """

@@ -17,3 +17,10 @@ def test_queries_registry_shape(spark):
     assert qs, "no queries registered"
     # every oracle key must have a query
     assert set(oracles) <= set(qs)
+
+
+def test_all_queries_run_at_smoke_sf(spark, sf_dir):
+    for name, fn in entrymod.queries().items():
+        df = fn(spark, sf_dir)
+        assert df.columns, name
+        df.limit(5).collect()
