@@ -1,13 +1,27 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Measurement harness: the headline-query bench and its single-query tools.
 
-Prints ONE JSON line:
+    python bench.py [run]          headline fleet at $SPARK_GRAFT_SF_DIR
+    python bench.py retime Q [Q ...] [--sf DIR] [--reps N] [--control NAME|none]
+    python bench.py profile Q [--sf DIR] [--reps N]
+    python bench.py plan OUTDIR Q [Q ...] [--sf DIR]
+    python bench.py calibrate
+
+``--sf`` defaults to $SPARK_GRAFT_SF_DIR, else the sf0.1 testdata. Every
+subcommand measures one way: ``warm_up`` runs each query once at the
+sibling sf0.001 directory of the target, ``timed_rep`` times one
+execution into a noop sink and reads the rep's jobs and stages from
+Spark's in-process status store, and ``calibration_reps`` times the
+code-independent host probe through ``timed_rep``. An unknown query
+name is a usage error (exit 2) before Spark starts.
+
+``run`` prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>,
+   "counters": {name: {jobs, stages, tasks, shuffle_bytes, spill_bytes}},
    "baseline_delta": {name: sec/baseline_sec, ...},
    "regressions": [names over the 2x gate]}
-
-Each query is executed to completion (results drained via a count-style
-action over all columns) but never collected to the driver.
+Each query's seconds are the min of 3 reps; its counters come from the
+fastest rep.
 
 Per-query baselines live in bench_baseline.json (recorded from the
 round-2 driver run at sf0.1); any headline query slower than 2x the
@@ -17,12 +31,33 @@ BASELINE.md "within 2x" bar as a gate, normalized so that uniform
 host-contention drift (which moves every query equally) never reads
 as a plan regression. "baseline_drift" records that median.
 Deltas are only reported when the run matches the baseline's sf.
+
+``retime`` is the single-query adjudication protocol: N timed reps
+(default 4) of each query and of a CONTROL query (default
+q1_pricing_summary) — if the control moved too, the host moved, not
+the code. One JSON line per query: reps, min, median and the fastest
+rep's counters.
+
+``profile`` prints one JSON line per job of the timed reps (seconds,
+stages, tasks, shuffle and spill bytes, callsite), a summary, and the
+costliest callsites. Job counts and the callsite mix do not depend on
+host load, unlike the seconds.
+
+``plan`` writes ``.explain("formatted")`` to ``OUTDIR/<query>.txt`` and
+prints operator mention counts per query. Queries with eager
+construction-time actions (connected components) EXECUTE those stages.
+
+``calibrate`` prints the calibration reps; under ~0.3 s means a quiet
+host (bench_baseline.json records 0.306).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
+import statistics
 import sys
 import time
 
@@ -31,6 +66,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from classification_pyspark_spark.operators.caching import release_tracked  # noqa: E402
 from classification_pyspark_spark.queries import QUERIES  # noqa: E402
 from classification_pyspark_spark.session import get_spark  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: spans scans, multi-way joins, aggregation, window dedup,
 # profiling, windows/sessionization, the heaviest TPC-H shapes (q2/q9/
@@ -136,61 +173,133 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = get_spark("bench")
-    names = [n for n in HEADLINE if n in QUERIES]
-    # Warm-up: run every headline plan shape once at the smallest SF
-    # (sf0.001) so the timed pass measures steady-state execution, not
-    # one-time JVM costs (whole-stage-codegen compilation, Arrow/pandas
-    # worker startup, broadcast thread pools). Generated code is keyed
-    # by plan shape, so the tiny-SF run compiles exactly the code the
-    # timed run reuses. Falls back to the target dir if sf0.001 is
-    # absent. Warm-up failures are ignored; the timed run reports them.
+def warm_up(spark, names, sf_dir: str) -> None:
+    """Run each query once at the sibling sf0.001 directory of
+    ``sf_dir`` (``sf_dir`` itself if there is none), so timed reps
+    measure steady-state execution, not one-time JVM costs (codegen,
+    Arrow worker startup, broadcast thread pools). Generated code is
+    keyed by plan shape, so the tiny-SF run compiles exactly the code
+    the timed run reuses. Failures are ignored; the timed reps report
+    them."""
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
     for name in names:
         try:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+            timed_rep(spark, QUERIES[name], warm_dir if os.path.isdir(warm_dir) else sf_dir, "WARM")
         except Exception:
             pass
 
+
+def timed_rep(spark, fn, sf_dir: str, tag: str = "TIMED"):
+    """One measured execution of ``fn(spark, sf_dir)``: release tracked
+    persists and the cache, so the rep pays its full cost from the
+    scans up; time a noop write, which drains every row and collects
+    nothing; then, outside the timed interval, read the rep's jobs and
+    stage attempts from the status store. Every job the rep triggers
+    carries ``tag`` as its description.
+
+    Returns ``(seconds, jobs, stages)``, jobs oldest first; ``stages``
+    holds only the attempts that ran (skipped stages carry no
+    description)."""
+    release_tracked()
+    spark.catalog.clearCache()
+    jobs = _store(spark).jobsList(None)  # newest first
+    first = 0 if jobs.isEmpty() else jobs.head().jobId() + 1
+    spark.sparkContext.setJobDescription(tag)
+    try:
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sec = time.perf_counter() - t0
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    return (sec, *_history(spark, first, tag))
+
+
+def _store(spark):
+    # the status store is fed asynchronously by the listener bus
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return jsc.statusStore()
+
+
+def _as_json(spark, seq) -> list[dict]:
+    # Jackson with the Scala module, as Spark's REST API serialises these
+    jvm = spark.sparkContext._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala, "MODULE$"))
+    return json.loads(mapper.writeValueAsString(seq))
+
+
+def _history(spark, first: int, tag: str) -> tuple[list[dict], list[dict]]:
+    """Jobs ``first``.. (all of them the rep's) and the stage attempts
+    they ran. Raises if the store no longer holds every one of those
+    jobs: counters of a partly evicted rep would silently read low."""
+    store = _store(spark)
+    jl = store.jobsList(None)
+    n = 0 if jl.isEmpty() else jl.head().jobId() - first + 1
+    jobs = _as_json(spark, jl.take(n))[::-1]
+    ids = [j["jobId"] for j in jobs if j.get("description") == tag]
+    if ids != list(range(first, first + n)):
+        raise RuntimeError(f"status store lacks jobs of rep {tag!r}: expected ids {first}.."
+                           f"{first + n - 1}, holds {ids} (evicted, or an untagged job)")
+    if not jobs:
+        return jobs, []
+    jvm = spark.sparkContext._jvm
+    no_quantiles = spark.sparkContext._gateway.new_array(jvm.double, 0)
+    sl = store.stageList(None, False, False, no_quantiles, jvm.java.util.ArrayList())
+    # newest first, one entry per attempt: take every entry back to the
+    # rep's oldest stage, doubling the window when retries pushed it past
+    lo = min(s for j in jobs for s in j["stageIds"])
+    k = sl.head().stageId() - lo + 2
+    while len(stages := _as_json(spark, sl.take(k))) == k and stages[-1]["stageId"] >= lo:
+        k *= 2
+    return jobs, [s for s in stages if s["stageId"] >= lo and s.get("description") == tag]
+
+
+def counters(jobs, stages) -> dict:
+    """Load-independent counters of one rep's jobs and the stages they ran."""
+    return {
+        "jobs": len(jobs),
+        "stages": len(stages),
+        "tasks": sum(s["numTasks"] for s in stages),
+        "shuffle_bytes": sum(s["shuffleWriteBytes"] for s in stages),
+        "spill_bytes": sum(s["diskBytesSpilled"] for s in stages),
+    }
+
+
+def _calibration_workload(spark, _sf_dir):
+    rows = spark.range(0, 50_000_000, 1, 32).selectExpr("id % 97 AS k", "id AS v")
+    return rows.groupBy("k").sum("v")
+
+
+def calibration_reps(spark) -> list[float]:
+    """Seconds of 3 reps of a fixed, code-independent JVM workload
+    (range sum + shuffle). Its drift vs its recorded baseline measures
+    the HOST, not this repo's code — the disambiguator for uniform
+    slowdowns: queries drifted but calibration flat => a real
+    everywhere-regression in shared code; both drifted => contention."""
+    return [round(timed_rep(spark, _calibration_workload, "", "CALIBRATE")[0], 3) for _ in range(3)]
+
+
+def run(spark, args) -> int:
+    sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
+    names = [n for n in HEADLINE if n in QUERIES]
+    warm_up(spark, names, SF_DIR)
     # min of 3 executions per query: steady-state timing (the first
     # run can absorb stray GC / lingering JIT work even after the
     # sf0.001 warm-up pass; round-6 observed back-to-back sessions
     # where min-of-2 still caught a scheduler hiccup on BOTH reps of a
     # different query each run — a third rep collapses that tail, and
     # taking the min can only move readings TOWARD the recorded
-    # baselines, never away). The cache is cleared before EVERY timed
-    # execution so intra-query persists never leak between reps or
-    # queries — each rep pays the query's full cost from the scans up.
-    timings: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(3):
-            release_tracked()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    # baselines, never away).
+    best = {
+        n: min((timed_rep(spark, QUERIES[n], SF_DIR, n) for _ in range(3)), key=lambda r: r[0])
+        for n in names
+    }
+    timings = {n: round(sec, 3) for n, (sec, _, _) in best.items()}
+    per_query = {n: counters(jobs, stages) for n, (_, jobs, stages) in best.items()}
     total = round(sum(timings.values()), 3)
-    # Calibration probe: a fixed, code-independent JVM workload (range
-    # sum + shuffle) timed min-of-3. Its drift vs its recorded baseline
-    # measures the HOST, not this repo's code — the disambiguator for
-    # uniform slowdowns: queries drifted but calibration flat => a real
-    # everywhere-regression in shared code; both drifted => contention.
-    cal = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 50_000_000, 1, 32).selectExpr("id % 97 AS k", "id AS v").groupBy(
-            "k"
-        ).sum("v").write.format("noop").mode("overwrite").save()
-        cal = min(cal, time.perf_counter() - t0)
-    calibration = round(cal, 3)
+    calibration = min(calibration_reps(spark))
     out = {
         "metric": "headline_queries_total_time",
         "value": total,
@@ -198,6 +307,7 @@ def main() -> None:
         "queries": timings,
         "calibration_sec": calibration,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "counters": per_query,
     }
     baseline_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_baseline.json")
     if os.path.exists(baseline_path):
@@ -294,7 +404,102 @@ def main() -> None:
     except OSError:
         pass  # read-only checkout must not break the contract output
     print(json.dumps(out))
+    return 0
+
+
+def retime(spark, args) -> int:
+    names = list(args.queries)
+    if args.control != "none" and args.control not in names:
+        names.append(args.control)
+    warm_up(spark, names, args.sf)
+    for name in names:
+        reps = [timed_rep(spark, QUERIES[name], args.sf, name) for _ in range(args.reps)]
+        secs = [round(r[0], 3) for r in reps]
+        _, jobs, stages = min(reps, key=lambda r: r[0])
+        print(json.dumps({"query": name, "sf": args.sf, "reps": secs, "min": min(secs),
+                          "median": round(statistics.median(secs), 3),
+                          "control": name == args.control, "counters": counters(jobs, stages)}),
+              flush=True)
+    return 0
+
+
+def profile(spark, args) -> int:
+    (name,) = args.queries
+    warm_up(spark, [name], args.sf)
+    reps = [timed_rep(spark, QUERIES[name], args.sf, f"TIMED{i}") for i in range(args.reps)]
+    rows = []
+    for _, jobs, stages in reps:
+        owner: dict[int, int] = {}  # a stage runs in the first job listing it; later ones skip it
+        for j in jobs:
+            owner.update({sid: j["jobId"] for sid in j["stageIds"] if sid not in owner})
+        rows += [{
+            "job": j["jobId"],
+            "sec": round((j["completionTime"] - j["submissionTime"]) / 1000.0, 3),
+            **counters([j], [s for s in stages if owner[s["stageId"]] == j["jobId"]]),
+            "callsite": j["name"], "desc": j["description"],
+        } for j in jobs]
+    by_site: dict[str, list[float]] = {}
+    for r in rows:
+        print(json.dumps(r))
+        by_site.setdefault(r["callsite"], []).append(r["sec"])
+    print(json.dumps({"n_jobs": len(rows), "sum_job_sec": round(sum(r["sec"] for r in rows), 2),
+                      "wall_per_rep": [round(r[0], 2) for r in reps],
+                      "counters_per_rep": [counters(*r[1:]) for r in reps]}))
+    for site, secs in sorted(by_site.items(), key=lambda kv: -sum(kv[1]))[:20]:
+        print(json.dumps({"callsite": site, "n_jobs": len(secs), "sum_sec": round(sum(secs), 2)}))
+    return 0
+
+
+PLAN_MENTIONS = dict(
+    exchange=r"\bExchange\b", broadcast_exchange=r"\bBroadcastExchange\b",
+    sort_merge_join=r"\bSortMergeJoin\b", broadcast_hash_join=r"\bBroadcastHashJoin\b",
+    shuffled_hash_join=r"\bShuffledHashJoin\b", cartesian=r"\bCartesianProduct\b",
+    rangepartitioning=r"\brangepartitioning\b", single_partition=r"\bSinglePartition\b",
+    python_eval=r"BatchEvalPython|ArrowEvalPython",
+)
+
+
+def plan(spark, args) -> int:
+    os.makedirs(args.outdir, exist_ok=True)
+    for name in args.queries:
+        df = QUERIES[name](spark, args.sf)
+        txt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        path = os.path.join(args.outdir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(txt)
+        counts = {k: len(re.findall(p, txt)) for k, p in PLAN_MENTIONS.items()}
+        print(json.dumps({"query": name, "file": path, "bytes": len(txt), **counts}), flush=True)
+        release_tracked()
+        spark.catalog.clearCache()
+    return 0
+
+
+def calibrate(spark, args) -> int:
+    reps = calibration_reps(spark)
+    print(json.dumps({"calibration_reps": reps, "min": min(reps)}))
+    return 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    sub = ap.add_subparsers(dest="cmd")
+    cmds = {f.__name__: f for f in (run, retime, profile, plan, calibrate)}
+    subs = {c: sub.add_parser(c) for c in cmds}
+    subs["plan"].add_argument("outdir")
+    for c, nargs in (("retime", "+"), ("profile", 1), ("plan", "+")):
+        subs[c].add_argument("queries", nargs=nargs, metavar="query")
+        subs[c].add_argument("--sf", default=SF_DIR)
+    for c, reps in (("retime", 4), ("profile", 1)):
+        subs[c].add_argument("--reps", type=int, default=reps)
+    subs["retime"].add_argument("--control", default="q1_pricing_summary")
+    args = ap.parse_args(argv)
+    cmd = args.cmd or "run"
+    named = getattr(args, "queries", []) + [getattr(args, "control", "none")]
+    unknown = [n for n in named if n not in QUERIES and n != "none"]
+    if unknown:
+        subs[cmd].error(f"unknown query name(s): {', '.join(unknown)}")
+    return cmds[cmd](get_spark("bench"), args)
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -327,7 +327,6 @@ ALLOWLIST: dict[str, dict[str, str]] = {
 FLAGS = {
     "single_partition": re.compile(r"Exchange SinglePartition"),
     "cartesian": re.compile(r"CartesianProduct"),
-    "global_window": re.compile(r"Window .*?(?=\n)", re.S),
     "python_row_udf": re.compile(r"BatchEvalPython"),
 }
 
@@ -362,8 +361,6 @@ def audit(sf_dir: str, spark=None, skip_eager: bool = False) -> int:
         if re.search(r"Window \[", plan) and "partitionBy" not in plan:
             # windows with an empty partition spec print without a
             # partition column list before ORDER BY
-            for m in re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
-                pass
             if re.search(r"Window \[[^\n]*\], \[\]", plan) or re.search(
                 r"Window \[[^\n]*windowspecdefinition\(([^,)]*ASC|[^,)]*DESC)", plan
             ):

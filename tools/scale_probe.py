@@ -22,7 +22,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -73,7 +72,7 @@ def main() -> int:
     factor = float(sf_big) / float(sf_small)
     _ensure_data(regen, [(sf_small, small), (sf_big, big)])
 
-    from classification_pyspark_spark.operators.caching import release_tracked
+    from bench import timed_rep
     from classification_pyspark_spark.queries import QUERIES
     from classification_pyspark_spark.session import get_spark
     from scale_sweep import PRODUCTION_MODE
@@ -86,14 +85,8 @@ def main() -> int:
         # not the at-scale configuration; the ratio must compare the
         # plan a production caller would run)
         fn = PRODUCTION_MODE.get(name, QUERIES[name])
-        best = float("inf")
-        for _ in range(2):  # min-of-2: steady-state, same policy as bench.py
-            release_tracked()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+        # min-of-2: steady-state, same policy as bench.py
+        return min(timed_rep(spark, fn, sf_dir, name)[0] for _ in range(2))
 
     # warm codegen/broadcast pools once per query shape at the small SF
     for name in PROBE:

@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -224,7 +223,7 @@ PRODUCTION_MODE = {
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf1")
 
-    from classification_pyspark_spark.operators.caching import release_tracked
+    from bench import timed_rep
     from classification_pyspark_spark.queries import QUERIES
     from classification_pyspark_spark.session import get_spark
 
@@ -241,13 +240,7 @@ def main() -> int:
             # single-run times were measured up to 2x over the same
             # query isolated — the artifact should record steady-state
             # per-query cost, not the sweep harness's GC debt
-            best = float("inf")
-            for _ in range(2):
-                release_tracked()
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
+            best = min(timed_rep(spark, fn, sf_dir)[0] for _ in range(2))
             results[name] = {"sec": round(best, 2), "mode": mode}
             print(f"OK   {name}: {results[name]['sec']}s ({mode})")
         except Exception as e:  # noqa: BLE001 — sweep must report, not die
