@@ -38,8 +38,8 @@ q1_pricing_summary) — if the control moved too, the host moved, not
 the code. One JSON line per query: reps, min, median and the fastest
 rep's counters.
 
-``profile`` prints one JSON line per job of the timed reps (seconds,
-stages, tasks, shuffle and spill bytes, callsite), a summary, and the
+``profile`` prints one JSON line per job of the timed reps (rep index,
+seconds, stages, tasks, shuffle and spill bytes, callsite), a summary, and the
 costliest callsites. Job counts and the callsite mix do not depend on
 host load, unlike the seconds.
 
@@ -184,34 +184,31 @@ def warm_up(spark, names, sf_dir: str) -> None:
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     for name in names:
         try:
-            timed_rep(spark, QUERIES[name], warm_dir if os.path.isdir(warm_dir) else sf_dir, "WARM")
+            timed_rep(spark, QUERIES[name], warm_dir if os.path.isdir(warm_dir) else sf_dir)
         except Exception:
             pass
 
 
-def timed_rep(spark, fn, sf_dir: str, tag: str = "TIMED"):
+def timed_rep(spark, fn, sf_dir: str):
     """One measured execution of ``fn(spark, sf_dir)``: release tracked
     persists and the cache, so the rep pays its full cost from the
     scans up; time a noop write, which drains every row and collects
     nothing; then, outside the timed interval, read the rep's jobs and
-    stage attempts from the status store. Every job the rep triggers
-    carries ``tag`` as its description.
+    stage attempts from the status store. The harness runs one rep at a
+    time, so the rep's jobs are all jobs after the newest one before it,
+    whichever thread submits them (a streaming query's micro-batches run
+    on the stream's own thread, under its own job description).
 
     Returns ``(seconds, jobs, stages)``, jobs oldest first; ``stages``
-    holds only the attempts that ran (skipped stages carry no
-    description)."""
+    holds only the attempts those jobs ran, not the skipped ones."""
     release_tracked()
     spark.catalog.clearCache()
     jobs = _store(spark).jobsList(None)  # newest first
     first = 0 if jobs.isEmpty() else jobs.head().jobId() + 1
-    spark.sparkContext.setJobDescription(tag)
-    try:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sec = time.perf_counter() - t0
-    finally:
-        spark.sparkContext.setJobDescription(None)
-    return (sec, *_history(spark, first, tag))
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sec = time.perf_counter() - t0
+    return (sec, *_history(spark, first))
 
 
 def _store(spark):
@@ -230,7 +227,7 @@ def _as_json(spark, seq) -> list[dict]:
     return json.loads(mapper.writeValueAsString(seq))
 
 
-def _history(spark, first: int, tag: str) -> tuple[list[dict], list[dict]]:
+def _history(spark, first: int) -> tuple[list[dict], list[dict]]:
     """Jobs ``first``.. (all of them the rep's) and the stage attempts
     they ran. Raises if the store no longer holds every one of those
     jobs: counters of a partly evicted rep would silently read low."""
@@ -238,22 +235,24 @@ def _history(spark, first: int, tag: str) -> tuple[list[dict], list[dict]]:
     jl = store.jobsList(None)
     n = 0 if jl.isEmpty() else jl.head().jobId() - first + 1
     jobs = _as_json(spark, jl.take(n))[::-1]
-    ids = [j["jobId"] for j in jobs if j.get("description") == tag]
-    if ids != list(range(first, first + n)):
-        raise RuntimeError(f"status store lacks jobs of rep {tag!r}: expected ids {first}.."
-                           f"{first + n - 1}, holds {ids} (evicted, or an untagged job)")
+    if [j["jobId"] for j in jobs] != list(range(first, first + n)):
+        raise RuntimeError(f"status store lacks jobs of the rep: holds {len(jobs)} of the "
+                           f"{n} jobs {first}..{first + n - 1} (evicted)")
     if not jobs:
         return jobs, []
     jvm = spark.sparkContext._jvm
     no_quantiles = spark.sparkContext._gateway.new_array(jvm.double, 0)
     sl = store.stageList(None, False, False, no_quantiles, jvm.java.util.ArrayList())
     # newest first, one entry per attempt: take every entry back to the
-    # rep's oldest stage, doubling the window when retries pushed it past
-    lo = min(s for j in jobs for s in j["stageIds"])
+    # rep's oldest stage, doubling the window when retries pushed it past.
+    # A job also lists, under new ids, the stages whose shuffle output
+    # already exists; the store holds those as SKIPPED.
+    ran = {s for j in jobs for s in j["stageIds"]}
+    lo = min(ran)
     k = sl.head().stageId() - lo + 2
     while len(stages := _as_json(spark, sl.take(k))) == k and stages[-1]["stageId"] >= lo:
         k *= 2
-    return jobs, [s for s in stages if s["stageId"] >= lo and s.get("description") == tag]
+    return jobs, [s for s in stages if s["stageId"] in ran and s["status"] != "SKIPPED"]
 
 
 def counters(jobs, stages) -> dict:
@@ -278,7 +277,7 @@ def calibration_reps(spark) -> list[float]:
     the HOST, not this repo's code — the disambiguator for uniform
     slowdowns: queries drifted but calibration flat => a real
     everywhere-regression in shared code; both drifted => contention."""
-    return [round(timed_rep(spark, _calibration_workload, "", "CALIBRATE")[0], 3) for _ in range(3)]
+    return [round(timed_rep(spark, _calibration_workload, "")[0], 3) for _ in range(3)]
 
 
 def run(spark, args) -> int:
@@ -293,7 +292,7 @@ def run(spark, args) -> int:
     # taking the min can only move readings TOWARD the recorded
     # baselines, never away).
     best = {
-        n: min((timed_rep(spark, QUERIES[n], SF_DIR, n) for _ in range(3)), key=lambda r: r[0])
+        n: min((timed_rep(spark, QUERIES[n], SF_DIR) for _ in range(3)), key=lambda r: r[0])
         for n in names
     }
     timings = {n: round(sec, 3) for n, (sec, _, _) in best.items()}
@@ -413,7 +412,7 @@ def retime(spark, args) -> int:
         names.append(args.control)
     warm_up(spark, names, args.sf)
     for name in names:
-        reps = [timed_rep(spark, QUERIES[name], args.sf, name) for _ in range(args.reps)]
+        reps = [timed_rep(spark, QUERIES[name], args.sf) for _ in range(args.reps)]
         secs = [round(r[0], 3) for r in reps]
         _, jobs, stages = min(reps, key=lambda r: r[0])
         print(json.dumps({"query": name, "sf": args.sf, "reps": secs, "min": min(secs),
@@ -426,9 +425,9 @@ def retime(spark, args) -> int:
 def profile(spark, args) -> int:
     (name,) = args.queries
     warm_up(spark, [name], args.sf)
-    reps = [timed_rep(spark, QUERIES[name], args.sf, f"TIMED{i}") for i in range(args.reps)]
+    reps = [timed_rep(spark, QUERIES[name], args.sf) for _ in range(args.reps)]
     rows = []
-    for _, jobs, stages in reps:
+    for i, (_, jobs, stages) in enumerate(reps):
         owner: dict[int, int] = {}  # a stage runs in the first job listing it; later ones skip it
         for j in jobs:
             owner.update({sid: j["jobId"] for sid in j["stageIds"] if sid not in owner})
@@ -436,7 +435,7 @@ def profile(spark, args) -> int:
             "job": j["jobId"],
             "sec": round((j["completionTime"] - j["submissionTime"]) / 1000.0, 3),
             **counters([j], [s for s in stages if owner[s["stageId"]] == j["jobId"]]),
-            "callsite": j["name"], "desc": j["description"],
+            "callsite": j["name"], "rep": i,
         } for j in jobs]
     by_site: dict[str, list[float]] = {}
     for r in rows:

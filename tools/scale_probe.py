@@ -86,7 +86,7 @@ def main() -> int:
         # plan a production caller would run)
         fn = PRODUCTION_MODE.get(name, QUERIES[name])
         # min-of-2: steady-state, same policy as bench.py
-        return min(timed_rep(spark, fn, sf_dir, name)[0] for _ in range(2))
+        return min(timed_rep(spark, fn, sf_dir)[0] for _ in range(2))
 
     # warm codegen/broadcast pools once per query shape at the small SF
     for name in PROBE:
