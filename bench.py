@@ -10,14 +10,16 @@
 subcommand measures one way: ``warm_up`` runs each query once at the
 sibling sf0.001 directory of the target, ``timed_rep`` times one
 execution into a noop sink and reads the rep's jobs and stages from
-Spark's in-process status store, and ``calibration_reps`` times the
+Spark's in-process status store and its count of generated classes
+compiled, and ``calibration_reps`` times the
 code-independent host probe through ``timed_rep``. An unknown query
 name is a usage error (exit 2) before Spark starts.
 
 ``run`` prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>,
-   "counters": {name: {jobs, stages, tasks, shuffle_bytes, spill_bytes}},
+   "counters": {name: {jobs, stages, tasks, shuffle_bytes, spill_bytes,
+                       compiles}},
    "baseline_delta": {name: sec/baseline_sec, ...},
    "regressions": [names over the 2x gate]}
 Each query's seconds are the min of 3 reps; its counters come from the
@@ -194,21 +196,31 @@ def timed_rep(spark, fn, sf_dir: str):
     persists and the cache, so the rep pays its full cost from the
     scans up; time a noop write, which drains every row and collects
     nothing; then, outside the timed interval, read the rep's jobs and
-    stage attempts from the status store. The harness runs one rep at a
-    time, so the rep's jobs are all jobs after the newest one before it,
-    whichever thread submits them (a streaming query's micro-batches run
-    on the stream's own thread, under its own job description).
+    stage attempts from the status store, and how many generated classes
+    the JVM compiled. The harness runs one rep at a time, so the rep's
+    jobs are all jobs after the newest one before it, whichever thread
+    submits them (a streaming query's micro-batches run on the stream's
+    own thread, under its own job description).
 
-    Returns ``(seconds, jobs, stages)``, jobs oldest first; ``stages``
-    holds only the attempts those jobs ran, not the skipped ones."""
+    Returns ``(seconds, jobs, stages, compiles)``, jobs oldest first;
+    ``stages`` holds only the attempts those jobs ran, not the skipped
+    ones. ``compiles`` is 0 for a warm rep whose classes are all in
+    Spark's codegen cache."""
     release_tracked()
     spark.catalog.clearCache()
     jobs = _store(spark).jobsList(None)  # newest first
     first = 0 if jobs.isEmpty() else jobs.head().jobId() + 1
+    compiled = _compiles(spark)
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     sec = time.perf_counter() - t0
-    return (sec, *_history(spark, first))
+    return (sec, *_history(spark, first), _compiles(spark) - compiled)
+
+
+def _compiles(spark) -> int:
+    # Janino compilations so far in this JVM; a codegen cache hit is not one
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _store(spark):
@@ -255,14 +267,17 @@ def _history(spark, first: int) -> tuple[list[dict], list[dict]]:
     return jobs, [s for s in stages if s["stageId"] in ran and s["status"] != "SKIPPED"]
 
 
-def counters(jobs, stages) -> dict:
-    """Load-independent counters of one rep's jobs and the stages they ran."""
+def counters(jobs, stages, compiles) -> dict:
+    """Load-independent counters of one rep's jobs, the stages they ran
+    and the generated classes it compiled (None where not attributable,
+    as for one job of a rep)."""
     return {
         "jobs": len(jobs),
         "stages": len(stages),
         "tasks": sum(s["numTasks"] for s in stages),
         "shuffle_bytes": sum(s["shuffleWriteBytes"] for s in stages),
         "spill_bytes": sum(s["diskBytesSpilled"] for s in stages),
+        "compiles": compiles,
     }
 
 
@@ -295,8 +310,8 @@ def run(spark, args) -> int:
         n: min((timed_rep(spark, QUERIES[n], SF_DIR) for _ in range(3)), key=lambda r: r[0])
         for n in names
     }
-    timings = {n: round(sec, 3) for n, (sec, _, _) in best.items()}
-    per_query = {n: counters(jobs, stages) for n, (_, jobs, stages) in best.items()}
+    timings = {n: round(r[0], 3) for n, r in best.items()}
+    per_query = {n: counters(*r[1:]) for n, r in best.items()}
     total = round(sum(timings.values()), 3)
     calibration = min(calibration_reps(spark))
     out = {
@@ -414,10 +429,10 @@ def retime(spark, args) -> int:
     for name in names:
         reps = [timed_rep(spark, QUERIES[name], args.sf) for _ in range(args.reps)]
         secs = [round(r[0], 3) for r in reps]
-        _, jobs, stages = min(reps, key=lambda r: r[0])
+        fastest = min(reps, key=lambda r: r[0])
         print(json.dumps({"query": name, "sf": args.sf, "reps": secs, "min": min(secs),
                           "median": round(statistics.median(secs), 3),
-                          "control": name == args.control, "counters": counters(jobs, stages)}),
+                          "control": name == args.control, "counters": counters(*fastest[1:])}),
               flush=True)
     return 0
 
@@ -427,14 +442,14 @@ def profile(spark, args) -> int:
     warm_up(spark, [name], args.sf)
     reps = [timed_rep(spark, QUERIES[name], args.sf) for _ in range(args.reps)]
     rows = []
-    for i, (_, jobs, stages) in enumerate(reps):
+    for i, (_, jobs, stages, _) in enumerate(reps):
         owner: dict[int, int] = {}  # a stage runs in the first job listing it; later ones skip it
         for j in jobs:
             owner.update({sid: j["jobId"] for sid in j["stageIds"] if sid not in owner})
         rows += [{
             "job": j["jobId"],
             "sec": round((j["completionTime"] - j["submissionTime"]) / 1000.0, 3),
-            **counters([j], [s for s in stages if owner[s["stageId"]] == j["jobId"]]),
+            **counters([j], [s for s in stages if owner[s["stageId"]] == j["jobId"]], None),
             "callsite": j["name"], "rep": i,
         } for j in jobs]
     by_site: dict[str, list[float]] = {}

@@ -175,6 +175,7 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     from .operators.caching import track
     from .operators.dedup_fuzzy import minhash_star_edges
     from .operators.text import langid_expr, quality_score_expr
+    from .sources.io import save_data_observed
 
     sf_dir = params["sf_dir"]
     out = params["out"]
@@ -200,8 +201,7 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         # verdict projection: it feeds BOTH the curated sink and the
         # drop report — without the persist the full corpus LM (two
         # corpus-wide explodes + count tables) would run twice, the
-        # same re-execution hazard the count below avoids by reading
-        # the written files.
+        # same re-execution hazard the observed write below avoids.
         from .operators.text import bigram_lm_perplexity
 
         scores = track(
@@ -275,11 +275,9 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         )
     else:
         curated = surv.select("doc_id", "text", "source", "lang", F.col("__q").alias("quality"))
-    curated.write.mode("overwrite").parquet(out)
-    # count from the written files (footer metadata), NOT from
-    # `curated` — that lineage would re-run the whole scoring +
-    # minhash pair join a second time just for the status message
-    n = spark.read.parquet(out).count()
+    # the write job counts its own rows; counting `curated` would re-run
+    # the whole scoring + minhash pair join for the status message
+    n = save_data_observed(curated, out)["n_rows"]
     if report_out:
         rep_src, ppl_drop = flagged, F.lit(0)
         if scores is not None:

@@ -7,7 +7,12 @@ Replaces the reference's string-``eval`` session builder
 Scale posture: AQE on (runtime re-planning, skew-join splitting,
 coalescing of small shuffle partitions), Arrow on (fast pandas-UDF /
 toPandas boundary), session timezone pinned to UTC so timestamp
-semantics are deterministic across engines and clusters.
+semantics are deterministic across engines and clusters. Generated code
+is compiled once per JVM: the codegen class cache holds 4096 entries,
+above the working set of a long-lived session (a sweep of the whole
+registry at sf0.001 compiles ~3,300 classes), so a warm pass reuses
+every class instead of recompiling it with Janino and JIT-compiling
+the new bytecode again.
 """
 
 from __future__ import annotations
@@ -36,6 +41,15 @@ DEFAULT_CONF: dict[str, str] = {
     # the same ~0.5 GB/task-slot floor
     "spark.driver.memory": "16g",
     "spark.ui.enabled": "false",
+    # Spark's default of 100 generated classes is smaller than one warm
+    # pass: a perfbench query_mix pass needs 122 and a curate_job pass
+    # 126, so LRU evicted every class just before its reuse and each pass
+    # recompiled them all with Janino, then JIT-compiled them again. A
+    # registry sweep at sf0.001 compiles ~3,300. A cached class
+    # keeps ~30 KB of heap (and ~8 KB of Metaspace) live, so a full cache
+    # costs ~125 MB. Static conf: the JVM's first session fixes it, and
+    # get_spark builds that session at every entry point.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 

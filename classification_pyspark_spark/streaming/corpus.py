@@ -131,7 +131,10 @@ def ingest_batch(
     from pyspark.errors import AnalysisException
 
     try:
-        index = spark.read.parquet(index_path).filter(F.col("epoch") < int(epoch_id))
+        # the schema the sinks below write; reading with it skips a
+        # schema-inference job per micro-batch
+        index = spark.read.schema("digest string, doc_id long, epoch int").parquet(index_path)
+        index = index.filter(F.col("epoch") < int(epoch_id))
     except AnalysisException as e:
         if "PATH_NOT_FOUND" not in str(e):
             raise

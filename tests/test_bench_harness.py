@@ -22,15 +22,17 @@ def test_timed_reps_report_identical_counters(spark, sf_dir, name):
     fn = bench.QUERIES[name]
     got = []
     for _ in range(2):
-        sec, jobs, stages = bench.timed_rep(spark, fn, sf_dir)
+        sec, jobs, stages, compiles = bench.timed_rep(spark, fn, sf_dir)
         assert sec > 0
         assert {s["stageId"] for s in stages} <= {s for j in jobs for s in j["stageIds"]}
-        got.append(bench.counters(jobs, stages))
+        got.append(bench.counters(jobs, stages, compiles))
     a, b = got
     assert all(a[k] > 0 for k in ("jobs", "stages", "tasks")), a
     assert {k: a[k] for k in ("jobs", "stages", "tasks")} == {
         k: b[k] for k in ("jobs", "stages", "tasks")
     }
+    # the second rep finds every generated class in the codegen cache
+    assert b["compiles"] == 0, (a, b)
     # a snapshot whose job range the store does not hold (job -1 never
     # existed, as if evicted) fails loudly
     with pytest.raises(RuntimeError, match="lacks jobs"):
