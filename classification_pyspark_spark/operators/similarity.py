@@ -114,7 +114,6 @@ def knn_bruteforce(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query row.
 
@@ -123,93 +122,76 @@ def knn_bruteforce(
     scanned ONCE, never shuffled — each Arrow batch is one matmul
     against all queries, and only the per-batch top-k survivors (k
     rows x n_queries per batch) leave the executors. A final window
-    reduces partial top-ks to the global top-k. ``vectorized=False``
-    falls back to the pure-JVM broadcast-join formulation.
+    reduces partial top-ks to the global top-k. NULL / zero-norm
+    vectors have no defined cosine and are excluded.
 
     Output: (query_id, neighbor_id, cosine rounded 4, rank).
     """
     w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
 
-    if not vectorized:
-        q = queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    from pyspark.sql import types as T
+
+    id_type = df.schema[id_col].dataType
+    schema = T.StructType(
+        [
+            T.StructField("query_id", id_type),
+            T.StructField("neighbor_id", id_type),
+            T.StructField("__cos", T.DoubleType()),
+        ]
+    )
+    valid = df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), F.col(vec_col))
+    q_rows = (
+        queries.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col), F.col(vec_col))
+        .collect()
+    )
+    if not q_rows:
+        empty = valid.sparkSession.createDataFrame([], schema)
+        return empty.select(
+            "query_id",
+            "neighbor_id",
+            F.col("__cos").alias("cosine"),
+            F.lit(1).alias("rank"),
         )
-        c = df.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("nv"))
-        scored = (
-            F.broadcast(q)
-            .crossJoin(c)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("nv")).alias("__cos")
+    q_ids = [r[0] for r in q_rows]
+    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+
+    def score_batches(it):
+        for pdf in it:
+            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            norms = np.linalg.norm(V, axis=1)
+            ok = norms > 0
+            if not ok.all():
+                V, norms, pdf = V[ok], norms[ok], pdf.iloc[ok]
+            if len(pdf) == 0:
+                continue
+            Vn = V / norms[:, None]
+            S = Vn @ Qn.T  # (batch, n_queries)
+            nids = pdf[id_col].to_numpy()
+            top = min(k + 1, len(nids))  # +1: a query may see itself
+            qcol, ncol, ccol = [], [], []
+            for j, qid in enumerate(q_ids):
+                col = S[:, j]
+                # deterministic per-batch top-k under (cos desc,
+                # id asc): the union of per-batch top-ks under a
+                # total order contains the global top-k, so the
+                # final window reduction is exact — argpartition
+                # alone would drop boundary ties arbitrarily
+                order = np.lexsort((nids, -col))[:top]
+                qcol.extend([qid] * len(order))
+                ncol.append(nids[order])
+                ccol.append(col[order])
+            yield pd.DataFrame(
+                {
+                    "query_id": qcol,
+                    "neighbor_id": np.concatenate(ncol),
+                    "__cos": np.concatenate(ccol),
+                }
             )
-        )
-    else:
-        from pyspark.sql import types as T
 
-        id_type = df.schema[id_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField("query_id", id_type),
-                T.StructField("neighbor_id", id_type),
-                T.StructField("__cos", T.DoubleType()),
-            ]
-        )
-        # NULL / zero-norm vectors have no defined cosine: exclude them
-        # (the JVM path scores them NULL, which desc-sorts last — same
-        # top-k whenever k valid neighbors exist)
-        valid = df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), F.col(vec_col))
-        q_rows = (
-            queries.filter(F.col(vec_col).isNotNull())
-            .select(F.col(id_col), F.col(vec_col))
-            .collect()
-        )
-        if not q_rows:
-            empty = valid.sparkSession.createDataFrame([], schema)
-            return empty.select(
-                "query_id",
-                "neighbor_id",
-                F.col("__cos").alias("cosine"),
-                F.lit(1).alias("rank"),
-            )
-        q_ids = [r[0] for r in q_rows]
-        Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-        Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-        def score_batches(it):
-            for pdf in it:
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                norms = np.linalg.norm(V, axis=1)
-                ok = norms > 0
-                if not ok.all():
-                    V, norms, pdf = V[ok], norms[ok], pdf.iloc[ok]
-                if len(pdf) == 0:
-                    continue
-                Vn = V / norms[:, None]
-                S = Vn @ Qn.T  # (batch, n_queries)
-                nids = pdf[id_col].to_numpy()
-                top = min(k + 1, len(nids))  # +1: a query may see itself
-                qcol, ncol, ccol = [], [], []
-                for j, qid in enumerate(q_ids):
-                    col = S[:, j]
-                    # deterministic per-batch top-k under (cos desc,
-                    # id asc): the union of per-batch top-ks under a
-                    # total order contains the global top-k, so the
-                    # final window reduction is exact — argpartition
-                    # alone would drop boundary ties arbitrarily
-                    order = np.lexsort((nids, -col))[:top]
-                    qcol.extend([qid] * len(order))
-                    ncol.append(nids[order])
-                    ccol.append(col[order])
-                yield pd.DataFrame(
-                    {
-                        "query_id": qcol,
-                        "neighbor_id": np.concatenate(ncol),
-                        "__cos": np.concatenate(ccol),
-                    }
-                )
-
-        scored = valid.mapInPandas(score_batches, schema)
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
+    scored = valid.mapInPandas(score_batches, schema)
+    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
 
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -231,15 +213,9 @@ def lsh_bucket_expr(vec_col: Column, dim: int, n_planes: int = N_HYPERPLANES) ->
     return bucket.cast("int")
 
 
-def lsh_buckets(
-    df: DataFrame, id_col: str, vec_col: str, dim: int, vectorized: bool = True
-) -> DataFrame:
+def lsh_buckets(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
     """(id, bucket) assignment — the partitioning key for in-bucket ANN."""
-    bucket = (
-        make_lsh_bucket_pudf(dim)(_as_double(F.col(vec_col)))
-        if vectorized
-        else lsh_bucket_expr(F.col(vec_col), dim)
-    )
+    bucket = make_lsh_bucket_pudf(dim)(_as_double(F.col(vec_col)))
     return df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), bucket.alias("bucket"))
 
 
@@ -467,7 +443,6 @@ def cosine_dup_pairs(
     vec_col: str,
     dim: int,
     min_cosine: float = 0.9,
-    vectorized: bool = True,
     max_bucket_size: int = 100_000,
 ) -> DataFrame:
     """Embedding near-duplicate pairs above a cosine threshold,
@@ -507,23 +482,6 @@ def cosine_dup_pairs(
     unbounded single-task GEMM it prevents). Raising
     ``N_HYPERPLANES`` (more, smaller buckets) remains the cheaper
     lever when the corpus allows re-bucketing."""
-    if not vectorized:
-        bucket = lsh_bucket_expr(F.col(vec_col), dim)
-        base = df.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("id"),
-            _as_double(F.col(vec_col)).alias("v"),
-            bucket.alias("bucket"),
-        )
-        a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "bucket")
-        b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "bucket")
-        cos = cosine_expr(F.col("va"), F.col("vb"))
-        return (
-            a.join(b, on="bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
-            .filter(F.col("cosine") >= min_cosine)
-        )
-
     from .caching import track
 
     base = track(lsh_base_frame(df, id_col, vec_col, dim))

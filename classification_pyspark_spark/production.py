@@ -316,32 +316,43 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     return TaskStatus(True, f"{n} curated docs")
 
 
+def _ingest_job(spark: SparkSession, params: dict, label: str, drain, **mode) -> TaskStatus:
+    """The body the three ``corpus-ingest`` tasks share: drain whatever
+    document files have landed since the last run (availableNow)
+    through the mode's ``streaming/corpus.py`` ingest, then report the
+    corpus size (and the tokens cut, where the sink records them) in one
+    aggregate. Params: landing/sink/index/checkpoint, optional
+    max_files_per_trigger (default 8)."""
+    from pyspark.errors import AnalysisException
+
+    from .streaming.corpus import read_corpus, read_documents_stream
+
+    sink = params["sink"]
+    stream = read_documents_stream(
+        spark, params["landing"], max_files_per_trigger=int(params.get("max_files_per_trigger", 8))
+    )
+    drain(stream, sink, params["index"], params["checkpoint"], **mode)
+    try:
+        corpus = read_corpus(spark, sink)
+    except AnalysisException:  # empty landing zone: no batch ever wrote the sink
+        return TaskStatus(True, f"{label} at {sink}: 0 documents")
+    cut = "tokens_cut" in corpus.columns
+    row = corpus.agg(F.count(F.lit(1)), *([F.sum("tokens_cut")] if cut else [])).first()
+    msg = f"{label} at {sink}: {row[0]} documents"
+    return TaskStatus(True, msg + (f", {row[1] or 0} tokens cut" if cut else ""))
+
+
 @register_processor("corpus-ingest", "ingest-documents")
 def ingest_documents_job(spark: SparkSession, params: dict) -> TaskStatus:
-    """Streaming corpus ingest as an orchestrated job: drain whatever
-    document files have landed since the last run (availableNow) into
-    the deduped corpus + digest index. Re-running the job is the
-    scheduler's incremental refresh — the checkpoint skips already-
+    """Streaming corpus ingest as an orchestrated job: drain the landing
+    zone into the deduped corpus + digest index. Re-running the job is
+    the scheduler's incremental refresh — the checkpoint skips already-
     ingested files and the digest index rejects already-seen texts,
     so an hourly cadence costs O(new files), never O(corpus). See
     ``streaming/corpus.py`` for the effectively-once mechanics."""
-    from .streaming.corpus import ingest_documents, read_corpus, read_documents_stream
+    from .streaming.corpus import ingest_documents
 
-    landing = params["landing"]
-    sink = params["sink"]
-    index = params["index"]
-    checkpoint = params["checkpoint"]
-    stream = read_documents_stream(
-        spark, landing, max_files_per_trigger=int(params.get("max_files_per_trigger", 8))
-    )
-    ingest_documents(stream, sink, index, checkpoint)
-    from pyspark.errors import AnalysisException
-
-    try:
-        n = read_corpus(spark, sink).count()
-    except AnalysisException:  # empty landing zone: no batch ever wrote the sink
-        n = 0
-    return TaskStatus(True, f"corpus at {sink}: {n} unique documents")
+    return _ingest_job(spark, params, "exact-deduped corpus", ingest_documents)
 
 
 @register_processor("corpus-ingest", "ingest-documents-neardup")
@@ -350,36 +361,16 @@ def ingest_documents_neardup_job(spark: SparkSession, params: dict) -> TaskStatu
     the band-index twin of ``ingest-documents``: the same availableNow
     drain and epoch-keyed idempotence, but arriving NEAR-duplicates
     (not just exact copies) are vetoed against the persistent LSH band
-    index. Params: landing/sink/index/checkpoint (+ optional
-    rows_per_band, n_hashes, engine — defaults are the production
-    H=16/r=8 universal banding)."""
-    from .streaming.corpus import (
-        ingest_documents_neardup,
-        read_corpus,
-        read_documents_stream,
-    )
+    index. Optional params rows_per_band, n_hashes, engine — defaults
+    are the production H=16/r=8 universal banding."""
+    from .streaming.corpus import ingest_documents_neardup
 
-    stream = read_documents_stream(
-        spark,
-        params["landing"],
-        max_files_per_trigger=int(params.get("max_files_per_trigger", 8)),
-    )
-    ingest_documents_neardup(
-        stream,
-        params["sink"],
-        params["index"],
-        params["checkpoint"],
+    return _ingest_job(
+        spark, params, "near-dup-deduped corpus", ingest_documents_neardup,
         rows_per_band=int(params.get("rows_per_band", 8)),
         n_hashes=int(params.get("n_hashes", 16)),
         engine=params.get("engine", "universal"),
     )
-    from pyspark.errors import AnalysisException
-
-    try:
-        n = read_corpus(spark, params["sink"]).count()
-    except AnalysisException:  # empty landing zone
-        n = 0
-    return TaskStatus(True, f"near-dup-deduped corpus at {params['sink']}: {n} documents")
 
 
 @register_processor("corpus-ingest", "ingest-documents-cutspans")
@@ -391,35 +382,11 @@ def ingest_documents_cutspans_job(spark: SparkSession, params: dict) -> TaskStat
     index of everything previously seen) are CUT from the text at
     write time; untouched docs land byte-identical, docs cut to
     nothing are dropped, and every sink row carries ``tokens_cut``.
-    Params: landing/sink/index/checkpoint (+ optional span_n /
-    min_span, defaults 10/50 — the registry/production cut knobs)."""
-    from .streaming.corpus import (
-        ingest_documents_cutspans,
-        read_corpus,
-        read_documents_stream,
-    )
+    Optional params span_n / min_span, defaults 10/50 — the
+    registry/production cut knobs."""
+    from .streaming.corpus import ingest_documents_cutspans
 
-    stream = read_documents_stream(
-        spark,
-        params["landing"],
-        max_files_per_trigger=int(params.get("max_files_per_trigger", 8)),
-    )
-    ingest_documents_cutspans(
-        stream,
-        params["sink"],
-        params["index"],
-        params["checkpoint"],
-        n=int(params.get("span_n", 10)),
-        min_span=int(params.get("min_span", 50)),
-    )
-    from pyspark.errors import AnalysisException
-
-    try:
-        corpus = read_corpus(spark, params["sink"])
-        n = corpus.count()
-        cut = corpus.agg(F.sum("tokens_cut")).first()[0] or 0
-    except AnalysisException:  # empty landing zone
-        n, cut = 0, 0
-    return TaskStatus(
-        True, f"span-cut corpus at {params['sink']}: {n} documents, {cut} tokens cut"
+    return _ingest_job(
+        spark, params, "span-cut corpus", ingest_documents_cutspans,
+        n=int(params.get("span_n", 10)), min_span=int(params.get("min_span", 50)),
     )

@@ -1,33 +1,60 @@
-"""Streaming corpus ingest with exact dedup against a persistent
-digest index — the ingest-time half of the batch dedup family
+"""Streaming corpus ingest: one epoch-keyed step, three dedup decisions
 (ref dedup surface: ``src/ta_lib/pyspark/dp.py:297-308``; batch twins:
-``dedup_exact_text``, ``doc_fingerprint``).
+``dedup_exact_text``, ``minhash_candidate_pairs``,
+``substring_dedup_rewrite``).
 
 The production shape this models: document files land continuously; a
-corpus must accept each NEW text exactly once, across batches AND
-across job restarts, without ever rescanning the accumulated corpus.
-State is a digest index (md5 of the text), so the per-trigger cost is
-O(batch + index-probe), never O(corpus-text).
+corpus must accept each arriving document exactly once, across batches
+AND across job restarts, without ever rescanning the accumulated
+corpus. State is an index of keys derived from every text seen so far,
+so the per-trigger cost is O(batch + index-probe), never
+O(corpus-text).
 
-Effectively-once without markers: every output is keyed by epoch —
-accepted docs go to ``sink/epoch=N``, their digests to
-``index/epoch=N``, both with overwrite — and the accept decision
-anti-joins only index epochs ``< N``. A checkpoint replay of epoch N
-therefore recomputes the identical accept set (its own digests are
-excluded from the probe) and overwrites the same two directories:
-idempotent by construction, no ordering between the two writes
-matters. Epoch ids are only monotonic within one checkpoint, so the
-sink records its checkpoint tag and refuses a different one (same
-contract as ``events.merge_stats_batch``).
+Every mode runs the same step (:func:`_ingest_step`) per micro-batch:
+
+1. check the checkpoint tag (below);
+2. coalesce NULL text to empty text in a ``__text`` column — a NULL
+   key never matches a join, so without it every NULL-text doc would
+   be re-accepted in every epoch;
+3. read index epochs ``< N`` with the schema of the index rows the
+   mode writes (no schema-inference job per micro-batch); a missing
+   index (first epoch) is an empty one;
+4. ask the mode's decision for ``(accepted rows, index rows)``;
+5. overwrite ``sink/epoch=N`` and ``index/epoch=N`` with them;
+6. release the decision's persists (one ``track_scope()`` per batch).
+
+A decision maps ``(batch, prior index or None)`` to those two frames
+and ``track()``s the frame both writes read:
+
+- exact (:func:`ingest_batch`): md5 digest, lowest doc_id per digest,
+  anti-join against the digest index;
+- near-dup (:func:`ingest_batch_neardup`): minhash LSH bands, greedy
+  in-batch veto plus a veto by any band already in the index;
+- span-cut (:func:`ingest_batch_cutspans`): rolling n-gram hashes,
+  duplicated spans (batch repeats or index hits) cut out of the text.
+
+Effectively-once without markers: both outputs are keyed by epoch and
+overwritten, and the decision probes only index epochs ``< N``. A
+checkpoint replay of epoch N therefore recomputes the identical
+outputs (its own index rows are excluded from the probe) and
+overwrites the same two directories: idempotent by construction, no
+ordering between the two writes matters. Epoch ids are only monotonic
+within one checkpoint, so the sink records its checkpoint tag and
+refuses a different one (the guard ``events.merge_stats_batch`` uses
+too).
 """
 
 from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..operators.caching import track, track_scope
+from .events import refuse_foreign_checkpoint, run_foreach_batch
 
 DOCUMENTS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -40,23 +67,6 @@ def read_documents_stream(
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
-    )
-
-
-def ingest_documents(
-    docs: DataFrame, sink_path: str, index_path: str, checkpoint_path: str
-) -> None:
-    """Drain the stream (availableNow) through the dedup ingest."""
-    (
-        docs.writeStream.foreachBatch(
-            lambda batch, epoch_id: ingest_batch(
-                batch, epoch_id, sink_path, index_path, checkpoint_tag=checkpoint_path
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 
@@ -84,15 +94,86 @@ def _check_tag(spark: SparkSession, sink_path: str, checkpoint_tag: str | None) 
     raw = hdfs.read_text(spark, tag_file)
     if raw is not None:
         prior = json.loads(raw).get("checkpoint")
-        if checkpoint_tag is not None and prior is not None and prior != checkpoint_tag:
-            raise RuntimeError(
-                f"corpus at {sink_path!r} was built by checkpoint {prior!r} but this "
-                f"stream uses {checkpoint_tag!r}; epoch ids are not comparable across "
-                "checkpoints. Restore the original checkpoint or delete the corpus "
-                "and index to rebuild."
-            )
+        refuse_foreign_checkpoint(f"corpus at {sink_path!r}", prior, checkpoint_tag)
     elif checkpoint_tag is not None:
         hdfs.write_text(spark, tag_file, json.dumps({"checkpoint": checkpoint_tag}))
+
+
+def _ingest_step(
+    batch: DataFrame,
+    epoch_id: int,
+    sink_path: str,
+    index_path: str,
+    checkpoint_tag: str | None,
+    index_schema: str,
+    decide,
+) -> None:
+    """The foreachBatch step every mode runs (module docstring, steps
+    1-6); ``decide(batch, index)`` is the mode's accept decision and
+    ``index_schema`` the schema of the index rows it returns."""
+    from pyspark.errors import AnalysisException
+
+    spark = batch.sparkSession
+    _check_tag(spark, sink_path, checkpoint_tag)
+    batch = batch.withColumn("__text", F.coalesce(F.col("text"), F.lit("")))
+    # only "index does not exist yet" (first epoch) may be swallowed;
+    # any OTHER read failure must abort the batch — silently treating
+    # a transient IO error as an empty index would admit duplicates
+    # and permanently corrupt the corpus
+    try:
+        index = spark.read.schema(f"{index_schema}, epoch int").parquet(index_path)
+        index = index.filter(F.col("epoch") < int(epoch_id))
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        index = None
+    with track_scope():
+        accepted, index_rows = decide(batch, index)
+        accepted.drop("__text").write.mode("overwrite").parquet(
+            os.path.join(sink_path, f"epoch={int(epoch_id)}")
+        )
+        index_rows.write.mode("overwrite").parquet(
+            os.path.join(index_path, f"epoch={int(epoch_id)}")
+        )
+
+
+def _drain(docs: DataFrame, step, sink_path: str, index_path: str, checkpoint_path: str,
+           **params) -> None:
+    run_foreach_batch(
+        docs,
+        lambda batch, epoch_id: step(
+            batch, epoch_id, sink_path, index_path, checkpoint_tag=checkpoint_path, **params
+        ),
+        checkpoint_path,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact dedup: the index rows are md5 digests of the accepted texts.
+# ---------------------------------------------------------------------------
+def ingest_documents(
+    docs: DataFrame, sink_path: str, index_path: str, checkpoint_path: str
+) -> None:
+    """Drain the stream (availableNow) through the exact ingest.
+    ``ingest_batch`` is looked up per call, never bound at import, so a
+    wrapper installed on the module attribute sees every batch."""
+    _drain(docs, ingest_batch, sink_path, index_path, checkpoint_path)
+
+
+def _digest_anti_join(batch: DataFrame, index: DataFrame | None):
+    digested = batch.withColumn("digest", F.md5("__text")).drop("__text")
+    w = Window.partitionBy("digest").orderBy("doc_id")
+    accepted = (
+        digested.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    if index is not None:
+        accepted = accepted.join(index.select("digest"), "digest", "left_anti")
+    # persist: accepted feeds both writes; without it the digest+dedup+
+    # anti-join pipeline runs twice
+    accepted = track(accepted)
+    return accepted.drop("digest"), accepted.select("digest", "doc_id")
 
 
 def ingest_batch(
@@ -102,67 +183,24 @@ def ingest_batch(
     index_path: str,
     checkpoint_tag: str | None = None,
 ) -> None:
-    """One foreachBatch ingest step (module-level so replay idempotence
-    is directly testable).
+    """One foreachBatch exact ingest step (module-level so replay
+    idempotence is directly testable).
 
     1. digest each text (md5), dedup within the batch keeping the
        lowest doc_id per digest (deterministic across replays);
     2. anti-join against index epochs < this one — the batch's own
        replayed digests never veto it;
-    3. overwrite ``sink/epoch=N`` with the accepted docs and
-       ``index/epoch=N`` with their digests.
+    3. accepted docs -> ``sink/epoch=N``, their digests ->
+       ``index/epoch=N``.
     """
-    spark = batch.sparkSession
-    _check_tag(spark, sink_path, checkpoint_tag)
-    # NULL text digests as empty text: md5(NULL) is NULL, and NULL
-    # never matches an anti-join key, so without the coalesce every
-    # NULL-text doc would be re-accepted in every epoch
-    digested = batch.withColumn("digest", F.md5(F.coalesce(F.col("text"), F.lit(""))))
-    w = Window.partitionBy("digest").orderBy("doc_id")
-    in_batch = (
-        digested.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # only "index does not exist yet" (first epoch) may be swallowed;
-    # any OTHER read failure must abort the batch — silently treating
-    # a transient IO error as an empty index would admit duplicates
-    # and permanently corrupt the corpus
-    from pyspark.errors import AnalysisException
-
-    try:
-        # the schema the sinks below write; reading with it skips a
-        # schema-inference job per micro-batch
-        index = spark.read.schema("digest string, doc_id long, epoch int").parquet(index_path)
-        index = index.filter(F.col("epoch") < int(epoch_id))
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        index = None
-    accepted = (
-        in_batch
-        if index is None
-        else in_batch.join(index.select("digest"), "digest", "left_anti")
-    )
-    # persist: accepted feeds two sinks; without it the digest+dedup+
-    # anti-join pipeline runs twice
-    accepted = accepted.persist()
-    try:
-        accepted.drop("digest").write.mode("overwrite").parquet(
-            os.path.join(sink_path, f"epoch={int(epoch_id)}")
-        )
-        accepted.select("digest", "doc_id").write.mode("overwrite").parquet(
-            os.path.join(index_path, f"epoch={int(epoch_id)}")
-        )
-    finally:
-        accepted.unpersist()
+    _ingest_step(batch, epoch_id, sink_path, index_path, checkpoint_tag,
+                 "digest string, doc_id long", _digest_anti_join)
 
 
 # ---------------------------------------------------------------------------
 # Near-dup (minhash) dedup at ingest — the streaming face of
 # operators/dedup_fuzzy.py's incremental index (build_minhash_index /
-# minhash_incremental_pairs). Same epoch-keyed idempotence contract as
-# the exact-digest ingest above; the index rows are LSH band hashes
+# minhash_incremental_pairs). The index rows are LSH band hashes
 # instead of text digests, so arriving NEAR-duplicates (not just exact
 # copies) are vetoed in O(batch + band-probe).
 # ---------------------------------------------------------------------------
@@ -176,19 +214,37 @@ def ingest_documents_neardup(
     engine: str = "universal",
 ) -> None:
     """Drain the stream (availableNow) through the near-dup ingest."""
-    (
-        docs.writeStream.foreachBatch(
-            lambda batch, epoch_id: ingest_batch_neardup(
-                batch, epoch_id, sink_path, index_path,
-                checkpoint_tag=checkpoint_path,
-                rows_per_band=rows_per_band, n_hashes=n_hashes, engine=engine,
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(docs, ingest_batch_neardup, sink_path, index_path, checkpoint_path,
+           rows_per_band=rows_per_band, n_hashes=n_hashes, engine=engine)
+
+
+def _band_veto(batch: DataFrame, index: DataFrame | None, rows_per_band: int,
+               n_hashes: int, engine: str):
+    from ..operators.dedup_fuzzy import minhash_band_long
+
+    bands = minhash_band_long(
+        batch.select("doc_id", "__text"), "__text", "doc_id",
+        rows_per_band=rows_per_band, n_hashes=n_hashes, engine=engine,
     )
+    bucket_min = bands.groupBy("band", "h").agg(F.min("doc_id").alias("__m"))
+    ok = (
+        bands.join(bucket_min, on=["band", "h"])
+        .groupBy("doc_id")
+        .agg(F.max((F.col("__m") < F.col("doc_id")).cast("int")).alias("__dup"))
+        .filter(F.col("__dup") == 0)
+        .select("doc_id")
+    )
+    if index is not None:
+        vetoed = (
+            bands.join(index.select("band", "h"), on=["band", "h"], how="left_semi")
+            .select("doc_id")
+            .distinct()
+        )
+        ok = ok.join(vetoed, "doc_id", "left_anti")
+    # persist: both writes read the accepted ids; without it the band
+    # aggregate, its join and the index veto run again for the index
+    ok = track(ok)
+    return batch.join(ok, "doc_id", "left_semi"), bands.join(ok, "doc_id", "left_semi")
 
 
 def ingest_batch_neardup(
@@ -215,74 +271,20 @@ def ingest_batch_neardup(
     3. vs the index: rejected if any band matches epochs < N (the
        batch's own replayed bands never veto it);
     4. accepted docs -> ``sink/epoch=N``; their bands ->
-       ``index/epoch=N`` — overwrite both, so checkpoint replay is
-       idempotent by construction. Sound invariant: across the whole
-       accepted corpus, every (band, h) bucket has exactly one member.
+       ``index/epoch=N``. Sound invariant: across the whole accepted
+       corpus, every (band, h) bucket has exactly one member.
+
+    ``minhash_band_long`` tracks a persist of the banded signature
+    frame; the step's ``track_scope()`` releases exactly the frames
+    this batch tracked — a process-wide ``release_tracked()`` would
+    also drop persists of registry queries running concurrently in
+    the same session.
     """
-    from ..operators.caching import track_scope
-    from ..operators.dedup_fuzzy import minhash_band_long
-
-    spark = batch.sparkSession
-    _check_tag(spark, sink_path, checkpoint_tag)
-    safe = batch.withColumn("__text", F.coalesce(F.col("text"), F.lit("")))
-    with track_scope():
-        _ingest_batch_neardup_body(
-            spark, batch, safe, epoch_id, sink_path, index_path,
-            rows_per_band, n_hashes, engine,
-        )
-
-
-def _ingest_batch_neardup_body(
-    spark, batch, safe, epoch_id, sink_path, index_path,
-    rows_per_band, n_hashes, engine,
-) -> None:
-    from ..operators.dedup_fuzzy import minhash_band_long
-
-    bands = minhash_band_long(
-        safe.select("doc_id", "__text"), "__text", "doc_id",
-        rows_per_band=rows_per_band, n_hashes=n_hashes, engine=engine,
+    _ingest_step(
+        batch, epoch_id, sink_path, index_path, checkpoint_tag,
+        "doc_id long, band string, h string",
+        partial(_band_veto, rows_per_band=rows_per_band, n_hashes=n_hashes, engine=engine),
     )
-    bucket_min = bands.groupBy("band", "h").agg(F.min("doc_id").alias("__m"))
-    in_batch_ok = (
-        bands.join(bucket_min, on=["band", "h"])
-        .groupBy("doc_id")
-        .agg(F.max((F.col("__m") < F.col("doc_id")).cast("int")).alias("__dup"))
-        .filter(F.col("__dup") == 0)
-        .select("doc_id")
-    )
-    from pyspark.errors import AnalysisException
-
-    try:
-        index = spark.read.parquet(index_path).filter(F.col("epoch") < int(epoch_id))
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        index = None
-    ok = in_batch_ok
-    if index is not None:
-        vetoed = (
-            bands.join(index.select("band", "h"), on=["band", "h"], how="left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        ok = ok.join(vetoed, "doc_id", "left_anti")
-    accepted = batch.join(ok, "doc_id", "left_semi").persist()
-    try:
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(sink_path, f"epoch={int(epoch_id)}")
-        )
-        bands.join(ok, "doc_id", "left_semi").write.mode("overwrite").parquet(
-            os.path.join(index_path, f"epoch={int(epoch_id)}")
-        )
-    finally:
-        accepted.unpersist()
-        # minhash_band_long tracked a persist of the banded signature
-        # frame; a long-running stream would accumulate one cached
-        # frame per trigger. The enclosing track_scope() in
-        # ingest_batch_neardup releases exactly the frames THIS batch
-        # tracked — a process-wide release_tracked() here would also
-        # drop persists belonging to registry queries running
-        # concurrently in the same session.
 
 
 # ---------------------------------------------------------------------------
@@ -294,8 +296,7 @@ def _ingest_batch_neardup_body(
 # rolling n-gram hashes of every ORIGINAL text ever seen (duplication
 # is a property of what was SEEN, not of what was kept — indexing the
 # post-cut text would hide the first occurrence and let the second
-# copy through verbatim). Same epoch-keyed idempotence contract as the
-# other two ingests.
+# copy through verbatim).
 # ---------------------------------------------------------------------------
 def ingest_documents_cutspans(
     docs: DataFrame,
@@ -306,18 +307,8 @@ def ingest_documents_cutspans(
     min_span: int = 50,
 ) -> None:
     """Drain the stream (availableNow) through the span-cut ingest."""
-    (
-        docs.writeStream.foreachBatch(
-            lambda batch, epoch_id: ingest_batch_cutspans(
-                batch, epoch_id, sink_path, index_path,
-                checkpoint_tag=checkpoint_path, n=n, min_span=min_span,
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(docs, ingest_batch_cutspans, sink_path, index_path, checkpoint_path,
+           n=n, min_span=min_span)
 
 
 def index_gram_hits(index: DataFrame, stream: DataFrame) -> DataFrame:
@@ -332,6 +323,55 @@ def index_gram_hits(index: DataFrame, stream: DataFrame) -> DataFrame:
         .select("gk")
         .distinct()
     )
+
+
+def _span_cut(batch: DataFrame, index: DataFrame | None, n: int, min_span: int):
+    from ..operators.dedup_fuzzy import span_cut_rewrite
+    from ..operators.text import punct_tok_sql, rolling_gram_hash_sql
+
+    # persist: the batch feeds the gram stream, the rewrite and its
+    # join; the gram stream feeds the cut spans and the index rows
+    batch = track(batch)
+    grams = F.expr(rolling_gram_hash_sql(punct_tok_sql("__text"), n, distinct=False, pad_short=False))
+    stream = track(
+        batch.select(F.col("doc_id"), F.posexplode(grams).alias("p0", "gk"))
+        .select("doc_id", (F.col("p0") + 1).cast("long").alias("pos"), "gk")
+    )
+    dup_gk = (
+        stream.groupBy("gk").agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= 2)
+        .select("gk")
+    )
+    if index is not None:
+        dup_gk = dup_gk.unionByName(index_gram_hits(index, stream)).distinct()
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    spans = (
+        stream.join(F.broadcast(dup_gk), "gk", "left_semi")
+        .select("doc_id", "pos", (F.col("pos") - F.row_number().over(w)).alias("grp"))
+        .groupBy("doc_id", "grp")
+        .agg(
+            F.min("pos").cast("long").alias("span_start"),
+            (F.count(F.lit(1)) + (n - 1)).cast("long").alias("span_len"),
+        )
+        .filter(F.col("span_len") >= min_span)
+        .select("doc_id", "span_start", "span_len")
+    )
+    rew = span_cut_rewrite(batch, spans, "__text", "doc_id")
+    accepted = (
+        batch.join(rew, "doc_id")
+        .filter(F.col("n_kept") > 0)
+        .select(
+            "doc_id",
+            F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
+            .otherwise(F.col("kept_text"))
+            .alias("text"),
+            "lang",
+            "source",
+            (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
+        )
+        .withColumn("n_chars", F.length(F.coalesce("text", F.lit(""))).cast("long"))
+    )
+    return accepted, stream.select("gk").distinct()
 
 
 def ingest_batch_cutspans(
@@ -364,9 +404,8 @@ def ingest_batch_cutspans(
        cut docs carry the canonical punct rewrite plus its cost in a
        ``tokens_cut`` column, docs cut to nothing are dropped;
     4. surviving docs -> ``sink/epoch=N``; the batch's DISTINCT
-       ORIGINAL gram hashes -> ``index/epoch=N`` — overwrite both, so
-       checkpoint replay recomputes the identical cut set and is
-       idempotent by construction.
+       ORIGINAL gram hashes -> ``index/epoch=N``, so checkpoint
+       replay recomputes the identical cut set.
 
     Semantics vs the batch pass: on any corpus where a cross-epoch
     duplicated span was ALSO duplicated within the epoch that first
@@ -376,68 +415,5 @@ def ingest_batch_cutspans(
     the batch pass would cut every occurrence) — exactly Lee et
     al.'s keep-one posture, and the later copies are still cut.
     """
-    from ..operators.dedup_fuzzy import span_cut_rewrite
-    from ..operators.text import punct_tok_sql, rolling_gram_hash_sql
-
-    spark = batch.sparkSession
-    _check_tag(spark, sink_path, checkpoint_tag)
-    safe = batch.withColumn("__text", F.coalesce(F.col("text"), F.lit(""))).persist()
-    grams = F.expr(rolling_gram_hash_sql(punct_tok_sql("__text"), n, distinct=False, pad_short=False))
-    stream = (
-        safe.select(F.col("doc_id"), F.posexplode(grams).alias("p0", "gk"))
-        .select("doc_id", (F.col("p0") + 1).cast("long").alias("pos"), "gk")
-        .persist()
-    )
-    batch_dup = (
-        stream.groupBy("gk").agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("gk")
-    )
-    from pyspark.errors import AnalysisException
-
-    try:
-        index = spark.read.parquet(index_path).filter(F.col("epoch") < int(epoch_id))
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        index = None
-    dup_gk = batch_dup
-    if index is not None:
-        dup_gk = batch_dup.unionByName(index_gram_hits(index, stream)).distinct()
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    spans = (
-        stream.join(F.broadcast(dup_gk), "gk", "left_semi")
-        .select("doc_id", "pos", (F.col("pos") - F.row_number().over(w)).alias("grp"))
-        .groupBy("doc_id", "grp")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.count(F.lit(1)) + (n - 1)).cast("long").alias("span_len"),
-        )
-        .filter(F.col("span_len") >= min_span)
-        .select("doc_id", "span_start", "span_len")
-    )
-    rew = span_cut_rewrite(safe, spans, "__text", "doc_id")
-    accepted = (
-        safe.join(rew, "doc_id")
-        .filter(F.col("n_kept") > 0)
-        .select(
-            "doc_id",
-            F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
-            .otherwise(F.col("kept_text"))
-            .alias("text"),
-            "lang",
-            "source",
-            (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
-        )
-        .withColumn("n_chars", F.length(F.coalesce("text", F.lit(""))).cast("long"))
-    )
-    try:
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(sink_path, f"epoch={int(epoch_id)}")
-        )
-        stream.select("gk").distinct().write.mode("overwrite").parquet(
-            os.path.join(index_path, f"epoch={int(epoch_id)}")
-        )
-    finally:
-        stream.unpersist()
-        safe.unpersist()
+    _ingest_step(batch, epoch_id, sink_path, index_path, checkpoint_tag, "gk long",
+                 partial(_span_cut, n=n, min_span=min_span))

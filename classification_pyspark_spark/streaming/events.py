@@ -126,6 +126,38 @@ def run_to_files(
     q.awaitTermination()
 
 
+def run_foreach_batch(stream_df: DataFrame, step, checkpoint_path: str) -> None:
+    """Drain a streaming frame through ``step(batch, epoch_id)`` with a
+    durable checkpoint and the available-now trigger: every micro-batch
+    currently in the source runs the step once, then the drain returns.
+    The step itself makes the result effectively-once (foreachBatch is
+    at-least-once: a crash before the checkpoint commits re-delivers
+    the epoch)."""
+    (
+        stream_df.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def refuse_foreign_checkpoint(state: str, prior: str | None, checkpoint_tag: str | None) -> None:
+    """Raise when ``state`` (an epoch-keyed output, named for the
+    message) was built under checkpoint ``prior`` but this stream runs
+    under ``checkpoint_tag``. Epoch ids are only monotonic WITHIN one
+    checkpoint, so a reset checkpoint over kept state would either drop
+    new epochs (ids restart at 0) or re-apply re-delivered history;
+    that state is refused loudly. An untagged side passes."""
+    if checkpoint_tag is not None and prior is not None and prior != checkpoint_tag:
+        raise RuntimeError(
+            f"{state} was built by checkpoint {prior!r} but this stream uses "
+            f"{checkpoint_tag!r}; epoch ids are not comparable across checkpoints. "
+            "Restore the original checkpoint or delete what this stream wrote to "
+            "rebuild from scratch."
+        )
+
+
 def running_user_stats(events: DataFrame, timeout_minutes: int | None = None) -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     a per-user running (count, sum, max) accumulator emitted on every
@@ -339,16 +371,12 @@ def maintain_user_stats_view(
     marker, invisible to parquet readers) and skipping any epoch that
     is already applied.
     """
-    (
-        events.writeStream.foreachBatch(
-            lambda batch, epoch_id: merge_stats_batch(
-                batch, epoch_id, view_path, checkpoint_tag=checkpoint_path
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    run_foreach_batch(
+        events,
+        lambda batch, epoch_id: merge_stats_batch(
+            batch, epoch_id, view_path, checkpoint_tag=checkpoint_path
+        ),
+        checkpoint_path,
     )
 
 
@@ -400,14 +428,7 @@ def merge_stats_batch(
     spark = batch.sparkSession
     marker = _read_marker(spark, view_path)
     if marker is not None:
-        prior_tag = marker.get("checkpoint")
-        if checkpoint_tag is not None and prior_tag is not None and prior_tag != checkpoint_tag:
-            raise RuntimeError(
-                f"view at {view_path!r} was built by checkpoint {prior_tag!r} but this "
-                f"stream uses {checkpoint_tag!r}; epoch ids are not comparable across "
-                "checkpoints. Restore the original checkpoint or delete the view to "
-                "rebuild from scratch."
-            )
+        refuse_foreign_checkpoint(f"view at {view_path!r}", marker.get("checkpoint"), checkpoint_tag)
         if epoch_id <= int(marker.get("epoch_id", -1)):
             return  # checkpoint replay of an epoch already merged
     part = batch.groupBy("user_id").agg(

@@ -323,3 +323,40 @@ def test_cutspans_index_probe_never_shuffles_the_index(spark, tmp_path_factory):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
+
+
+# Spark jobs of the epoch-1 step on a 100-doc batch (local[4]). Every
+# mode reads the index with the schema of the rows it writes, so no
+# schema-inference job runs, and the near-dup decision computes its
+# accepted ids once for both writes.
+STEP_JOBS = {"exact": 5, "neardup": 13, "cutspans": 13}
+
+
+@pytest.mark.parametrize("mode", sorted(STEP_JOBS))
+def test_ingest_step_releases_its_persists_and_bounds_its_jobs(
+    spark, sf_dir, tmp_path_factory, mode
+):
+    """The shared ingest step, once per mode: a first and a second
+    epoch each leave the session's persisted RDDs as they found them,
+    and the second epoch (which probes the index) runs no more Spark
+    jobs than measured, counted from the status store the way
+    ``bench.timed_rep`` counts a rep's jobs."""
+    import bench
+    from classification_pyspark_spark.streaming import corpus
+
+    step = {
+        "exact": corpus.ingest_batch,
+        "neardup": corpus.ingest_batch_neardup,
+        "cutspans": corpus.ingest_batch_cutspans,
+    }[mode]
+    base = tmp_path_factory.mktemp(f"step_{mode}")
+    sink, index = str(base / "sink"), str(base / "index")
+    docs = load_table(spark, sf_dir, "documents").limit(100)
+    for epoch in (0, 1):
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        jobs = bench._store(spark).jobsList(None)
+        first = 0 if jobs.isEmpty() else jobs.head().jobId() + 1
+        step(docs, epoch, sink, index, checkpoint_tag="ck")
+        n_jobs = len(bench._history(spark, first)[0])
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted, epoch
+    assert n_jobs <= STEP_JOBS[mode], (mode, n_jobs)
