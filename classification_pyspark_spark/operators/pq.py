@@ -13,21 +13,18 @@ instead of 32*D — 64x at (m=8, k=16) and 32x at (m=8, k=256) for
 pack codes into a binary column for the full ratio).
 
 Scoring is ADC (asymmetric distance computation): per query, a
-(m x k) table of subspace dot products is built once on the driver and
-shipped in the kernel closure; every stored code row folds to a score
-by ``m`` table lookups — an Arrow-batched numpy gather, no
-decompression of the corpus. ADC approximates the INNER PRODUCT: it
-equals cosine only for unit-norm inputs — L2-normalize the corpus and
-queries upstream (``similarity.normalize_expr``) when cosine ranking
-is the contract. A query vector that is also in the corpus ranks
-itself first, as in any ANN search; exclude it downstream if unwanted.
-
-Scale shape: codebooks/tables are tiny closure state; encode and score
-are single-pass Arrow-batched stages over the codes with per-batch
-top-k reduction inside the kernel (only shortlist-sized survivors per
-batch leave the executors, same discipline as
-``similarity.knn_bruteforce``); the final reduce is a window over
-per-batch survivors, never the corpus.
+(m x k) table of subspace dot products is built once on the driver;
+every stored code row folds to a score by ``m`` table lookups — an
+Arrow-batched numpy gather, no decompression of the corpus. The gather
+is the score of ``similarity``'s one top-k scan (a single cell probed
+by every query), so only shortlist-sized survivors per batch leave the
+executors and a query-keyed window ranks them. ADC approximates the
+INNER PRODUCT: it equals cosine only for unit-norm inputs — L2-normalize
+the corpus and queries upstream (``similarity.normalize_expr``) when
+cosine ranking is the contract. Unlike the cosine searchers, PQ does
+not exclude the query itself: a query vector that is also in the
+corpus ranks itself first, as in any ANN search; exclude it downstream
+if unwanted. An empty query set is an error.
 """
 
 from __future__ import annotations
@@ -37,10 +34,19 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .similarity import _as_double, collect_vector_sample, kmeans_numpy
+from .similarity import (
+    SEED,
+    TRAIN_ROWS,
+    _as_double,
+    _matrix,
+    _query_rows,
+    _topk_scan,
+    collect_vector_sample,
+    cosine_expr,
+    kmeans_numpy,
+)
 
 
 def fit_pq_codebooks(
@@ -48,12 +54,10 @@ def fit_pq_codebooks(
     vec_col: str,
     m: int = 8,
     k: int = 16,
-    seed: int = 42,
-    max_train_rows: int = 4096,
 ) -> np.ndarray:
     """Per-subspace codebooks, shape (m, k, D/m). Deterministic for a
-    given sample and seed. D must divide evenly by ``m``."""
-    X = collect_vector_sample(df, vec_col, max_train_rows, "PQ codebooks")
+    given sample. D must divide evenly by ``m``."""
+    X = collect_vector_sample(df, vec_col, TRAIN_ROWS, "PQ codebooks")
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"embedding dim {dim} is not divisible by m={m} subspaces")
@@ -62,7 +66,7 @@ def fit_pq_codebooks(
     for j in range(m):
         # distinct seed per subspace so identical subspace data still
         # gets independent kmeans++ draws
-        cb = kmeans_numpy(X[:, j * sub : (j + 1) * sub], k, seed + j)
+        cb = kmeans_numpy(X[:, j * sub : (j + 1) * sub], k, SEED + j)
         books[j, : len(cb)] = cb
         if len(cb) < k:  # fewer samples than codes: repeat last centroid
             books[j, len(cb) :] = cb[-1]
@@ -78,7 +82,7 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str, books: np.ndarray) -> Da
 
     @pandas_udf("array<int>")
     def enc(v: pd.Series) -> pd.Series:
-        V = np.stack(v.to_numpy()).astype(np.float64)  # (n, D)
+        V = _matrix(v)  # (n, D)
         n = len(V)
         S = V.reshape(n, m, sub)
         # d2[n, j, k] = |s|^2 - 2 s·c + |c|^2 ; argmin over k
@@ -118,81 +122,34 @@ def pq_topk(
     are exact cosine.
     """
     m, kk, sub = books.shape
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(F.col(vec_col)))
-        .collect()
-    )
-    if not q_rows:
+    q_ids, Q = _query_rows(queries, id_col, vec_col)
+    if not q_ids:
         raise ValueError("cannot score PQ top-k: query set has no non-null vectors")
-    q_ids = [r[0] for r in q_rows]
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     # per-query subspace dot tables: tables[q, j, code] = q_j · c_{j,code}
     tables = np.einsum("qjs,jks->qjk", Q.reshape(len(Q), m, sub), books)
+    jj = np.arange(m)
+
+    def prep(pdf):
+        C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
+        gather = lambda sel, qidx: np.stack(  # noqa: E731
+            [tables[qi][jj, C[sel]].sum(axis=1) for qi in qidx], axis=1
+        )
+        return pdf["id"].to_numpy(), np.zeros(len(C), np.int64), gather
 
     shortlist_k = max(k, rerank) if rerank else k
-    id_type = codes_df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("__score", T.DoubleType()),
-        ]
-    )
-
-    def score_batches(it):
-        jj = np.arange(m)
-        top = shortlist_k
-        for pdf in it:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
-            nids = pdf[id_col].to_numpy()
-            qcol, ncol, scol = [], [], []
-            for qi, qid in enumerate(q_ids):
-                col = tables[qi][jj, C].sum(axis=1)
-                # deterministic per-batch top-k under (score desc, id
-                # asc): the union of per-batch top-ks under a total
-                # order contains the global top-k, so the final window
-                # reduction is exact
-                order = np.lexsort((nids, -col))[:top]
-                qcol.extend([qid] * len(order))
-                ncol.append(nids[order])
-                scol.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": qcol,
-                    "neighbor_id": np.concatenate(ncol),
-                    "__score": np.concatenate(scol),
-                }
-            )
-
-    survivors = codes_df.mapInPandas(score_batches, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("neighbor_id"))
-    adc = (
-        survivors.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= shortlist_k)
-    )
+    rows = codes_df.select(F.col(id_col).alias("id"), "codes")
+    adc = _topk_scan(rows, q_ids, None, prep, shortlist_k, exclude_self=False)
     if not rerank:
-        return adc.select(
-            "query_id", "neighbor_id", F.round("__score", 4).alias("score"), "rank"
-        )
+        return adc.select("query_id", "neighbor_id", F.round("__s", 4).alias("score"), "rank")
     if vectors_df is None:
         raise ValueError("rerank requires vectors_df (the full-precision vectors)")
     # exact cosine on the R*|Q|-row shortlist only
-    from .similarity import cosine_expr
-
     vecs = vectors_df.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__nv")
     )
     qvecs = vectors_df.sparkSession.createDataFrame(
         [(qid, [float(x) for x in Q[i]]) for i, qid in enumerate(q_ids)],
-        T.StructType(
-            [
-                T.StructField("query_id", id_type),
-                T.StructField("__qv", T.ArrayType(T.DoubleType())),
-            ]
-        ),
+        f"query_id {codes_df.schema[id_col].dataType.simpleString()}, __qv array<double>",
     )
     exact = (
         adc.select("query_id", "neighbor_id")
@@ -204,9 +161,9 @@ def pq_topk(
             cosine_expr(F.col("__qv"), F.col("__nv")).alias("__score"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("neighbor_id"))
     return (
-        exact.withColumn("rank", F.row_number().over(w2).cast("int"))
+        exact.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.round("__score", 4).alias("score"), "rank")
     )

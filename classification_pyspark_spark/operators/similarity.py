@@ -1,17 +1,41 @@
 """Embedding similarity search (north-star extension; SURVEY.md §7
 Phase 5c).
 
-- Brute-force cosine top-k: the correctness baseline. The dot product
-  is ``aggregate(zip_with(a, b, *), +)`` — built-in higher-order
-  functions, JVM-side, no UDF. Queries are broadcast so the big side
-  never shuffles.
-- LSH-bucketed variant: random-hyperplane signs -> bucket id; only
-  in-bucket pairs are compared (the 100 TB path: shuffle on bucket id
-  instead of an all-pairs cross join). Hyperplane i's component j is
-  the deterministic pseudo-random ``sin(i * 1000 + j)`` so engine and
-  oracle derive identical planes without an RNG.
-- Cosine near-dup pairs: LSH-blocked pairwise cosine above a
-  threshold — embedding-space analogue of minhash dedup.
+Two numpy kernels serve every searcher and pair operator here; the
+Spark plans around them only route rows to them and merge results.
+
+- **One top-k scan** (``_topk_scan``): a single ``mapInPandas`` pass
+  over the corpus. Each Arrow batch's rows fall into cells; each cell
+  yields ONE block of scores against the queries that probe it, and
+  each query keeps its top rows under the total order (score desc,
+  id asc) — so the union of per-batch survivors holds the global
+  top-k and a query-keyed window ranks it exactly. The corpus is
+  never shuffled or joined; queries are parameter-sized closure state.
+  ``knn_bruteforce`` is the one-cell case (every query scores every
+  row); ``knn_ivf`` cells each batch's rows by nearest centroid;
+  ``knn_ivf_indexed`` reads the stored ``cluster`` of a
+  partition-pruned index; ``pq.pq_topk`` scores by its ADC table
+  gather. The query side's probe (nearest ``n_probe`` cells) is
+  ``_probe_cells``.
+- **One cell kernel** (``_cell_cosines``): the cosine block of two
+  row sets by blocked GEMM, 1024 rows per block — the
+  relation-partitioned kernel pattern of Tensor Relational Algebra
+  (VLDB 2021, PAPERS.md). The LSH top-k (``knn_lsh``: per-row top-k
+  both ways), the in-group pairs (``cosine_pairs_in_groups``: upper
+  triangle at or above the threshold) and the incremental pairs
+  (``cosine_incremental_pairs``: the new/old keep rule) differ only
+  in what they select from its blocks.
+
+Degenerate vectors follow one rule everywhere: a NULL or zero-norm
+vector has no defined cosine, so it is never a neighbor and, as a
+query, returns no rows; an empty query set returns an empty frame
+with the output schema ``(query_id, neighbor_id, cosine, rank)``.
+
+LSH buckets are random-hyperplane signs; hyperplane i's component j
+is the deterministic pseudo-random ``sin(i * 1000 + j)``, so engine
+and oracle derive identical planes without an RNG. The JVM
+expressions (``cosine_expr``, ``lsh_bucket_expr``) stay as the
+references the kernels are tested against.
 """
 
 from __future__ import annotations
@@ -26,6 +50,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 N_HYPERPLANES = 8
+SEED = 42  # quantizer fits (IVF centroids, PQ codebooks)
+KMEANS_ITERS = 10
+TRAIN_ROWS = 4096  # quantizer training sample
+BLOCK = 1024  # GEMM block rows of the cell kernel
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -62,20 +90,25 @@ def normalize_expr(col: Column) -> Column:
     return F.transform(col, lambda x: F.try_divide(x.cast("double"), n))
 
 
-# ---------------------------------------------------------------------------
-# Vectorized (Arrow + numpy) kernels — the hot-path implementations.
-# Spark's higher-order-function lambdas evaluate interpreted per array
-# element; for wide embeddings a batched numpy matmul is 10-100x
-# faster. Arrow ships the array columns zero-copy-ish into pandas.
-# ---------------------------------------------------------------------------
+def _matrix(vectors: pd.Series) -> np.ndarray:
+    """(rows, dim) float64 matrix of an Arrow array column."""
+    return np.stack(vectors.to_numpy()).astype(np.float64)
+
+
+def _frame(cols: list[str], parts: list[tuple]) -> pd.DataFrame:
+    """One frame of the per-block column tuples ``parts``."""
+    if not parts:
+        return pd.DataFrame({c: [] for c in cols})
+    return pd.DataFrame({c: np.concatenate([p[i] for p in parts]) for i, c in enumerate(cols)})
+
+
 def _cosine_pudf(a: Column, b: Column) -> Column:
-    """Batched cosine kernel (created lazily — pandas_udf needs an
-    active session to parse its return type)."""
+    """Batched per-pair cosine kernel (created lazily — pandas_udf
+    needs an active session to parse its return type)."""
 
     @pandas_udf("double")
     def cos(x: pd.Series, y: pd.Series) -> pd.Series:
-        A = np.stack(x.to_numpy()).astype(np.float64)
-        B = np.stack(y.to_numpy()).astype(np.float64)
+        A, B = _matrix(x), _matrix(y)
         num = np.einsum("ij,ij->i", A, B)
         den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
         # zero-norm -> NULL, matching the JVM divide-by-zero semantics;
@@ -88,24 +121,104 @@ def _cosine_pudf(a: Column, b: Column) -> Column:
     return cos(a, b)
 
 
-def _planes(dim: int, n_planes: int = N_HYPERPLANES) -> np.ndarray:
-    return np.array(
-        [[math.sin(p * 1000 + j) for j in range(dim)] for p in range(n_planes)]
+# ---------------------------------------------------------------------------
+# The top-k scan.
+# ---------------------------------------------------------------------------
+def _query_rows(queries: DataFrame, id_col: str, vec_col: str) -> tuple[list, np.ndarray]:
+    """Ids and float64 matrix of the non-NULL query vectors, collected
+    to the driver (query sets are parameter-sized)."""
+    rows = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).collect()
+    return [r[0] for r in rows], np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def _unit_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """``(ids, Q, Q / |Q|)`` of the queries with a defined cosine:
+    zero-norm queries are dropped, so they return no rows."""
+    ids, Q = _query_rows(queries, id_col, vec_col)
+    if not ids:
+        return ids, Q, Q
+    norms = np.linalg.norm(Q, axis=1)
+    ok = norms > 0
+    return [i for i, o in zip(ids, ok) if o], Q[ok], Q[ok] / norms[ok, None]
+
+
+def _topk_scan(
+    rows: DataFrame, q_ids: list, probes, prep, k: int, exclude_self: bool = True
+) -> DataFrame:
+    """The one top-k scan: ``(query_id, neighbor_id, __s, rank)`` of
+    each query's ``k`` best ``rows`` under (``__s`` desc, neighbor id
+    asc).
+
+    ``rows`` carries an ``id`` column; ``prep(pdf)`` maps one Arrow
+    batch to ``(ids, cells, score)`` where ``score(sel, qidx)`` is the
+    (selected rows x listed queries) score block. ``probes[q]`` lists
+    the cells query ``q`` scores (``None``: every query probes cell
+    0). Per batch and cell each query keeps its top ``k`` (``k + 1``
+    with ``exclude_self``: a query may see itself) by ``lexsort`` — a
+    deterministic cut under the same total order as the final window,
+    so the window's top ``k`` over the union is exact; argpartition
+    alone would drop boundary ties arbitrarily."""
+    by_cell: dict[int, list[int]] = {}
+    for qi, cells in enumerate([[0]] * len(q_ids) if probes is None else probes):
+        for c in cells:
+            by_cell.setdefault(int(c), []).append(qi)
+    top = k + 1 if exclude_self else k
+
+    def scan(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids, cells, score = prep(pdf)
+            parts = []
+            for cell in np.unique(cells):
+                qidx = by_cell.get(int(cell))
+                if not qidx:
+                    continue
+                sel = cells == cell
+                S, sub = score(sel, qidx), ids[sel]
+                for j, qi in enumerate(qidx):
+                    order = np.lexsort((sub, -S[:, j]))[:top]
+                    parts.append(([q_ids[qi]] * len(order), sub[order], S[order, j]))
+            if parts:
+                yield _frame(["query_id", "neighbor_id", "__s"], parts)
+
+    t = rows.schema["id"].dataType.simpleString()
+    scored = rows.mapInPandas(scan, f"query_id {t}, neighbor_id {t}, __s double")
+    if exclude_self:
+        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("__s"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _cosine_topk(rows: DataFrame, q_ids: list, Qn: np.ndarray, probes, k: int, cell_of=None):
+    """Cosine top-k of unit queries ``Qn`` over ``rows`` = ``(id, v[,
+    cluster])`` through the scan: zero-norm rows are dropped per batch
+    (never neighbors), and ``cell_of(pdf, V)`` cells the rest (default:
+    one cell)."""
+    if not q_ids:
+        t = rows.schema["id"].dataType.simpleString()
+        return rows.sparkSession.createDataFrame(
+            [], f"query_id {t}, neighbor_id {t}, cosine double, rank int"
+        )
+
+    def prep(pdf):
+        V = _matrix(pdf["v"])
+        norms = np.linalg.norm(V, axis=1)
+        ok = norms > 0
+        if not ok.all():
+            V, norms, pdf = V[ok], norms[ok], pdf[ok]
+        Vn = V / norms[:, None]
+        cells = np.zeros(len(V), np.int64) if cell_of is None else cell_of(pdf, V)
+        return pdf["id"].to_numpy(), cells, lambda sel, qidx: Vn[sel] @ Qn[qidx].T
+
+    ranked = _topk_scan(rows, q_ids, probes, prep, k)
+    return ranked.select("query_id", "neighbor_id", F.round("__s", 4).alias("cosine"), "rank")
+
+
+def _vector_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
-
-
-def make_lsh_bucket_pudf(dim: int, n_planes: int = N_HYPERPLANES):
-    """Vectorized bucket assignment: V @ P.T signs -> packed bits."""
-    planes_t = _planes(dim, n_planes).T  # (dim, n_planes)
-    powers = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("int")
-    def bucket(v: pd.Series) -> pd.Series:
-        V = np.stack(v.to_numpy()).astype(np.float64)
-        bits = (V @ planes_t) > 0
-        return pd.Series((bits @ powers).astype(np.int32))
-
-    return bucket
 
 
 def knn_bruteforce(
@@ -115,102 +228,60 @@ def knn_bruteforce(
     vec_col: str,
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query row.
-
-    Scale shape: the (small, parameter-sized) query set becomes a numpy
-    matrix shipped in the ``mapInPandas`` closure; the corpus is
-    scanned ONCE, never shuffled — each Arrow batch is one matmul
-    against all queries, and only the per-batch top-k survivors (k
-    rows x n_queries per batch) leave the executors. A final window
-    reduces partial top-ks to the global top-k. NULL / zero-norm
-    vectors have no defined cosine and are excluded.
+    """Exact top-k cosine neighbors for each query row: the scan with
+    one cell, so each Arrow batch is one matmul against all queries and
+    only k+1 rows per query and batch leave the executors.
 
     Output: (query_id, neighbor_id, cosine rounded 4, rank).
     """
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
+    q_ids, _, Qn = _unit_queries(queries, id_col, vec_col)
+    return _cosine_topk(_vector_rows(df, id_col, vec_col), q_ids, Qn, None, k)
 
-    from pyspark.sql import types as T
 
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("__cos", T.DoubleType()),
-        ]
-    )
-    valid = df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), F.col(vec_col))
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), F.col(vec_col))
-        .collect()
-    )
-    if not q_rows:
-        empty = valid.sparkSession.createDataFrame([], schema)
-        return empty.select(
-            "query_id",
-            "neighbor_id",
-            F.col("__cos").alias("cosine"),
-            F.lit(1).alias("rank"),
-        )
-    q_ids = [r[0] for r in q_rows]
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    def score_batches(it):
-        for pdf in it:
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            ok = norms > 0
-            if not ok.all():
-                V, norms, pdf = V[ok], norms[ok], pdf.iloc[ok]
-            if len(pdf) == 0:
-                continue
-            Vn = V / norms[:, None]
-            S = Vn @ Qn.T  # (batch, n_queries)
-            nids = pdf[id_col].to_numpy()
-            top = min(k + 1, len(nids))  # +1: a query may see itself
-            qcol, ncol, ccol = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = S[:, j]
-                # deterministic per-batch top-k under (cos desc,
-                # id asc): the union of per-batch top-ks under a
-                # total order contains the global top-k, so the
-                # final window reduction is exact — argpartition
-                # alone would drop boundary ties arbitrarily
-                order = np.lexsort((nids, -col))[:top]
-                qcol.extend([qid] * len(order))
-                ncol.append(nids[order])
-                ccol.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": qcol,
-                    "neighbor_id": np.concatenate(ncol),
-                    "__cos": np.concatenate(ccol),
-                }
-            )
-
-    scored = valid.mapInPandas(score_batches, schema)
-    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("__cos", 4).alias("cosine"), "rank")
+# ---------------------------------------------------------------------------
+# LSH buckets.
+# ---------------------------------------------------------------------------
+def _planes(dim: int) -> np.ndarray:
+    return np.array(
+        [[math.sin(p * 1000 + j) for j in range(dim)] for p in range(N_HYPERPLANES)]
     )
 
 
-def lsh_bucket_expr(vec_col: Column, dim: int, n_planes: int = N_HYPERPLANES) -> Column:
-    """Random-hyperplane LSH bucket id (0..2^n_planes-1) with
+def make_lsh_bucket_pudf(dim: int):
+    """Vectorized bucket assignment: V @ P.T signs -> packed bits."""
+    planes_t = _planes(dim).T  # (dim, N_HYPERPLANES)
+    powers = (1 << np.arange(N_HYPERPLANES)).astype(np.int64)
+
+    @pandas_udf("int")
+    def bucket(v: pd.Series) -> pd.Series:
+        bits = (_matrix(v) @ planes_t) > 0
+        return pd.Series((bits @ powers).astype(np.int32))
+
+    return bucket
+
+
+def lsh_bucket_expr(vec_col: Column, dim: int) -> Column:
+    """Random-hyperplane LSH bucket id (0..2^N_HYPERPLANES-1) with
     deterministic sin-derived planes: plane p, component j =
     sin(p * 1000 + j)."""
     v = _as_double(vec_col)
     bucket = F.lit(0)
-    for p in range(n_planes):
+    for p in range(N_HYPERPLANES):
         plane = F.array(*[F.sin(F.lit(float(p * 1000 + j))) for j in range(dim)])
         proj = dot_expr(v, plane)
         bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket.cast("int")
+
+
+def lsh_base_frame(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
+    """The ``(id, v, bucket)`` frame shared by the pair operators and
+    the persistent index: double-cast vector + random-hyperplane LSH
+    bucket (vectorized assignment)."""
+    return df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        _as_double(F.col(vec_col)).alias("v"),
+        make_lsh_bucket_pudf(dim)(_as_double(F.col(vec_col))).alias("bucket"),
+    )
 
 
 def lsh_buckets(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
@@ -219,36 +290,78 @@ def lsh_buckets(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame
     return df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), bucket.alias("bucket"))
 
 
-def _triangle_tasks(
-    df: DataFrame, id_col: str, vec_col: str, dim: int, max_bucket_size: int
-) -> DataFrame:
-    """The bounded task frame shared by the in-bucket GEMM kernels
-    (``cosine_dup_pairs``, ``knn_lsh``): triangle split for oversized
-    buckets — nsplit = ceil(size/cap) sub-groups per bucket; each row
-    (sub-group g) is replicated to the nsplit task cells of the
-    upper-triangle grid that involve g — (i, g) for i < g and (g, j)
-    for j >= g — so every unordered pair meets in exactly one
-    (bucket, ti, tj) task and task memory is bounded at ~2·cap rows.
-    Bucket sizes are a bucket-count-sized aggregate; AQE broadcasts
-    the join. The base frame is persisted (tracked): the sizes
-    aggregate AND the task fan-out both read it — without the persist
-    the pandas bucket-assign UDF runs twice over every vector
-    (measured +0.7s at sf1 for a 1.2s query); the frame is the narrow
-    (id, v, bucket) projection, the same thing the pair shuffle
-    carries anyway."""
-    from .caching import track
-
-    return _triangle_tasks_from_base(
-        track(lsh_base_frame(df, id_col, vec_col, dim)), max_bucket_size
-    )
+def build_cosine_lsh_index(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    path: str,
+    mode: str = "overwrite",
+) -> None:
+    """Materialize the LSH-bucketed vector frame as a parquet dedup
+    index, partitioned by bucket — the embedding twin of
+    ``build_minhash_index``. A new batch's dedup join filters on the
+    batch's bucket values, so partition pruning bounds the index scan
+    to the batch's bucket NEIGHBORHOODS, not the corpus;
+    ``mode="append"`` is the per-batch update (append-after-dedup ==
+    rebuild, property-tested)."""
+    lsh_base_frame(df, id_col, vec_col, dim).write.mode(mode).partitionBy(
+        "bucket"
+    ).parquet(path)
 
 
-def _triangle_tasks_from_base(base: DataFrame, max_bucket_size: int) -> DataFrame:
-    """``_triangle_tasks`` over a caller-supplied ``(id, v, bucket)``
-    frame — the grouping key need not be an LSH bucket (semantic-dedup
-    passes k-means-style cluster assignments). ``base`` must already
-    be persisted (tracked): the sizes aggregate AND the task fan-out
-    both read it."""
+# ---------------------------------------------------------------------------
+# The cell kernel and its task grids.
+# ---------------------------------------------------------------------------
+def _cell_cosines(VA: np.ndarray, VB: np.ndarray, rep: np.ndarray | None = None):
+    """The one cell kernel: yields ``(s, C)`` with ``C[i, j]`` the
+    cosine of rows ``s + i`` of ``VA`` and ``j`` of ``VB``, by one GEMM
+    per ``BLOCK`` rows of ``VA``; ``-inf`` where either norm is 0.
+    ``rep`` (``_dup_rep`` of ``VB``) gives each duplicate column its
+    first occurrence's computed bits (see ``knn_lsh``)."""
+    na = np.linalg.norm(VA, axis=1)
+    nb = na if VB is VA else np.linalg.norm(VB, axis=1)
+    dups = None if rep is None else rep != np.arange(len(rep))
+    for s in range(0, len(VA), BLOCK):
+        G = VA[s : s + BLOCK] @ VB.T
+        if dups is not None:
+            G[:, dups] = G[:, rep[dups]]
+        D = np.outer(na[s : s + BLOCK], nb)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            C = np.where(D > 0, G / D, -np.inf)
+        yield s, C
+
+
+def _dup_rep(V: np.ndarray) -> np.ndarray | None:
+    """First-occurrence representative per row, or None if provably
+    duplicate-free. Bit-equal rows sum to bit-equal checksums (row-wise
+    reduce order is fixed), so a cell whose sorted checksums have no
+    adjacent equals cannot contain duplicates; on checksum collision,
+    confirm with the exact (sorted) row comparison."""
+    ss = np.sort(V.sum(axis=1))
+    if not (ss[1:] == ss[:-1]).any():
+        return None
+    _, binv = np.unique(V, axis=0, return_inverse=True)
+    first = np.full(binv.max() + 1, len(binv), dtype=np.int64)
+    np.minimum.at(first, binv, np.arange(len(binv)))
+    rep = first[binv]
+    return rep if (rep != np.arange(len(binv))).any() else None
+
+
+def _triangle_tasks(base: DataFrame, max_bucket_size: int) -> DataFrame:
+    """The bounded task frame of the in-group GEMM kernels over a
+    persisted (tracked) ``(id, v, bucket)`` frame — the key need not be
+    an LSH bucket (semantic dedup passes cluster assignments).
+    Oversized buckets are triangle-split: nsplit = ceil(size/cap)
+    sub-groups ``g`` per bucket; each row is replicated to the nsplit
+    cells of the upper-triangle grid that involve its sub-group — (i,
+    g) for i < g and (g, j) for j >= g — so every unordered pair meets
+    in exactly one (bucket, ti, tj) task and task memory is bounded at
+    ~2·cap rows. Bucket sizes are a bucket-count-sized aggregate; AQE
+    broadcasts the join. The sizes aggregate AND the task fan-out both
+    read ``base``: without its persist the pandas bucket-assign UDF
+    runs twice over every vector (measured +0.7s at sf1 for a 1.2s
+    query)."""
     sizes = base.groupBy("bucket").agg(F.count(F.lit(1)).alias("__bn"))
     cap = max(int(max_bucket_size), 2)
     return (
@@ -272,6 +385,51 @@ def _triangle_tasks_from_base(base: DataFrame, max_bucket_size: int) -> DataFram
     )
 
 
+def _triangle_cell(pdf: pd.DataFrame):
+    """``(ids_a, VA, ids_b, VB)`` of one triangle task: sub-group ``ti``
+    against sub-group ``tj``, or a diagonal task's rows against
+    themselves (``VB is VA``). None when no pair can meet."""
+    if len(pdf) < 2:
+        return None
+    ti, tj = int(pdf["ti"].iat[0]), int(pdf["tj"].iat[0])
+    A = pdf if ti == tj else pdf[pdf["g"] == ti]
+    B = A if ti == tj else pdf[pdf["g"] == tj]
+    if not len(A) or not len(B):
+        return None
+    VA = _matrix(A["v"])
+    return A["id"].to_numpy(), VA, B["id"].to_numpy(), VA if B is A else _matrix(B["v"])
+
+
+def _pairs_above(tasks: DataFrame, id_type: str, min_cosine: float, cell) -> DataFrame:
+    """``(id_a < id_b, cosine rounded 4)`` of the pairs with
+    ``round(cos, 4) >= min_cosine`` in every (bucket, ti, tj) task.
+    ``cell(pdf)`` gives the task's ``(ids_a, VA, ids_b, VB, keep)`` or
+    None; ``keep(i, j, ia, ib)`` masks which candidate pairs (row i of
+    A, row j of B) to emit. The kernel pre-filters with a 1e-4 slack
+    and the exact rounded threshold stays JVM-side, so a pair on a
+    round(_, 4) half-ulp boundary cannot be lost to the GEMM's
+    floating-point order."""
+    slack = min_cosine - 1e-4
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        parts, c = [], cell(pdf)
+        if c is not None:
+            ids_a, VA, ids_b, VB, keep = c
+            for s, C in _cell_cosines(VA, VB):
+                ii, jj = np.nonzero(C >= slack)
+                ia, ib = ids_a[ii + s], ids_b[jj]
+                m = keep(ii + s, jj, ia, ib)
+                parts.append((np.minimum(ia[m], ib[m]), np.maximum(ia[m], ib[m]), C[ii[m], jj[m]]))
+        return _frame(["id_a", "id_b", "__cos"], parts)
+
+    survivors = tasks.groupBy("bucket", "ti", "tj").applyInPandas(
+        kernel, schema=f"id_a {id_type}, id_b {id_type}, __cos double"
+    )
+    return survivors.select("id_a", "id_b", F.round("__cos", 4).alias("cosine")).filter(
+        F.col("cosine") >= min_cosine
+    )
+
+
 def knn_lsh(
     df: DataFrame,
     id_col: str,
@@ -288,15 +446,16 @@ def knn_lsh(
 
     Output: (query_id, neighbor_id, cosine rounded 4, rank).
 
-    The vectorized path reuses the ``cosine_dup_pairs`` triangle task
-    grid and computes each cell's scores with one blocked GEMM, but
-    emits only each query's IN-CELL top-k — so the exchange after the
-    kernel carries ≤ k·cells candidate rows per query instead of the
-    self-join's bucket² rows (each dragging BOTH vectors). A final
-    query-keyed window merges cell partials into the global top-k.
-    In-kernel ties are broken by ascending neighbor id (rows sorted by
-    id + stable argsort), the same total order as the merge window, so
-    the per-cell truncation never drops a pair the global rank needed.
+    The vectorized path runs the cell kernel on the triangle task grid
+    (oversized buckets split as in ``cosine_dup_pairs``) but emits
+    only each query's IN-CELL top-k, both directions — so the exchange
+    after the kernel carries ≤ k·cells candidate rows per query
+    instead of the self-join's bucket² rows (each dragging BOTH
+    vectors). A final query-keyed window merges cell partials into the
+    global top-k. In-kernel ties are broken by ascending neighbor id
+    (rows sorted by id + stable argsort), the same total order as the
+    merge window, so the per-cell truncation never drops a pair the
+    global rank needed.
     For the id tie-break to see a tie, bit-identical neighbor vectors
     must receive bit-identical scores — which a raw BLAS GEMM does not
     guarantee: the tiled microkernel accumulates edge columns in a
@@ -304,22 +463,19 @@ def knn_lsh(
     apart depending on COLUMN POSITION (observed: a duplicate pair
     straddling a top-k boundary picked the duplicate with the higher
     id, diverging from the join form). The kernel therefore
-    canonicalizes duplicate neighbor COLUMNS: a cheap exact pre-check
-    (sorted per-row float checksums — bit-equal rows always produce
-    bit-equal sums, so no duplicate can slip past) gates a slow path
+    canonicalizes duplicate neighbor COLUMNS (``_dup_rep``): a cheap
+    exact pre-check (sorted per-row float checksums) gates a slow path
     that overwrites each duplicate column's scores with its first
     occurrence's computed bits. Duplicate-free cells (the norm) run
-    the original pure-BLAS path at zero extra cost — the bit-exact
-    alternatives measured badly at sf0.1: a sequential per-dimension
-    fold ~7x slower, an ``np.unique(axis=0)`` + column-gather
-    canonicalization ~2.7x. Mathematical ties between NON-identical
-    vectors can still wobble an ulp vs the SQL fold; that is
-    measure-zero for real embeddings and truncation stays
-    self-consistent either way (the merge window orders by the same
-    emitted values).
-    Oversized buckets split exactly as in ``cosine_dup_pairs``
-    (``max_bucket_size``); the non-vectorized form keeps the join +
-    window plan."""
+    the pure-BLAS path at zero extra cost — the bit-exact alternatives
+    measured badly at sf0.1: a sequential per-dimension fold ~7x
+    slower, an ``np.unique(axis=0)`` + column-gather canonicalization
+    ~2.7x. Mathematical ties between NON-identical vectors can still
+    wobble an ulp vs the SQL fold; that is measure-zero for real
+    embeddings and truncation stays self-consistent either way (the
+    merge window orders by the same emitted values).
+    ``vectorized=False`` is the join + window reference form."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
     if not vectorized:
         bucket = lsh_bucket_expr(F.col(vec_col), dim)
         base = df.filter(F.col(vec_col).isNotNull()).select(
@@ -329,107 +485,40 @@ def knn_lsh(
         )
         a = base.select(F.col("id").alias("query_id"), F.col("v").alias("qv"), "bucket")
         b = base.select(F.col("id").alias("neighbor_id"), F.col("v").alias("nv"), "bucket")
-        cos = cosine_expr(F.col("qv"), F.col("nv"))
-        scored = (
+        candidates = (
             a.join(b, on="bucket")
             .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", cos.alias("__cos"))
+            .select("query_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("nv")).alias("__cos"))
             .filter(F.col("__cos").isNotNull())
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", F.round("__cos", 4).alias("cosine"), "rank")
+    else:
+        from .caching import track
+
+        tasks = _triangle_tasks(track(lsh_base_frame(df, id_col, vec_col, dim)), max_bucket_size)
+        id_type = df.schema[id_col].dataType.simpleString()
+
+        def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+            parts, cell = [], _triangle_cell(pdf.sort_values("id"))
+            if cell is not None:
+                ids_a, VA, ids_b, VB = cell
+                within = VB is VA
+                sides = [(VA, ids_a, VB, ids_b)] + ([] if within else [(VB, ids_b, VA, ids_a)])
+                for Vq, idq, Vn, idn in sides:
+                    kk = min(k, len(idn))
+                    for s, C in _cell_cosines(Vq, Vn, _dup_rep(Vn)):
+                        if within:  # a row is not its own neighbor
+                            rr = np.arange(s, s + len(C))
+                            C[rr - s, rr] = -np.inf
+                        order = np.argsort(-C, axis=1, kind="stable")[:, :kk]
+                        rows, cols = np.repeat(np.arange(len(C)), order.shape[1]), order.ravel()
+                        score = C[rows, cols]
+                        keep = np.isfinite(score)
+                        parts.append((idq[rows[keep] + s], idn[cols[keep]], score[keep]))
+            return _frame(["query_id", "neighbor_id", "__cos"], parts)
+
+        candidates = tasks.groupBy("bucket", "ti", "tj").applyInPandas(
+            cell_topk, schema=f"query_id {id_type}, neighbor_id {id_type}, __cos double"
         )
-
-    tasks = _triangle_tasks(df, id_col, vec_col, dim, max_bucket_size)
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "__cos": []})
-        if len(pdf) < 2:
-            return empty
-        pdf = pdf.sort_values("id")  # stable argsort ties -> ascending id
-        ti, tj = int(pdf["ti"].iat[0]), int(pdf["tj"].iat[0])
-        within = ti == tj
-        if within:
-            A = B = pdf
-        else:
-            A = pdf[pdf["g"] == ti]
-            B = pdf[pdf["g"] == tj]
-            if len(A) == 0 or len(B) == 0:
-                return empty
-        VA = np.stack(A["v"].to_numpy()).astype(np.float64)
-        VB = VA if within else np.stack(B["v"].to_numpy()).astype(np.float64)
-        ids_a = A["id"].to_numpy()
-        ids_b = ids_a if within else B["id"].to_numpy()
-
-        na = np.linalg.norm(VA, axis=1)
-        nb = na if within else np.linalg.norm(VB, axis=1)
-
-        def dup_rep(V):
-            """first-occurrence representative per row, or None if
-            provably duplicate-free. Bit-equal rows sum to bit-equal
-            checksums (row-wise reduce order is fixed), so a cell
-            whose sorted checksums have no adjacent equals cannot
-            contain duplicates; on checksum collision, confirm with
-            the exact (sorted) row comparison."""
-            s = V.sum(axis=1)
-            ss = np.sort(s)
-            if not (ss[1:] == ss[:-1]).any():
-                return None
-            _, binv = np.unique(V, axis=0, return_inverse=True)
-            first = np.full(binv.max() + 1, len(binv), dtype=np.int64)
-            np.minimum.at(first, binv, np.arange(len(binv)))
-            rep = first[binv]
-            return rep if (rep != np.arange(len(binv))).any() else None
-
-        q_out, n_out, c_out = [], [], []
-
-        def emit(Vq, nq, idq, Vn, nn_, idn, exclude_diag: bool):
-            blk = 1024
-            kk = min(k, len(idn))
-            rep = dup_rep(Vn)
-            for s in range(0, len(Vq), blk):
-                G = Vq[s : s + blk] @ Vn.T
-                if rep is not None:
-                    # bit-canonicalize duplicate columns (see docstring)
-                    dups = rep != np.arange(len(rep))
-                    G[:, dups] = G[:, rep[dups]]
-                D = np.outer(nq[s : s + blk], nn_)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    C = np.where(D > 0, G / D, -np.inf)
-                if exclude_diag:
-                    rr = np.arange(s, min(s + blk, len(Vq)))
-                    C[rr - s, rr] = -np.inf
-                order = np.argsort(-C, axis=1, kind="stable")[:, :kk]
-                rows = np.repeat(np.arange(C.shape[0]), order.shape[1])
-                cols = order.ravel()
-                score = C[rows, cols]
-                keep = np.isfinite(score)
-                if keep.any():
-                    q_out.append(idq[rows[keep] + s])
-                    n_out.append(idn[cols[keep]])
-                    c_out.append(score[keep])
-
-        emit(VA, na, ids_a, VB, nb, ids_b, exclude_diag=within)
-        if not within:
-            emit(VB, nb, ids_b, VA, na, ids_a, exclude_diag=False)
-        if not q_out:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(q_out),
-                "neighbor_id": np.concatenate(n_out),
-                "__cos": np.concatenate(c_out),
-            }
-        )
-
-    candidates = tasks.groupBy("bucket", "ti", "tj").applyInPandas(
-        cell_topk, schema=f"query_id {id_type}, neighbor_id {id_type}, __cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
     return (
         candidates.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -450,38 +539,24 @@ def cosine_dup_pairs(
 
     Output: (id_a < id_b, cosine rounded 4).
 
-    The vectorized path groups by bucket and computes each bucket's
-    pairwise cosines with ONE blocked GEMM inside ``applyInPandas``:
-    the only shuffle is the narrow (id, v, bucket) base frame — the
-    self-join formulation instead materialized every candidate pair
-    row carrying BOTH vectors (at sf1: ~19.5M join rows x two 64-dim
-    arrays ≈ 20 GB through the exchange for a 264k-pair answer).
-    The kernel pre-filters with a 1e-4 slack and the exact
-    ``round(cos, 4) >= min_cosine`` threshold stays JVM-side. Results
-    are verified identical to the join formulation on the test data
-    (equivalence tests at three thresholds) — but the GEMM computes
-    the cosine in a different floating-point order than the JVM
-    per-pair expression, so a pair sitting EXACTLY on a round(_, 4)
-    half-ulp boundary could in principle flip inclusion across BLAS
-    builds; the 1e-4 slack makes the prefilter itself safe either way.
+    Each bucket's pairwise cosines come from the cell kernel inside
+    ``applyInPandas``: the only shuffle is the narrow (id, v, bucket)
+    base frame — the self-join formulation instead materialized every
+    candidate pair row carrying BOTH vectors (at sf1: ~19.5M join rows
+    x two 64-dim arrays ≈ 20 GB through the exchange for a 264k-pair
+    answer). Results equal the join formulation on the test data
+    (equivalence tests at three thresholds).
 
     Degenerate buckets (heavy boilerplate corpora hashing to one LSH
     bucket) would otherwise hand ONE task an O(bucket²) GEMM and the
     whole bucket's vector matrix: any bucket larger than
-    ``max_bucket_size`` is therefore triangle-split — rows are hashed
-    into ``g = ceil(n/cap)`` sub-groups and replicated to the
-    upper-triangle task grid (gi <= gj), so every pair still meets in
-    EXACTLY one task (same-group pairs in the (g, g) task, cross-group
-    pairs in the (gi, gj) task) and each task holds at most two
-    sub-groups of <= cap rows. Exact — no pairs are lost — at the cost
-    of replicating oversized buckets' rows g-fold; normal buckets pay
-    the insurance premium only: one tracked persist of the narrow
-    (id, v, bucket) frame plus a bucket-count aggregate and its
-    broadcast (measured ~0.45s on a 0.8s sf1 query — linear work with
-    small constants that amortizes as the corpus grows, vs the
-    unbounded single-task GEMM it prevents). Raising
-    ``N_HYPERPLANES`` (more, smaller buckets) remains the cheaper
-    lever when the corpus allows re-bucketing."""
+    ``max_bucket_size`` is therefore triangle-split
+    (``_triangle_tasks``) — exact, at the cost of replicating
+    oversized buckets' rows g-fold; normal buckets pay one tracked
+    persist of the narrow (id, v, bucket) frame plus a bucket-count
+    aggregate and its broadcast (measured ~0.45s on a 0.8s sf1 query).
+    Raising ``N_HYPERPLANES`` (more, smaller buckets) remains the
+    cheaper lever when the corpus allows re-bucketing."""
     from .caching import track
 
     base = track(lsh_base_frame(df, id_col, vec_col, dim))
@@ -501,100 +576,20 @@ def cosine_pairs_in_groups(
 ) -> DataFrame:
     """All unordered pairs with ``round(cosine, 4) >= min_cosine``
     whose rows share a ``bucket`` value in a caller-supplied
-    ``(id, v, bucket)`` frame — the GEMM pair kernel of
-    ``cosine_dup_pairs`` factored over any grouping (LSH buckets,
-    k-means-style cluster assignments for semantic dedup, ...).
-    ``base`` must already be persisted (tracked by the caller): the
-    triangle task grid reads it twice. Oversized groups are
-    triangle-split exactly as documented on ``cosine_dup_pairs``."""
-    tasks = _triangle_tasks_from_base(base, max_bucket_size)
-    slack = min_cosine - 1e-4
+    ``(id, v, bucket)`` frame — ``cosine_dup_pairs`` over any grouping
+    (LSH buckets, k-means-style cluster assignments for semantic
+    dedup, ...): the upper triangle of each diagonal task, every pair
+    of an off-diagonal one. ``base`` must already be persisted
+    (tracked by the caller): the triangle task grid reads it twice."""
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "__cos": []})
-        if len(pdf) < 2:
-            return empty
-        ti, tj = int(pdf["ti"].iat[0]), int(pdf["tj"].iat[0])
-        within = ti == tj
-        if within:
-            A = B = pdf
-        else:
-            A = pdf[pdf["g"] == ti]
-            B = pdf[pdf["g"] == tj]
-            if len(A) == 0 or len(B) == 0:
-                return empty
-        VA = np.stack(A["v"].to_numpy()).astype(np.float64)
-        VB = VA if within else np.stack(B["v"].to_numpy()).astype(np.float64)
-        ids_a = A["id"].to_numpy()
-        ids_b = ids_a if within else B["id"].to_numpy()
-        na = np.linalg.norm(VA, axis=1)
-        nb = na if within else np.linalg.norm(VB, axis=1)
-        a_out, b_out, c_out = [], [], []
-        blk = 1024
-        for s in range(0, len(VA), blk):
-            G = VA[s : s + blk] @ VB.T
-            D = np.outer(na[s : s + blk], nb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = G / D
-            mask = (D > 0) & (C >= slack)
-            ii, jj = np.nonzero(mask)
-            if within:
-                keep = jj > (ii + s)  # each unordered pair once
-                ii, jj = ii[keep], jj[keep]
-            if len(ii):
-                ia, ib = ids_a[ii + s], ids_b[jj]
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                a_out.append(lo)
-                b_out.append(hi)
-                c_out.append(C[ii, jj])
-        if not a_out:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(a_out),
-                "id_b": np.concatenate(b_out),
-                "__cos": np.concatenate(c_out),
-            }
-        )
+    def cell(pdf: pd.DataFrame):
+        c = _triangle_cell(pdf)
+        if c is None:
+            return None
+        within = c[3] is c[1]
+        return (*c, lambda i, j, ia, ib: j > i if within else np.ones(len(i), bool))
 
-    survivors = tasks.groupBy("bucket", "ti", "tj").applyInPandas(
-        bucket_pairs, schema=f"id_a {id_type}, id_b {id_type}, __cos double"
-    )
-    return (
-        survivors.select("id_a", "id_b", F.round("__cos", 4).alias("cosine"))
-        .filter(F.col("cosine") >= min_cosine)
-    )
-
-
-def lsh_base_frame(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
-    """The ``(id, v, bucket)`` frame shared by the pair operators and
-    the persistent index: double-cast vector + random-hyperplane LSH
-    bucket (vectorized assignment)."""
-    return df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        _as_double(F.col(vec_col)).alias("v"),
-        make_lsh_bucket_pudf(dim)(_as_double(F.col(vec_col))).alias("bucket"),
-    )
-
-
-def build_cosine_lsh_index(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    path: str,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the LSH-bucketed vector frame as a parquet dedup
-    index, partitioned by bucket — the embedding twin of
-    ``build_minhash_index``. A new batch's dedup join filters on the
-    batch's bucket values, so partition pruning bounds the index scan
-    to the batch's bucket NEIGHBORHOODS, not the corpus;
-    ``mode="append"`` is the per-batch update (append-after-dedup ==
-    rebuild, property-tested)."""
-    lsh_base_frame(df, id_col, vec_col, dim).write.mode(mode).partitionBy(
-        "bucket"
-    ).parquet(path)
+    return _pairs_above(_triangle_tasks(base, max_bucket_size), id_type, min_cosine, cell)
 
 
 def cosine_incremental_pairs(
@@ -636,8 +631,6 @@ def cosine_incremental_pairs(
         .withColumn("__new", F.lit(False))
     )
     allc = track(cand.unionByName(new_base.withColumn("__new", F.lit(True))))
-    id_type = new_df.schema[id_col].dataType.simpleString()
-    slack = min_cosine - 1e-4
     cap = max(int(max_bucket_size), 2)
 
     sizes = allc.groupBy("bucket").agg(
@@ -659,58 +652,20 @@ def cosine_incremental_pairs(
     )
     tasks = a_rows.unionByName(b_rows.select(*a_rows.columns))
 
-    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "__cos": []})
+    def cell(pdf: pd.DataFrame):
         A = pdf[pdf["__side"] == "A"]
         B = pdf[pdf["__side"] == "B"]
-        if len(A) == 0 or len(B) == 0:
-            return empty
-        VA = np.stack(A["v"].to_numpy()).astype(np.float64)
-        VB = np.stack(B["v"].to_numpy()).astype(np.float64)
-        ids_a, ids_b = A["id"].to_numpy(), B["id"].to_numpy()
+        if not len(A) or not len(B):
+            return None
         new_a = A["__new"].to_numpy().astype(bool)
-        na_, nb_ = np.linalg.norm(VA, axis=1), np.linalg.norm(VB, axis=1)
-        a_out, b_out, c_out = [], [], []
-        blk = 1024
-        for s in range(0, len(VA), blk):
-            G = VA[s : s + blk] @ VB.T
-            D = np.outer(na_[s : s + blk], nb_)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = G / D
-            mask = (D > 0) & (C >= slack)
-            ii, jj = np.nonzero(mask)
-            if len(ii) == 0:
-                continue
-            ia, ib = ids_a[ii + s], ids_b[jj]
-            # old candidate: keep any order (the old id exists only on
-            # the A side, so the pair meets once); new candidate: this
-            # is a new-new pair that also meets mirrored — keep the
-            # id_a < id_b direction only
-            keep = np.where(new_a[ii + s], ia < ib, ia != ib)
-            if not keep.any():
-                continue
-            ia, ib, cc = ia[keep], ib[keep], C[ii[keep], jj[keep]]
-            lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-            a_out.append(lo)
-            b_out.append(hi)
-            c_out.append(cc)
-        if not a_out:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(a_out),
-                "id_b": np.concatenate(b_out),
-                "__cos": np.concatenate(c_out),
-            }
-        )
+        # old candidate: keep any order (the old id exists only on the
+        # A side, so the pair meets once); new candidate: a new-new
+        # pair that also meets mirrored — keep id_a < id_b only
+        keep = lambda i, j, ia, ib: np.where(new_a[i], ia < ib, ia != ib)  # noqa: E731
+        return A["id"].to_numpy(), _matrix(A["v"]), B["id"].to_numpy(), _matrix(B["v"]), keep
 
-    survivors = tasks.groupBy("bucket", "ti", "tj").applyInPandas(
-        cell_pairs, schema=f"id_a {id_type}, id_b {id_type}, __cos double"
-    )
-    return (
-        survivors.select("id_a", "id_b", F.round("__cos", 4).alias("cosine"))
-        .filter(F.col("cosine") >= min_cosine)
-    )
+    id_type = new_df.schema[id_col].dataType.simpleString()
+    return _pairs_above(tasks, id_type, min_cosine, cell)
 
 
 # ---------------------------------------------------------------------------
@@ -738,9 +693,6 @@ def collect_vector_sample(
     correlates with content (time-/source-sorted parquet at 100 TB)
     cannot bias the centroid fit toward its leading partitions. A bare
     ``limit(max_rows)`` would take exactly those leading partitions.
-    (The tiebreak used to be a string cast of the vector — a per-row
-    stringification of the whole array inside every heap comparison;
-    the salted hash is a few integer ops.)
 
     Scale: ``orderBy(hash).limit(k)`` compiles to
     TakeOrderedAndProject — each partition keeps a k-row heap and the
@@ -768,20 +720,18 @@ def fit_ivf_centroids(
     df: DataFrame,
     vec_col: str,
     n_clusters: int = 16,
-    seed: int = 42,
-    max_iter: int = 10,
-    max_train_rows: int = 4096,
+    max_train_rows: int = TRAIN_ROWS,
 ) -> np.ndarray:
     """Coarse quantizer: kmeans++-seeded Lloyd iterations in numpy over
     a bounded sample. This is the standard IVF recipe: train the
     quantizer tiny on the driver, assign distributed — a distributed
-    KMeans here would cost max_iter full-corpus passes to learn 16
+    KMeans here would cost KMEANS_ITERS full-corpus passes to learn 16
     centroids. Returns the (n_clusters, dim) centroid matrix."""
     X = collect_vector_sample(df, vec_col, max_train_rows, "IVF quantizer")
-    return kmeans_numpy(X, n_clusters, seed, max_iter)
+    return kmeans_numpy(X, n_clusters, SEED)
 
 
-def kmeans_numpy(X: np.ndarray, n_clusters: int, seed: int = 42, max_iter: int = 10) -> np.ndarray:
+def kmeans_numpy(X: np.ndarray, n_clusters: int, seed: int = SEED) -> np.ndarray:
     """Seeded kmeans++ + Lloyd on an in-memory sample (shared by the
     IVF coarse quantizer and the PQ sub-quantizers in operators/pq.py).
     Deterministic for a given (X, seed)."""
@@ -805,7 +755,7 @@ def kmeans_numpy(X: np.ndarray, n_clusters: int, seed: int = 42, max_iter: int =
         c = X[j]
         d2 = np.minimum(d2, np.maximum(x2 - 2.0 * (X @ c) + float(c @ c), 0.0))
     C = X[idx].copy()
-    for _ in range(max_iter):
+    for _ in range(KMEANS_ITERS):
         d = x2[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
         assign = np.argmin(d, axis=1)
         # vectorized mean update: one bincount per dimension instead of
@@ -821,65 +771,27 @@ def kmeans_numpy(X: np.ndarray, n_clusters: int, seed: int = 42, max_iter: int =
     return C
 
 
+def _l2_to(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``||v - c||^2 - ||v||^2`` of every row against every centroid."""
+    return (C * C).sum(axis=1)[None, :] - 2.0 * (V @ C.T)
+
+
+def _probe_cells(Q: np.ndarray, centers: np.ndarray, n_probe: int) -> np.ndarray:
+    """Each query's ``n_probe`` nearest cells (L2, as rows are assigned)."""
+    C = np.asarray(centers, dtype=np.float64)
+    return np.argsort(_l2_to(Q, C), axis=1)[:, : min(n_probe, len(C))] if len(Q) else []
+
+
 def make_cluster_assign_pudf(centers: np.ndarray):
     """Vectorized nearest-centroid assignment (L2): one matmul per
     Arrow batch against the broadcast centroid matrix."""
     C = np.asarray(centers, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
 
     @pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
-        V = np.stack(v.to_numpy()).astype(np.float64)
-        d = c2[None, :] - 2.0 * (V @ C.T)  # ||v-c||^2 up to +||v||^2
-        return pd.Series(np.argmin(d, axis=1).astype(np.int32))
+        return pd.Series(np.argmin(_l2_to(_matrix(v), C), axis=1).astype(np.int32))
 
     return assign
-
-
-def _probe_pairs_df(
-    spark, q_rows, centers: np.ndarray, n_probe: int, id_type
-):
-    """(query_id, qv, cluster) rows: each query x its n_probe nearest
-    cells, computed in numpy on the driver (queries are param-sized)."""
-    from pyspark.sql import types as T
-
-    C = np.asarray(centers, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    d = c2[None, :] - 2.0 * (Q @ C.T)
-    probes = np.argsort(d, axis=1)[:, : min(n_probe, len(C))]
-    rows = [
-        (r[0], [float(x) for x in Q[i]], int(c))
-        for i, r in enumerate(q_rows)
-        for c in probes[i]
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("qv", T.ArrayType(T.DoubleType())),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def _ivf_topk(corpus: DataFrame, probe_df: DataFrame, k: int) -> DataFrame:
-    """Score probed (query, cell) pairs and reduce to per-query top-k."""
-    scored = (
-        corpus.join(F.broadcast(probe_df), on="cluster")
-        .filter(F.col("query_id") != F.col("id"))
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            _cosine_pudf(F.col("qv"), F.col("v")).alias("__cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("__cos", 4).alias("cosine"), "rank")
-    )
 
 
 def knn_ivf(
@@ -890,115 +802,35 @@ def knn_ivf(
     k: int = 5,
     n_clusters: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     centers: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k cosine neighbors.
-
-    One ``mapInPandas`` pass over the corpus: each Arrow batch is
-    cluster-assigned by a single matmul, then only rows whose cell
-    some query probes are cosine-scored against exactly those queries
-    (the IVF win: scoring cost ~ n_probe/n_clusters of the corpus).
-    Only per-batch top-k survivors leave the executors; a final window
-    reduces them — no shuffle of the corpus, no join. With
-    ``n_probe == n_clusters`` this degrades gracefully to exact
-    brute-force (every pair scored), which is the correctness test.
-    For IO-side pruning as well, see ``build_ivf_index``.
+    """IVF approximate top-k cosine neighbors: the scan with each
+    batch's rows celled by nearest centroid (one matmul), so only rows
+    in a cell some query probes are scored, against exactly those
+    queries (scoring cost ~ n_probe/n_clusters of the corpus). With
+    ``n_probe == n_clusters`` it is exact brute force (every pair
+    scored), which is the correctness test. For IO-side pruning as
+    well, see ``build_ivf_index``.
 
     Output: (query_id, neighbor_id, cosine rounded 4, rank).
     """
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("__cos", T.DoubleType()),
-        ]
-    )
-    valid = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
     if centers is None:
-        centers = fit_ivf_centroids(df, vec_col, n_clusters, seed)
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(F.col(vec_col)))
-        .collect()
-    )
-    if not q_rows:
-        schema = T.StructType(
-            [
-                T.StructField("query_id", id_type),
-                T.StructField("neighbor_id", id_type),
-                T.StructField("cosine", T.DoubleType()),
-                T.StructField("rank", T.IntegerType()),
-            ]
-        )
-        return df.sparkSession.createDataFrame([], schema)
-
+        centers = fit_ivf_centroids(df, vec_col, n_clusters)
     C = np.asarray(centers, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-    q_ids = [r[0] for r in q_rows]
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    d = c2[None, :] - 2.0 * (Q @ C.T)
-    probes = np.argsort(d, axis=1)[:, : min(n_probe, len(C))]
-    # cell -> indices of the queries probing it (param-sized closure)
-    by_cell: dict[int, list[int]] = {}
-    for qi, cells in enumerate(probes):
-        for c in cells:
-            by_cell.setdefault(int(c), []).append(qi)
-
-    def score_batches(it):
-        for pdf in it:
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            ok = norms > 0
-            if not ok.all():
-                V, norms, pdf = V[ok], norms[ok], pdf.iloc[ok]
-            if len(pdf) == 0:
-                continue
-            cluster = np.argmin(c2[None, :] - 2.0 * (V @ C.T), axis=1)
-            nids = pdf["id"].to_numpy()
-            Vn = V / norms[:, None]
-            qcol, ncol, ccol = [], [], []
-            for cell in np.unique(cluster):
-                qidx = by_cell.get(int(cell))
-                if not qidx:
-                    continue
-                mask = cluster == cell
-                sub_ids = nids[mask]
-                S = Vn[mask] @ Qn[qidx].T  # (cell rows, probing queries)
-                top = min(k + 1, len(sub_ids))  # +1: a query may see itself
-                for j, qi in enumerate(qidx):
-                    col = S[:, j]
-                    # deterministic per-batch top-k under (cos desc, id
-                    # asc) — the union of per-batch/cell top-ks under a
-                    # total order contains the global top-k
-                    order = np.lexsort((sub_ids, -col))[:top]
-                    qcol.extend([q_ids[qi]] * len(order))
-                    ncol.append(sub_ids[order])
-                    ccol.append(col[order])
-            if not qcol:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": qcol,
-                    "neighbor_id": np.concatenate(ncol),
-                    "__cos": np.concatenate(ccol),
-                }
-            )
-
-    scored = valid.mapInPandas(score_batches, out_schema).filter(
-        F.col("query_id") != F.col("neighbor_id")
+    q_ids, Q, Qn = _unit_queries(queries, id_col, vec_col)
+    return _cosine_topk(
+        _vector_rows(df, id_col, vec_col), q_ids, Qn, _probe_cells(Q, C, n_probe), k,
+        lambda pdf, V: np.argmin(_l2_to(V, C), axis=1),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
+
+
+def _ivf_rows(df: DataFrame, id_col: str, vec_col: str, centers: np.ndarray, epoch: int):
+    """``(id, v, cluster, epoch)`` index rows of the non-NULL vectors."""
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("__cos", 4).alias("cosine"), "rank")
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+        .select("id", "v", make_cluster_assign_pudf(centers)(F.col("v")).alias("cluster"))
+        .withColumn("epoch", F.lit(int(epoch)))
     )
 
 
@@ -1008,7 +840,6 @@ def build_ivf_index(
     id_col: str,
     vec_col: str,
     n_clusters: int = 16,
-    seed: int = 42,
 ) -> np.ndarray:
     """Materialize the IVF index as CLUSTER-PARTITIONED parquet.
 
@@ -1017,16 +848,11 @@ def build_ivf_index(
     O(n_probe / n_clusters * corpus), the property that makes IVF the
     100 TB similarity-search plan. Returns the centroid matrix (store
     it next to the index in a real deployment)."""
-    centers = fit_ivf_centroids(df, vec_col, n_clusters, seed)
-    corpus = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-        .select("id", "v", make_cluster_assign_pudf(centers)(F.col("v")).alias("cluster"))
-    )
+    centers = fit_ivf_centroids(df, vec_col, n_clusters)
     # epoch=0 is the base build; incremental refreshes land in their own
     # epoch partitions (see append_to_ivf_index) so replays are
     # idempotent; readers filter on cluster and ignore the epoch level
-    corpus.withColumn("epoch", F.lit(0)).write.mode("overwrite").partitionBy(
+    _ivf_rows(df, id_col, vec_col, centers, 0).write.mode("overwrite").partitionBy(
         "epoch", "cluster"
     ).parquet(path)
     return centers
@@ -1058,13 +884,8 @@ def append_to_ivf_index(
     (full rebuild) when the data distribution departs from what the
     quantizer was trained on. Id dedup is the upstream ingest's job
     (see streaming/corpus.py)."""
-    new_rows = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-        .select("id", "v", make_cluster_assign_pudf(centers)(F.col("v")).alias("cluster"))
-    )
     (
-        new_rows.withColumn("epoch", F.lit(int(epoch_id)))
+        _ivf_rows(df, id_col, vec_col, centers, epoch_id)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("epoch", "cluster")
@@ -1084,13 +905,14 @@ def knn_ivf_indexed(
 ) -> DataFrame:
     """Top-k over a materialized IVF index: the cluster ``isin`` filter
     on the partition column prunes non-probed cells at scan time
-    (verify with ``.explain`` -> PartitionFilters)."""
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(F.col(vec_col)))
-        .collect()
+    (verify with ``.explain`` -> PartitionFilters), and the scan cells
+    rows by their stored ``cluster``. Equals ``knn_ivf`` with the same
+    centroids."""
+    q_ids, Q, Qn = _unit_queries(queries, id_col, vec_col)
+    probes = _probe_cells(Q, centers, n_probe)
+    cells = sorted({int(c) for p in probes for c in p})
+    rows = spark.read.parquet(path).filter(F.col("cluster").isin(cells))
+    return _cosine_topk(
+        rows.select("id", "v", "cluster"), q_ids, Qn, probes, k,
+        lambda pdf, V: pdf["cluster"].to_numpy(),
     )
-    probe_df = _probe_pairs_df(spark, q_rows, centers, n_probe, queries.schema[id_col].dataType)
-    probed_cells = [r["cluster"] for r in probe_df.select("cluster").distinct().collect()]
-    corpus = spark.read.parquet(path).filter(F.col("cluster").isin(probed_cells))
-    return _ivf_topk(corpus, probe_df, k)

@@ -316,27 +316,30 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     return TaskStatus(True, f"{n} curated docs")
 
 
-def _ingest_job(spark: SparkSession, params: dict, label: str, drain, **mode) -> TaskStatus:
+def _ingest_job(
+    spark: SparkSession, params: dict, label: str, drain, cut: bool = False, **mode
+) -> TaskStatus:
     """The body the three ``corpus-ingest`` tasks share: drain whatever
     document files have landed since the last run (availableNow)
     through the mode's ``streaming/corpus.py`` ingest, then report the
-    corpus size (and the tokens cut, where the sink records them) in one
-    aggregate. Params: landing/sink/index/checkpoint, optional
-    max_files_per_trigger (default 8)."""
+    corpus size (and, with ``cut``, the tokens cut the sink records) in
+    one aggregate. The sink is read with the fixed schema the ingest
+    writes, so no job infers it. Params: landing/sink/index/checkpoint,
+    optional max_files_per_trigger (default 8)."""
     from pyspark.errors import AnalysisException
 
-    from .streaming.corpus import read_corpus, read_documents_stream
+    from .streaming.corpus import read_documents_stream
 
     sink = params["sink"]
     stream = read_documents_stream(
         spark, params["landing"], max_files_per_trigger=int(params.get("max_files_per_trigger", 8))
     )
     drain(stream, sink, params["index"], params["checkpoint"], **mode)
+    schema = "doc_id long, tokens_cut long" if cut else "doc_id long"
     try:
-        corpus = read_corpus(spark, sink)
+        corpus = spark.read.schema(schema).parquet(sink)
     except AnalysisException:  # empty landing zone: no batch ever wrote the sink
         return TaskStatus(True, f"{label} at {sink}: 0 documents")
-    cut = "tokens_cut" in corpus.columns
     row = corpus.agg(F.count(F.lit(1)), *([F.sum("tokens_cut")] if cut else [])).first()
     msg = f"{label} at {sink}: {row[0]} documents"
     return TaskStatus(True, msg + (f", {row[1] or 0} tokens cut" if cut else ""))
@@ -387,6 +390,6 @@ def ingest_documents_cutspans_job(spark: SparkSession, params: dict) -> TaskStat
     from .streaming.corpus import ingest_documents_cutspans
 
     return _ingest_job(
-        spark, params, "span-cut corpus", ingest_documents_cutspans,
+        spark, params, "span-cut corpus", ingest_documents_cutspans, cut=True,
         n=int(params.get("span_n", 10)), min_span=int(params.get("min_span", 50)),
     )

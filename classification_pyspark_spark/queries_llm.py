@@ -604,7 +604,7 @@ def media_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def knn_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 neighbors through the full IVF machinery (16-cell
-    KMeans coarse quantizer, cluster assignment, probe-join, per-batch
+    KMeans coarse quantizer, cluster assignment, per-batch
     top-k) run at n_probe == n_clusters, where IVF is EXACT — every
     cell is probed, so the result equals brute-force and the DuckDB
     brute-force oracle checks the whole code path. The *approximate*

@@ -269,6 +269,69 @@ def test_ivf_indexed_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "cluster" in plan.split("PartitionFilters", 1)[1][:200]
 
 
+@pytest.mark.parametrize("searcher", ["bruteforce", "ivf", "ivf_indexed", "lsh"])
+def test_cosine_searchers_share_degenerate_vector_rule(spark, tmp_path, searcher):
+    """Every cosine searcher: NULL and zero-norm vectors are never
+    neighbors, a zero-norm query returns no rows, and an empty query
+    set returns an empty frame with the output schema. At full probe
+    the indexed IVF search equals the in-memory one row for row."""
+    from classification_pyspark_spark.operators.similarity import (
+        build_ivf_index,
+        knn_ivf,
+        knn_ivf_indexed,
+    )
+
+    rows = [
+        (0, [0.0, 0.0]),
+        (1, [1.0, 0.0]),
+        (2, [0.9, 0.1]),
+        (3, [0.0, 0.0]),
+        (4, [0.8, 0.2]),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(id_col="vec_id", vec_col="embedding", k=4)
+    path = str(tmp_path / "ivf")
+    centers = build_ivf_index(df, path, "vec_id", "embedding", n_clusters=2)
+
+    def ivf(q):
+        return knn_ivf(df, q, **kw, n_clusters=2, n_probe=2, centers=centers)
+
+    search = {
+        "bruteforce": lambda q: knn_bruteforce(df, q, **kw),
+        "ivf": ivf,
+        "ivf_indexed": lambda q: knn_ivf_indexed(spark, path, q, **kw, centers=centers, n_probe=2),
+        # LSH has no separate query set: it searches the set itself
+        "lsh": lambda q: knn_lsh(q, "vec_id", "embedding", 2, k=4),
+    }[searcher]
+    degenerate = {0, 3, 5}
+
+    out = search(df).collect()
+    assert not degenerate & {r.neighbor_id for r in out}
+    assert not degenerate & {r.query_id for r in out}
+    assert all(r.cosine is not None for r in out)
+    if searcher != "lsh":  # LSH compares within buckets only
+        got = {}
+        for r in out:
+            got.setdefault(r.query_id, []).append(r.neighbor_id)
+        assert {q: sorted(n) for q, n in got.items()} == {1: [2, 4], 2: [1, 4], 4: [1, 2]}
+
+    assert search(df.filter("vec_id = 0")).count() == 0
+
+    empty = search(df.filter("vec_id < 0"))
+    assert empty.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("query_id", "bigint"),
+        ("neighbor_id", "bigint"),
+        ("cosine", "double"),
+        ("rank", "int"),
+    ]
+
+    if searcher == "ivf_indexed":
+        for q in (df, df.filter("vec_id = 0"), df.filter("vec_id < 0")):
+            assert sorted(map(tuple, search(q).collect())) == sorted(map(tuple, ivf(q).collect()))
+
+
 def test_minhash_hot_bucket_cap(spark):
     """max_bucket_size drops degenerate LSH buckets (the O(k^2) hot
     bucket at scale) while leaving normal pairs untouched."""

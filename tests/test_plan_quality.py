@@ -187,8 +187,9 @@ def test_every_query_plan_has_no_unexplained_scale_flags(spark):
 
 
 def test_bench_gate_logic(tmp_path):
-    """The bench regression gate fails on >2x deltas and passes
-    otherwise (pure JSON-level check; the full bench runs per-round)."""
+    """The bench regression gate fails on >2x deltas or on counters
+    over their bounds and passes otherwise (pure JSON-level check; the
+    full bench runs per-round)."""
     import json
     import subprocess
     import sys
@@ -199,9 +200,22 @@ def test_bench_gate_logic(tmp_path):
     bad = tmp_path / "bad.json"
     bad.write_text(json.dumps(
         {"queries": {"a": 3.0}, "baseline_delta": {"a": 3.0}, "regressions": ["a"]}))
+    # the counter gate: jobs +20 % / shuffle bytes +25 % over the
+    # baseline's counters fails, at the baseline's sf only
+    baseline = json.load(open("bench_baseline.json"))
+    q, base = sorted(baseline["counters"].items())[0]
+    record = {"queries": {q: 1.0}, "baseline_delta": {q: 1.0}, "regressions": [],
+              "sf": baseline["sf"], "counters": {q: dict(base)}}
+    ok_counters = tmp_path / "ok_counters.json"
+    ok_counters.write_text(json.dumps(record))
+    record["counters"][q]["jobs"] = int(base["jobs"] * 1.2) + 1
+    bad_counters = tmp_path / "bad_counters.json"
+    bad_counters.write_text(json.dumps(record))
     gate = "tools/bench_gate.py"
     assert subprocess.run([sys.executable, gate, str(ok)]).returncode == 0
     assert subprocess.run([sys.executable, gate, str(bad)]).returncode == 1
+    assert subprocess.run([sys.executable, gate, str(ok_counters)]).returncode == 0
+    assert subprocess.run([sys.executable, gate, str(bad_counters)]).returncode == 1
 
 
 def test_bench_baseline_covers_headline():
