@@ -69,11 +69,10 @@ def dedup_front(corpus: DataFrame, max_bucket_size: int | None = None):
     from .operators.dedup_fuzzy import minhash_star_edges
     from .operators.graph import connected_components
     from .operators.text import (
-        alnum_token_stats_expr,
         bigram_lm_perplexity,
+        gopher_rules,
+        gopher_stats_exprs,
         langid_expr,
-        punct_ratio_expr,
-        ws_token_stats_expr,
     )
 
     corpus = track(corpus)  # read by the LM count tables and the flags
@@ -85,20 +84,9 @@ def dedup_front(corpus: DataFrame, max_bucket_size: int | None = None):
         "source",
         "lang",
         "text",
-        ws_token_stats_expr("text").alias("__ws"),
-        alnum_token_stats_expr("text").alias("__al"),
-        punct_ratio_expr("text").alias("__punct"),
+        *gopher_stats_exprs("text"),
         langid_expr("text").alias("__lg"),
         F.md5("text").alias("__digest"),
-    )
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    gopher_ok = (
-        F.col("__ws.n").between(50, 100000)
-        & mwl.between(3.0, 10.0)
-        & (F.col("__ws.stop") >= 2)
-        & (F.col("__punct") <= 0.1)
     )
     # persisted: the funnel and the survivor pipeline both read it
     flags = track(
@@ -108,7 +96,7 @@ def dedup_front(corpus: DataFrame, max_bucket_size: int | None = None):
             "text",
             "__digest",
             (F.col("__lg") == F.col("lang")).alias("lang_ok"),
-            gopher_ok.alias("gopher_ok"),
+            gopher_rules()["passes_gopher"].alias("gopher_ok"),
         )
         .join(ppl, "doc_id")
         .withColumn("ppl_ok", F.col("keep") == 1)

@@ -1,7 +1,7 @@
 """Near-duplicate detection for LLM corpora (north-star extension;
 SURVEY.md §7 Phase 5c).
 
-Four families, all shuffle-disciplined for 100 TB:
+Five families, all shuffle-disciplined for 100 TB:
 
 - **exact**: md5(text) -> groupBy hash (one shuffle on the digest; at
   scale this is the cheapest possible full-corpus dedup).
@@ -14,6 +14,16 @@ Four families, all shuffle-disciplined for 100 TB:
 - **n-gram Jaccard**: token-3-gram posting lists -> self-join on gram
   (shuffle on gram key) -> per-pair intersection counts -> Jaccard.
   Blocked by a cheap key (lang) to bound the join fan-out.
+- **spans** (Lee et al. 2022 substring dedup at n-gram granularity):
+  one pipeline of three shared pieces — :func:`gram_positions` (the
+  1-based ``(doc_id, pos, gk)`` gram-position stream),
+  :func:`marked_spans` (positions semi-joined to a marked-key frame,
+  chained into ``(doc_id, span_start, span_len)`` islands) and
+  :func:`kept_cut_text` (the cut-text projection after
+  :func:`span_cut_rewrite`). The batch detector
+  :func:`duplicated_span_extents` finds its islands from corpus-unique
+  anchors instead; the decontamination spans, the surgical curation
+  query and the span-cut streaming ingest mark their own keys.
 
 All variants are deterministic and DuckDB-expressible (md5 and
 lexicographic min are identical on both engines), so each is
@@ -22,11 +32,12 @@ oracle-checked — unusual for LSH code and deliberate here.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .caching import track
 from .text import (
+    _word_grams,
     punct_tok_sql,
     punct_tokens_expr,
     rolling_gram_hash_sql,
@@ -320,8 +331,6 @@ def minhash_star_edges(
 
     Output: (id_a, id_b) with id_a < id_b (id_a = bucket min).
     """
-    from pyspark.sql import Window
-
     long = minhash_band_long(
         df, text_col, id_col,
         rows_per_band=rows_per_band, n_hashes=n_hashes, engine=engine,
@@ -876,6 +885,42 @@ def duplicated_ngram_spans(
     )
 
 
+def gram_positions(df: DataFrame, id_col: str, grams: Column, name: str = "doc_id") -> DataFrame:
+    """The gram-position stream of the span family: ``(name, pos, gk)``,
+    one row per entry of the per-row gram array ``grams``, with ``pos``
+    its 1-based position (= the gram's first token) and ``name`` the
+    row's ``id_col``."""
+    return df.select(F.col(id_col).alias(name), F.posexplode(grams).alias("p0", "gk")).select(
+        name, (F.col("p0") + 1).cast("long").alias("pos"), "gk"
+    )
+
+
+def marked_spans(positions: DataFrame, marked: DataFrame, n: int, min_span: int) -> DataFrame:
+    """The islands step of the span family: the positions of a
+    :func:`gram_positions` stream (``doc_id``) whose ``gk`` is in
+    ``marked`` (a ``gk`` frame; the caller picks its join hint), as
+    maximal runs. A run of consecutive marked positions s..e covers
+    tokens s..e+n-1: (doc_id, span_start = s, span_len = run + n - 1),
+    kept when span_len >= ``min_span``.
+
+    Gaps-and-islands: ``pos - row_number()`` is constant along a run,
+    so the only exchange is the doc-partitioned window over MARKED
+    positions (the membership probe never shuffles the stream when
+    ``marked`` is broadcast)."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return (
+        positions.join(marked, "gk", "left_semi")
+        .select("doc_id", "pos", (F.col("pos") - F.row_number().over(w)).alias("grp"))
+        .groupBy("doc_id", "grp")
+        .agg(
+            F.min("pos").cast("long").alias("span_start"),
+            (F.count(F.lit(1)) + (n - 1)).cast("long").alias("span_len"),
+        )
+        .filter(F.col("span_len") >= min_span)
+        .select("doc_id", "span_start", "span_len")
+    )
+
+
 def duplicated_span_extents(
     df: DataFrame,
     text_col: str,
@@ -938,8 +983,6 @@ def duplicated_span_extents(
     """
     if min_span < n:
         raise ValueError(f"min_span ({min_span}) must be >= n ({n})")
-    from pyspark.sql import Window
-
     tok_sql = punct_tok_sql(text_col)
     if hash_grams:
         grams = F.expr(
@@ -948,18 +991,8 @@ def duplicated_span_extents(
     else:
         # per-POSITION gram strings (word_ngrams_expr dedups — wrong
         # here: position identity is the signal)
-        per_pos = (
-            f"transform(sequence(1, greatest(size({tok_sql}) - {n - 1}, 0)), "
-            f"i -> concat_ws(' ', slice({tok_sql}, i, {n})))"
-        )
-        grams = F.expr(
-            f"case when size({tok_sql}) >= {n} then {per_pos} "
-            f"else cast(array() as array<string>) end"
-        )
-    stream = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(grams).alias("p0", "gk"),
-    ).select("id", (F.col("p0") + 1).cast("long").alias("pos"), "gk")
+        grams = _word_grams(F.expr(tok_sql), n)
+    stream = gram_positions(df, id_col, grams, "id")
     # corpus-unique grams ARE their own (doc, pos) anchor: with c == 1
     # the min() of each field is the single occurrence's value
     anchors_uniq = (
@@ -1208,6 +1241,22 @@ def span_cut_rewrite(
                 "kept_text"
             ),
         )
+    )
+
+
+def kept_cut_text(cut: DataFrame, *cols: Column | str) -> DataFrame:
+    """The cut-text projection over ``cut`` — documents (``doc_id``,
+    ``text``) joined on doc_id to their :func:`span_cut_rewrite` row:
+    untouched docs keep their ORIGINAL text byte-for-byte, cut docs
+    carry the canonical-punct rewrite, and docs cut to nothing are
+    dropped. Output: doc_id, text, ``cols``, tokens_cut long."""
+    return cut.filter(F.col("n_kept") > 0).select(
+        "doc_id",
+        F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
+        .otherwise(F.col("kept_text"))
+        .alias("text"),
+        *cols,
+        (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
     )
 
 

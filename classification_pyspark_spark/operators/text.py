@@ -2,11 +2,19 @@
 SURVEY.md §7 Phase 5b).
 
 Language-ID (stopword-hit heuristic), quality scoring
-(length/punctuation/stopword ratios), token counting (whitespace
-split), and document fingerprinting (rolling polynomial hash) — all as
-pure column expressions over built-in higher-order functions, so they
-run JVM-side with whole-stage codegen and scale linearly with no
-shuffle (per-row only).
+(length/punctuation/stopword ratios and the Gopher rules), token
+counting (whitespace split), and document fingerprinting (rolling
+polynomial hash) — all as pure column expressions over built-in
+higher-order functions, so they run JVM-side with whole-stage codegen
+and scale linearly with no shuffle (per-row only).
+
+One tokenizer and one gram builder serve the n-gram / tf-idf / eval
+family: :func:`punct_tokens_expr` (non-empty pieces of the lowercased
+text split on ``[^0-9a-z]+``; ``punct_tok_sql`` is its SQL text) and
+:func:`_word_grams` (every position's space-joined word n-gram of a
+token array; ``word_ngrams_expr`` is its distinct form). Where gram
+identity is all a caller needs, ``rolling_gram_hash_sql`` builds the
+64-bit key of the same grams.
 
 Everything here is deliberately SQL-expressible so the DuckDB oracle
 can replay it bit-for-bit.
@@ -37,6 +45,17 @@ def tokens_expr(col: Column | str) -> Column:
     """Whitespace tokenization of the trimmed text."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(F.trim(c), r"\s+")
+
+
+def punct_tokens_expr(col: Column | str) -> Column:
+    """Non-empty tokens of the lowercased text split on ``[^0-9a-z]+``
+    — the shared tokenizer for the n-gram/tf-idf family (DuckDB twin:
+    ``list_filter(string_split_regex(trim(lower(x)), '[^0-9a-z]+'),
+    t -> len(t) > 0)``)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.filter(
+        F.split(F.trim(F.lower(c)), r"[^0-9a-z]+"), lambda t: F.length(t) > 0
+    )
 
 
 def token_count_expr(col: Column | str) -> Column:
@@ -118,6 +137,12 @@ def alnum_token_stats_expr(col: Column | str) -> Column:
     )
 
 
+def _mean_len(al: Column) -> Column:
+    """Mean token length from an ``alnum_token_stats_expr`` struct,
+    0.0 for a doc without tokens."""
+    return F.when(al["n"] > 0, al["len"] / al["n"].cast("double")).otherwise(F.lit(0.0))
+
+
 def punct_ratio_expr(col: Column | str) -> Column:
     """Fraction of characters that are not alphanumeric/whitespace."""
     c = F.col(col) if isinstance(col, str) else col
@@ -142,6 +167,34 @@ def quality_score_expr(col: Column | str, round_to: int = 8) -> Column:
     punct = punct_ratio_expr(col)
     stop_factor = F.least(stop / F.greatest(n, F.lit(1.0)) / 0.10, F.lit(1.0))
     return F.round(0.4 * length_factor + 0.3 * (1.0 - punct) + 0.3 * stop_factor, round_to)
+
+
+def gopher_stats_exprs(col: str) -> list[Column]:
+    """The per-doc inputs of :func:`gopher_rules` — ``__ws`` (fused
+    whitespace token and stopword counts), ``__al`` (fused alnum token
+    count and length) and ``__punct`` — to bind in a projection before
+    the rules read them: HOF lambdas get no CSE, so the per-rule
+    expression form re-split the text ~6x per row (sf1: 7.5s -> 3.3s)."""
+    return [
+        ws_token_stats_expr(col).alias("__ws"),
+        alnum_token_stats_expr(col).alias("__al"),
+        punct_ratio_expr(col).alias("__punct"),
+    ]
+
+
+def gopher_rules() -> dict[str, Column]:
+    """Gopher-style document quality rules (Rae et al. 2021) over the
+    bound :func:`gopher_stats_exprs` columns: word count 50-100000,
+    mean word length 3-10, >= 2 stopwords, punct ratio <= 0.1, and
+    their conjunction ``passes_gopher``."""
+    rules = {
+        "wc_ok": F.col("__ws.n").between(50, 100000),
+        "mwl_ok": _mean_len(F.col("__al")).between(3.0, 10.0),
+        "stop_ok": F.col("__ws.stop") >= 2,
+        "punct_ok": F.col("__punct") <= 0.1,
+    }
+    wc, mwl, stop, punct = rules.values()
+    return {**rules, "passes_gopher": wc & mwl & stop & punct}
 
 
 def langid_expr(col: Column | str) -> Column:
@@ -225,11 +278,7 @@ def tfidf_top_terms(
     Output: (``id_col``, term, tf, tfidf, rank), rank 1..k ordered by
     (tfidf desc, term asc).
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"[^0-9a-z]+"),
-        lambda t: F.length(t) > 0,
-    )
-    terms = df.select(F.col(id_col), F.explode(toks).alias("term"))
+    terms = df.select(F.col(id_col), F.explode(punct_tokens_expr(text_col)).alias("term"))
     # tf feeds BOTH the df-frequency agg and the final join: persist it
     # (corpus-vocab-sized, far smaller than the exploded token stream)
     # or the tokenize+explode+agg pipeline runs twice
@@ -288,20 +337,8 @@ def top_ngrams(
     only shuffle carries (gram, partial count) pairs — vocabulary-
     sized, not corpus-sized.
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"[^0-9a-z]+"),
-        lambda t: F.length(t) > 0,
-    )
-    # guard: sequence(1, size-n+1) DESCENDS when size < n, so gate it
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     counts = (
-        df.select(F.explode(grams).alias("gram"))
+        df.select(F.explode(_word_grams(punct_tokens_expr(text_col), n)).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
@@ -403,8 +440,11 @@ def top_ngrams_capped(
 
 
 def _word_grams(toks: Column, n: int) -> Column:
-    """Word n-grams from a token array (codegen; guards the descending
-    sequence() when the doc is shorter than n)."""
+    """The string n-gram builder: position i (1-based) of the result is
+    tokens i..i+n-1 joined by single spaces, one entry per position
+    (duplicates kept — position identity and multiplicity are signals
+    for some callers). A doc shorter than ``n`` gets an empty array:
+    ``sequence(1, size-n+1)`` would DESCEND there."""
     return F.when(
         F.size(toks) >= n,
         F.transform(
@@ -472,27 +512,22 @@ def distinct_token_ratio_expr(col: Column | str) -> Column:
     """distinct tokens / tokens — 1.0 means no repeated token; low
     values flag boilerplate/repetitive docs (Gopher-style repetition
     filter). Zero-shuffle codegen."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(col) if isinstance(col, str) else col)), r"[^0-9a-z]+"),
-        lambda t: F.length(t) > 0,
-    )
+    toks = punct_tokens_expr(col)
     return F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def top_gram_fraction_expr(col: Column | str, n: int = 2) -> Column:
+def top_gram_fraction_expr(col: str, n: int = 2) -> Column:
     """Fraction of the doc's n-grams taken by its single most frequent
     n-gram — the Rae et al. (Gopher) duplicate-n-gram repetition
     signal, computed WITHOUT any shuffle: sort the doc's gram array
     (codegen) and fold once, tracking the longest equal run. Cost is
     O(g log g) per doc locally; nothing leaves the row.
 
-    When ``col`` is a column NAME the gram array is the rolling
-    64-bit hash form (``rolling_gram_hash_sql``, non-distinct):
-    run-length-of-equals is invariant to relabeling gram identities,
-    longs sort ~5x cheaper than gram strings, and each token hashes
-    once instead of being re-concatenated n times (a Column input
-    falls back to the string-gram fold — SQL text cannot be built
-    from an opaque Column).
+    The gram array of column ``col`` is the rolling 64-bit hash form
+    (``rolling_gram_hash_sql``, non-distinct): run-length-of-equals is
+    invariant to relabeling gram identities, longs sort ~5x cheaper
+    than gram strings, and each token hashes once instead of being
+    re-concatenated n times.
 
     The gram array is referenced EXACTLY ONCE: higher-order functions
     run interpreted (outside whole-stage codegen) and get no common-
@@ -500,20 +535,9 @@ def top_gram_fraction_expr(col: Column | str, n: int = 2) -> Column:
     re-tokenizes and re-sorts the whole document. Carrying the gram
     count in the fold accumulator instead made this 4.6x faster at
     sf1 (19.3s -> 4.2s for repetition_stats)."""
-    if isinstance(col, str):
-        grams = F.array_sort(
-            F.expr(rolling_gram_hash_sql(punct_tok_sql(col), n, distinct=False))
-        )
-        prev0: Column = F.lit(None).cast("long")  # never equals a hash
-    else:
-        toks = F.filter(
-            F.split(F.trim(F.lower(col)), r"[^0-9a-z]+"),
-            lambda t: F.length(t) > 0,
-        )
-        grams = F.array_sort(_word_grams(toks, n))
-        prev0 = F.lit("")
+    grams = F.array_sort(F.expr(rolling_gram_hash_sql(punct_tok_sql(col), n, distinct=False)))
     zero = F.struct(
-        prev0.alias("prev"),
+        F.lit(None).cast("long").alias("prev"),  # never equals a hash
         F.lit(0).alias("run"),
         F.lit(0).alias("best"),
         F.lit(0).alias("cnt"),
@@ -540,18 +564,7 @@ def top_gram_fraction_expr(col: Column | str, n: int = 2) -> Column:
 
 def mean_word_length_expr(col: Column | str) -> Column:
     """Mean token length (alnum tokens), 0.0 for empty docs."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(col) if isinstance(col, str) else col)), r"[^0-9a-z]+"),
-        lambda t: F.length(t) > 0,
-    )
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return F.when(
-        F.size(toks) > 0, total / F.size(toks).cast("double")
-    ).otherwise(F.lit(0.0))
+    return _mean_len(alnum_token_stats_expr(col))
 
 
 # bigram_lm_perplexity auto mode: corpora at or under this doc count
@@ -817,43 +830,20 @@ def tfidf_cosine_pairs(
     )
 
 
-def punct_tokens_expr(col: Column | str) -> Column:
-    """Non-empty tokens of the lowercased text split on ``[^0-9a-z]+``
-    — the shared tokenizer for the n-gram/tf-idf family (DuckDB twin:
-    ``list_filter(string_split_regex(trim(lower(x)), '[^0-9a-z]+'),
-    t -> len(t) > 0)``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(
-        F.split(F.trim(F.lower(c)), r"[^0-9a-z]+"), lambda t: F.length(t) > 0
-    )
-
-
 def word_ngrams_expr(toks: Column, n: int, pad_short: bool = False) -> Column:
-    """Distinct space-joined word n-grams of a token array.
+    """Distinct space-joined word n-grams of a token array
+    (:func:`_word_grams`, deduplicated).
 
-    ``pad_short=True`` keeps the historical posting-join behavior
-    (``greatest(size-(n-1), 1)``): a doc with fewer than ``n`` tokens
-    still emits ONE truncated gram, so it participates in joins.
+    ``pad_short=True`` keeps the historical posting-join behavior: a
+    doc with fewer than ``n`` tokens still emits ONE truncated gram
+    (its whole token list), so it participates in joins.
     ``pad_short=False`` is strict: short docs emit NO grams — required
     when a gram's presence is itself the signal (two token-less docs
     must not count as sharing a span via the empty gram).
     """
+    grams = F.array_distinct(_word_grams(toks, n))
     if pad_short:
-        upper = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    else:
-        upper = F.size(toks) - (n - 1)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(upper, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-    # sequence(1, 0) generates a DESCENDING [1, 0] — guard short docs
-    # to an empty array instead
-    if not pad_short:
-        grams = F.when(F.size(toks) >= n, grams).otherwise(
-            F.array().cast("array<string>")
-        )
+        return F.when(F.size(toks) >= n, grams).otherwise(F.array(F.concat_ws(" ", toks)))
     return grams
 
 
@@ -908,6 +898,52 @@ def compression_ratio(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.mapInPandas(batches, schema=schema)
 
 
+def _ref_cand_tokens(df: DataFrame, ref_col: str, cand_col: str, id_col: str) -> DataFrame:
+    """``(id, __rt, __ct)``: the punct tokens of both sides, persisted —
+    every clipped-count branch and the final id join read it; without
+    the persist each branch re-runs the tokenize regex (measured
+    neutral on sf1's short synthetic docs; the saved work grows with
+    document length)."""
+    return track(
+        df.select(
+            F.col(id_col).alias("id"),
+            punct_tokens_expr(ref_col).alias("__rt"),
+            punct_tokens_expr(cand_col).alias("__ct"),
+        )
+    )
+
+
+def _clipped_gram_counts(base: DataFrame, n: int) -> DataFrame:
+    """Clipped n-gram counts of a :func:`_ref_cand_tokens` frame:
+    ``(id, __ref_{n}, __cand_{n}, __match_{n})`` = reference grams,
+    candidate grams and ``sum(least(c_ref, c_cand))`` over the gram
+    multisets. Both sides explode to (id, gram) COUNT frames
+    (map-side-combined aggregates over 8-byte rolling-hash gram keys —
+    gram identity is all clipping needs) and full-outer-join per (id,
+    gram); ids without grams on either side still get a row of 0s."""
+
+    def counts(tok_col: str, alias: str) -> DataFrame:
+        # distinct=False: clipping needs the gram MULTISET
+        grams = F.expr(rolling_gram_hash_sql(tok_col, n, distinct=False))
+        return (
+            base.select("id", F.explode_outer(grams).alias("gram"))
+            .groupBy("id", "gram")
+            .agg(F.count(F.when(F.col("gram").isNotNull(), 1)).alias(alias))
+        )
+
+    c_ref, c_cand = F.coalesce("c_ref", F.lit(0)), F.coalesce("c_cand", F.lit(0))
+    return (
+        counts("__rt", "c_ref")
+        .join(counts("__ct", "c_cand"), on=["id", "gram"], how="full_outer")
+        .groupBy("id")
+        .agg(
+            F.sum(c_ref).cast("long").alias(f"__ref_{n}"),
+            F.sum(c_cand).cast("long").alias(f"__cand_{n}"),
+            F.sum(F.least(c_ref, c_cand)).cast("long").alias(f"__match_{n}"),
+        )
+    )
+
+
 def rouge_n(
     df: DataFrame,
     ref_col: str,
@@ -921,11 +957,9 @@ def rouge_n(
     clipped n-gram matches / candidate grams = precision, / reference
     grams = recall, harmonic mean = F1.
 
-    Distributed shape: both sides explode to (id, gram) COUNT frames
-    (map-side-combined aggregates over 8-byte rolling-hash gram keys —
-    gram identity is all clipping needs), the two count frames join
-    per (id, gram), and ``sum(least(c_ref, c_cand))`` is the clipped
-    match count. Work is proportional to total grams; nothing is
+    Distributed shape: one :func:`_clipped_gram_counts` — per-(id,
+    gram) count frames of both sides, joined per (id, gram), summed
+    per id. Work is proportional to total grams; nothing is
     quadratic, no driver collects, and the join keys are (id, gram)
     — co-partitioned, no skew beyond a single document's repetition.
     Empty sides score 0 (by convention), not NULL.
@@ -933,52 +967,18 @@ def rouge_n(
     Output: (id, n_ref_grams, n_cand_grams, rouge_p, rouge_r, rouge_f
     — doubles rounded 6), one row per input row.
     """
-
-    # persisted: both gram-count branches and the final id join read
-    # this frame — without it each branch re-runs the tokenize regex
-    # (measured neutral on sf1's short synthetic docs; the saved work
-    # grows with document length)
-    toks = lambda c: F.filter(  # noqa: E731 — tiny local alias
-        F.split(F.trim(F.lower(F.col(c))), r"[^0-9a-z]+"),
-        lambda x: F.length(x) > 0,
-    )
-    base = track(
-        df.select(
-            F.col(id_col).alias("id"),
-            toks(ref_col).alias("__rt"),
-            toks(cand_col).alias("__ct"),
-        )
-    )
-
-    def gram_counts(tok_col: str, alias: str) -> DataFrame:
-        # distinct=False: ROUGE clipping needs the gram MULTISET
-        hashed = F.expr(rolling_gram_hash_sql(tok_col, n, distinct=False))
-        return (
-            base.select("id", F.explode_outer(hashed).alias("gram"))
-            .groupBy("id", "gram")
-            .agg(F.count(F.when(F.col("gram").isNotNull(), 1)).alias(alias))
-        )
-
-    ref = gram_counts("__rt", "c_ref")
-    cand = gram_counts("__ct", "c_cand")
-    joined = ref.join(cand, on=["id", "gram"], how="full_outer")
-    per_id = joined.groupBy("id").agg(
-        F.sum(F.coalesce("c_ref", F.lit(0))).cast("long").alias("n_ref_grams"),
-        F.sum(F.coalesce("c_cand", F.lit(0))).cast("long").alias("n_cand_grams"),
-        F.sum(
-            F.least(F.coalesce("c_ref", F.lit(0)), F.coalesce("c_cand", F.lit(0)))
-        ).cast("long").alias("__match"),
-    )
-    p = F.when(F.col("n_cand_grams") > 0, F.col("__match") / F.col("n_cand_grams")).otherwise(0.0)
-    r = F.when(F.col("n_ref_grams") > 0, F.col("__match") / F.col("n_ref_grams")).otherwise(0.0)
+    base = _ref_cand_tokens(df, ref_col, cand_col, id_col)
+    ref, cand, match = (F.col(f"__{c}_{n}") for c in ("ref", "cand", "match"))
+    p = F.when(cand > 0, match / cand).otherwise(0.0)
+    r = F.when(ref > 0, match / ref).otherwise(0.0)
     f = F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(0.0)
     return (
         base.select("id")
-        .join(per_id, "id", "left")
+        .join(_clipped_gram_counts(base, n), "id", "left")
         .select(
             "id",
-            F.coalesce("n_ref_grams", F.lit(0)).alias("n_ref_grams"),
-            F.coalesce("n_cand_grams", F.lit(0)).alias("n_cand_grams"),
+            F.coalesce(ref, F.lit(0)).alias("n_ref_grams"),
+            F.coalesce(cand, F.lit(0)).alias("n_cand_grams"),
             F.round(F.coalesce(p, F.lit(0.0)), 6).alias("rouge_p"),
             F.round(F.coalesce(r, F.lit(0.0)), 6).alias("rouge_r"),
             F.round(F.coalesce(f, F.lit(0.0)), 6).alias("rouge_f"),
@@ -997,56 +997,22 @@ def bleu_n(
     geometric mean of clipped n-gram precisions × brevity penalty
     ``min(1, exp(1 - ref_len/cand_len))``. Complements ``rouge_n``
     (recall-oriented) with the precision-oriented standard; same
-    distributed shape — per-(id, gram) count frames per n, clipped-min
-    sums, everything linear in total grams.
+    distributed shape — one :func:`_clipped_gram_counts` per n,
+    everything linear in total grams.
 
     Smoothing: a zero clipped count at any n zeroes the score (the
     uns moothed definition — deterministic and oracle-replayable).
     Empty candidates score 0. Output: (id, n_ref_tokens long,
     n_cand_tokens long, p1..p{max_n} double rounded 6, bleu double
     rounded 6)."""
-    toks = lambda c: F.filter(  # noqa: E731 — tiny local alias
-        F.split(F.trim(F.lower(F.col(c))), r"[^0-9a-z]+"),
-        lambda x: F.length(x) > 0,
-    )
-    # persisted: lens + two gram-count branches per n all read this
-    # frame (1 + 2*max_n consumers re-tokenizing otherwise; measured
-    # neutral on sf1's short docs, grows with document length)
-    base = track(
-        df.select(
-            F.col(id_col).alias("id"),
-            toks(ref_col).alias("__rt"),
-            toks(cand_col).alias("__ct"),
-        )
-    )
-    lens = base.select(
+    base = _ref_cand_tokens(df, ref_col, cand_col, id_col)
+    out = base.select(
         "id",
         F.size("__rt").cast("long").alias("n_ref_tokens"),
         F.size("__ct").cast("long").alias("n_cand_tokens"),
     )
-
-    def clipped(n: int) -> DataFrame:
-        def counts(tok_col: str, alias: str) -> DataFrame:
-            grams = F.expr(rolling_gram_hash_sql(tok_col, n, distinct=False))
-            return (
-                base.select("id", F.explode_outer(grams).alias("gram"))
-                .groupBy("id", "gram")
-                .agg(F.count(F.when(F.col("gram").isNotNull(), 1)).alias(alias))
-            )
-
-        j = counts("__rt", "c_ref").join(
-            counts("__ct", "c_cand"), on=["id", "gram"], how="full_outer"
-        )
-        return j.groupBy("id").agg(
-            F.sum(F.coalesce("c_cand", F.lit(0))).cast("long").alias(f"__cand_{n}"),
-            F.sum(
-                F.least(F.coalesce("c_ref", F.lit(0)), F.coalesce("c_cand", F.lit(0)))
-            ).cast("long").alias(f"__match_{n}"),
-        )
-
-    out = lens
     for n in range(1, max_n + 1):
-        out = out.join(clipped(n), "id", "left")
+        out = out.join(_clipped_gram_counts(base, n), "id", "left")
     ps = [
         F.when(
             F.coalesce(F.col(f"__cand_{n}"), F.lit(0)) > 0,

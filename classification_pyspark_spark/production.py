@@ -243,7 +243,11 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
     surv = exact.join(losers, "doc_id", "left_anti")
     cut_spans = bool(params.get("cut_spans", False))
     if cut_spans:
-        from .operators.dedup_fuzzy import duplicated_span_extents, span_cut_rewrite
+        from .operators.dedup_fuzzy import (
+            duplicated_span_extents,
+            kept_cut_text,
+            span_cut_rewrite,
+        )
 
         # persist: the survivor frame feeds span detection (two
         # consumers inside the operator) and the rewrite base
@@ -259,20 +263,10 @@ def curate_documents(spark: SparkSession, params: dict) -> TaskStatus:
         # persist: the rewrite feeds the curated sink AND the report's
         # cut totals — the span lineage runs once
         cut = track(surv.join(span_cut_rewrite(surv, spans, "text", "doc_id"), "doc_id"))
-        curated = cut.filter(F.col("n_kept") > 0).select(  # docs cut to nothing are dropped
-            "doc_id",
-            # untouched docs keep their ORIGINAL text (ADVICE r8: a
-            # corpus-wide lossy normalization behind one knob was a
-            # surprising default); only actually-cut docs carry the
-            # canonical-punct rewrite
-            F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
-            .otherwise(F.col("kept_text"))
-            .alias("text"),
-            "source",
-            "lang",
-            F.col("__q").alias("quality"),
-            (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
-        )
+        # untouched docs keep their ORIGINAL text (ADVICE r8: a
+        # corpus-wide lossy normalization behind one knob was a
+        # surprising default); docs cut to nothing are dropped
+        curated = kept_cut_text(cut, "source", "lang", F.col("__q").alias("quality"))
     else:
         curated = surv.select("doc_id", "text", "source", "lang", F.col("__q").alias("quality"))
     # the write job counts its own rows; counting `curated` would re-run

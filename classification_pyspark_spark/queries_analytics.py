@@ -27,6 +27,7 @@ from .catalog import load_table, spread_for_compute
 from .functions.money import cents_expr as cents
 from .functions.money import cents_sql
 from .operators.heavy_hitters import heavy_hitters
+from .operators.text import punct_tokens_expr
 from .queries import query
 
 # ---------------------------------------------------------------------------
@@ -61,14 +62,7 @@ def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents is a single parquet file at test scale: spread before
     # the tokenize + MG stage or the codegen stage runs 1-threaded
     docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower("text")), "[^0-9a-z]+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("tok")
-    )
+    toks = docs.select(F.explode(punct_tokens_expr("text")).alias("tok"))
     return heavy_hitters(toks, "tok", _HH_PHI)
 
 

@@ -984,12 +984,11 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode starts (each row fans out to ceil(n/stride) chunks, NOT
     to n tokens), slice+join per chunk. Chunks inherit the doc's
     partition — embarrassingly parallel, no shuffle at all."""
+    from .operators.text import punct_tokens_expr
+
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), r"[^0-9a-z]+"), lambda t: F.length(t) > 0
-    )
     return (
-        d.select("doc_id", toks.alias("t"))
+        d.select("doc_id", punct_tokens_expr("text").alias("t"))
         .withColumn("n", F.size("t"))
         .filter(F.col("n") > 0)
         .select(
@@ -1560,14 +1559,11 @@ def training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     split is a pure hash of doc_id. One range shuffle total; chunk
     TEXT is never materialized — only counts flow."""
     from .operators.sampling import hash_split_expr
+    from .operators.text import punct_tokens_expr
     from .operators.windows import global_cumsum
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"[^0-9a-z]+"),
-        lambda t: F.length(t) > 0,
-    )
-    n = F.size(toks)
+    n = F.size(punct_tokens_expr("text"))
     chunks = (
         d.select("doc_id", n.alias("n"))
         .filter(F.col("n") > 0)

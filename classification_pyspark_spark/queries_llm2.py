@@ -657,14 +657,10 @@ def distinct_n_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed grams, never strings, and the result frame is
     |sources|·3 rows. Oracle replays string grams (hash distincts
     agree up to the usual 2^-64 collision class)."""
-    from .operators.text import rolling_gram_hash_sql
+    from .operators.text import punct_tokens_expr, rolling_gram_hash_sql
 
     d = spread_for_compute(load_table(spark, sf_dir, "documents")).select(
-        "source",
-        F.filter(
-            F.split(F.trim(F.lower(F.col("text"))), r"[^0-9a-z]+"),
-            lambda x: F.length(x) > 0,
-        ).alias("__toks"),
+        "source", punct_tokens_expr("text").alias("__toks")
     )
     parts = []
     for n in (1, 2, 3):
@@ -1120,11 +1116,9 @@ def corpus_curation_surgical(
     cut lists, and the packing cumsum. The DuckDB oracle replays all of
     it, including the recursive-CTE connected components.
     """
-    from pyspark.sql import Window
-
     from .curation import dedup_front, inject, source_funnel
     from .operators.caching import track
-    from .operators.dedup_fuzzy import duplicated_span_extents
+    from .operators.dedup_fuzzy import duplicated_span_extents, gram_positions, marked_spans
     from .operators.sampling import hash_split_expr
     from .operators.text import punct_tok_sql, punct_tokens_expr, rolling_gram_hash_sql
     from .operators.windows import global_cumsum, merge_intervals
@@ -1163,32 +1157,22 @@ def corpus_curation_surgical(
         .select(F.explode(F.expr(five)).alias("gk"))
         .distinct()
     )
-    stm = nd.select("doc_id", F.posexplode(F.expr(five)).alias("p0", "gk")).select(
-        "doc_id", (F.col("p0") + 1).cast("long").alias("pos"), "gk"
-    )
-    wseq = Window.partitionBy("doc_id").orderBy("pos")
-    cspan = track(
-        stm.join(eg, "gk", "left_semi")
-        .select("doc_id", "pos", (F.col("pos") - F.row_number().over(wseq)).alias("grp"))
-        .groupBy("doc_id", "grp")
-        .agg(
-            F.min("pos").cast("long").alias("s"),
-            (F.min("pos") + F.count(F.lit(1)) + 3).cast("long").alias("e"),
-        )
-        .filter(F.col("e") - F.col("s") + 1 >= 20)
-        .select("doc_id", "s", "e")
-    )
+    cspan = track(marked_spans(gram_positions(nd, "doc_id", F.expr(five)), eg, 5, 20))
     # tag each interval with its origin so BOTH per-list sums fall out
     # of ONE aggregate over the same union that feeds the interval
     # merge (r09: was two separate aggregates + two extra doc-keyed
     # joins; span_len == e - s + 1 by construction, so the summed
     # values are identical)
-    iv = dspan.select(
-        "doc_id",
-        F.col("span_start").alias("s"),
-        (F.col("span_start") + F.col("span_len") - 1).alias("e"),
-        F.lit(True).alias("__dup"),
-    ).unionByName(cspan.select("doc_id", "s", "e", F.lit(False).alias("__dup")))
+    iv = (
+        dspan.select("*", F.lit(True).alias("__dup"))
+        .unionByName(cspan.select("*", F.lit(False).alias("__dup")))
+        .select(
+            "doc_id",
+            F.col("span_start").alias("s"),
+            (F.col("span_start") + F.col("span_len") - 1).alias("e"),
+            "__dup",
+        )
+    )
     # interval union: running-max island merge over the CUT LISTS (two
     # rows per span, doc-partitioned)
     cutd = merge_intervals(iv.select("doc_id", "s", "e"), "doc_id", "s", "e").groupBy(
@@ -1451,12 +1435,11 @@ def contaminated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale exchange is the doc-partitioned islands window over
     HIT positions (<= contaminated fraction of the stream). The
     oracle replays membership and islands on gram strings."""
-    from pyspark.sql import Window
-
+    from .operators.dedup_fuzzy import gram_positions, marked_spans
     from .operators.sampling import hash_split_expr
     from .operators.text import rolling_gram_hash_sql, ws_tok_sql
 
-    n, min_span = 5, 20
+    n = 5
     d = spread_for_compute(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "text", hash_split_expr("doc_id").alias("__split")
     )
@@ -1466,23 +1449,5 @@ def contaminated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(grams).alias("gk"))
         .distinct()
     )
-    s = (
-        d.filter(F.col("__split") == "train")
-        .select("doc_id", F.posexplode(grams).alias("p0", "gk"))
-        .select("doc_id", (F.col("p0") + 1).cast("long").alias("pos"), "gk")
-    )
-    hit = s.join(eg, "gk", "left_semi")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    isl = hit.select(
-        "doc_id", "pos", (F.col("pos") - F.row_number().over(w)).alias("grp")
-    )
-    return (
-        isl.groupBy("doc_id", "grp")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.count(F.lit(1)) + (n - 1)).cast("long").alias("span_len"),
-        )
-        .filter(F.col("span_len") >= min_span)
-        .select("doc_id", "span_start", "span_len")
-        .orderBy("doc_id", "span_start")
-    )
+    train = gram_positions(d.filter(F.col("__split") == "train"), "doc_id", grams)
+    return marked_spans(train, eg, n, 20).orderBy("doc_id", "span_start")

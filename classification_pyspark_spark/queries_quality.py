@@ -216,15 +216,10 @@ def token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-50 is TakeOrderedAndProject over the vocabulary aggregate and
     only those 50 survivors are ranked — no global sort or window over
     the vocabulary, which at 100 TB is 1e8+ rows."""
+    from .operators.text import punct_tokens_expr
+
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower("text")), "[^0-9a-z]+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("tok")
-    )
+    toks = docs.select(F.explode(punct_tokens_expr("text")).alias("tok"))
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
     mx = counts.agg(F.max("n").alias("max_n"))
     from pyspark.sql import Window
@@ -625,39 +620,17 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc boolean flags + the conjunction — the standard pre-LLM
     rule filter, entirely whole-stage-codegen expressions (one scan,
     no shuffle, no UDF)."""
-    from .operators.text import (
-        alnum_token_stats_expr,
-        punct_ratio_expr,
-        ws_token_stats_expr,
-    )
+    from .operators.text import gopher_rules, gopher_stats_exprs
 
     d = spread_for_compute(load_table(spark, sf_dir, "documents"))
-    # two fused split+folds materialized in a FIRST projection, rules
-    # derived from the struct fields in a second: HOF lambdas get no
-    # CSE, so the per-rule expression form re-split the text ~6x per
-    # row (sf1: 7.5s -> 3.3s, outputs identical)
-    base = d.select(
-        "doc_id",
-        ws_token_stats_expr("text").alias("__ws"),
-        alnum_token_stats_expr("text").alias("__al"),
-        punct_ratio_expr("text").alias("__punct"),
-    )
-    n_words = F.col("__ws.n")
-    mwl = F.when(
-        F.col("__al.n") > 0, F.col("__al.len") / F.col("__al.n").cast("double")
-    ).otherwise(F.lit(0.0))
-    wc_ok = n_words.between(50, 100000)
-    mwl_ok = mwl.between(3.0, 10.0)
-    stop_ok = F.col("__ws.stop") >= 2
-    punct_ok = F.col("__punct") <= 0.1
+    # the fused stats are materialized in a FIRST projection, rules
+    # derived from their struct fields in a second
+    base = d.select("doc_id", *gopher_stats_exprs("text"))
+    rules = gopher_rules()
     return base.select(
         "doc_id",
-        n_words.alias("n_words"),
-        wc_ok.alias("wc_ok"),
-        mwl_ok.alias("mwl_ok"),
-        stop_ok.alias("stop_ok"),
-        punct_ok.alias("punct_ok"),
-        (wc_ok & mwl_ok & stop_ok & punct_ok).alias("passes_gopher"),
+        F.col("__ws.n").alias("n_words"),
+        *[rule.alias(name) for name, rule in rules.items()],
     )
 
 

@@ -326,17 +326,19 @@ def index_gram_hits(index: DataFrame, stream: DataFrame) -> DataFrame:
 
 
 def _span_cut(batch: DataFrame, index: DataFrame | None, n: int, min_span: int):
-    from ..operators.dedup_fuzzy import span_cut_rewrite
+    from ..operators.dedup_fuzzy import (
+        gram_positions,
+        kept_cut_text,
+        marked_spans,
+        span_cut_rewrite,
+    )
     from ..operators.text import punct_tok_sql, rolling_gram_hash_sql
 
     # persist: the batch feeds the gram stream, the rewrite and its
     # join; the gram stream feeds the cut spans and the index rows
     batch = track(batch)
     grams = F.expr(rolling_gram_hash_sql(punct_tok_sql("__text"), n, distinct=False, pad_short=False))
-    stream = track(
-        batch.select(F.col("doc_id"), F.posexplode(grams).alias("p0", "gk"))
-        .select("doc_id", (F.col("p0") + 1).cast("long").alias("pos"), "gk")
-    )
+    stream = track(gram_positions(batch, "doc_id", grams))
     dup_gk = (
         stream.groupBy("gk").agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= 2)
@@ -344,32 +346,10 @@ def _span_cut(batch: DataFrame, index: DataFrame | None, n: int, min_span: int):
     )
     if index is not None:
         dup_gk = dup_gk.unionByName(index_gram_hits(index, stream)).distinct()
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    spans = (
-        stream.join(F.broadcast(dup_gk), "gk", "left_semi")
-        .select("doc_id", "pos", (F.col("pos") - F.row_number().over(w)).alias("grp"))
-        .groupBy("doc_id", "grp")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.count(F.lit(1)) + (n - 1)).cast("long").alias("span_len"),
-        )
-        .filter(F.col("span_len") >= min_span)
-        .select("doc_id", "span_start", "span_len")
-    )
+    spans = marked_spans(stream, F.broadcast(dup_gk), n, min_span)
     rew = span_cut_rewrite(batch, spans, "__text", "doc_id")
-    accepted = (
-        batch.join(rew, "doc_id")
-        .filter(F.col("n_kept") > 0)
-        .select(
-            "doc_id",
-            F.when(F.col("n_kept") == F.col("n_tokens"), F.col("text"))
-            .otherwise(F.col("kept_text"))
-            .alias("text"),
-            "lang",
-            "source",
-            (F.col("n_tokens") - F.col("n_kept")).cast("long").alias("tokens_cut"),
-        )
-        .withColumn("n_chars", F.length(F.coalesce("text", F.lit(""))).cast("long"))
+    accepted = kept_cut_text(batch.join(rew, "doc_id"), "lang", "source").withColumn(
+        "n_chars", F.length(F.coalesce("text", F.lit(""))).cast("long")
     )
     return accepted, stream.select("gk").distinct()
 
