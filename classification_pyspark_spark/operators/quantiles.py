@@ -18,37 +18,63 @@ aggregation:
    typically 10-1000x smaller than the corpus; in the worst case
    (all-unique doubles) it degrades to exactly the row-shuffle the
    previous revision of this operator always paid.
-2. ``repartitionByRange(tag, v)`` the grid — every partition holds a
-   contiguous value range with its counts; per-(partition, tag)
-   weights -> exclusive prefix offsets (a partition-count-sized driver
-   list, same envelope as ``approxQuantile``'s own driver traffic).
-3. each requested rank maps to (partition, local weighted rank); a
-   grid-sized windowed running sum per (partition, tag) — hash
-   exchange of the GRID, not the corpus — plus a literal OR-predicate
-   over the <= 2 x len(probs) x len(cols) needed ranks selects the
-   order statistics. No Python, no Arrow transfer touches corpus-sized
-   data.
-4. the (<= 2 x len(probs))-row result interpolates on the driver with
-   the exact ``percentile_cont`` formula in DuckDB's WEIGHTED form —
-   ``v_lo*(1-f) + v_hi*f`` with ``f = (n-1)p - floor((n-1)p)`` — NOT
-   the algebraically-equal ``v_lo + (v_hi-v_lo)*f``, which differs in
-   the last ulp and can flip a downstream round() at a .5 boundary
-   (observed at sf0.1). The bit-exactness reference is DuckDB
-   ``quantile_cont`` (the oracle engine), applied unconditionally:
-   Spark's builtin ``percentile`` uses the same weighted form but its
-   value-deduplicated buffer short-circuits tie runs (rank_lo and
-   rank_hi on the same unique value return it without arithmetic), so
-   on ties Spark and DuckDB themselves differ in the last ulp — this
-   operator sides with the oracle (and stays within 1 ulp of Spark,
-   property-tested).
+2. one bounded ``grid.limit(LOCAL_MAX_GRID + 1).toArrow()`` picks the
+   selection path, the way SystemML (VLDB 2016) picks single-node or
+   distributed execution from a size estimate (``graph``'s connected
+   components does the same):
+
+   - **Local** (at most ``LOCAL_MAX_GRID`` grid rows, all columns
+     together): per tag, numpy sorts the values, takes cumulative
+     counts and ``searchsorted``s each needed rank. The moments come
+     from the same sorted grid: mean ``fsum(v*cnt)/n``, second moment
+     ``fsum(cnt*(v-mean)*(v-mean))``, min and max at its ends.
+     ``math.fsum`` is correctly rounded, so the moments do not depend
+     on the grid's partitioning and are the same on every run; a
+     caller that plans a later pass with them as literals (the
+     outlier count) reuses its generated classes. No further Spark
+     job runs. Every grid at sf0.1 takes this path.
+   - **Distributed** (above it): ``repartitionByRange(tag, v)`` the
+     grid — every partition holds a contiguous value range with its
+     counts; per-(partition, tag) weights -> exclusive prefix offsets
+     (a partition-count-sized driver list, same envelope as
+     ``approxQuantile``'s own driver traffic). Each requested rank
+     maps to (partition, local weighted rank); a grid-sized windowed
+     running sum per (partition, tag) — hash exchange of the GRID,
+     not the corpus — plus a literal OR-predicate over the
+     <= 2 x len(probs) x len(cols) needed ranks selects the order
+     statistics. The mean is the sum of per-partition partials and
+     the second moment a second grid-sized job with the mean as a
+     literal. No Python, no Arrow transfer touches corpus-sized data.
+
+   ``LOCAL_MAX_GRID`` (1M) was set by timing both paths on
+   ``local[4]`` on a synthetic 4M-row parquet with a 1M-distinct
+   column plus a 1k-distinct one (1.001M grid rows), four reps each
+   inside one session, grid aggregate included: local 2.9-3.4 s warm
+   against 5.8-6.1 s distributed. Just above the threshold the
+   distributed path also pays the discarded bounded collect: 6.2-6.9 s
+   against 5.4-6.7 s without it. The bound caps what the driver holds
+   (1M rows of a tag, a double and a long, ~25 MB of Arrow).
+3. the (<= 2 x len(probs))-value result interpolates on the driver
+   with the exact ``percentile_cont`` formula in DuckDB's WEIGHTED
+   form — ``v_lo*(1-f) + v_hi*f`` with ``f = (n-1)p - floor((n-1)p)``
+   — NOT the algebraically-equal ``v_lo + (v_hi-v_lo)*f``, which
+   differs in the last ulp and can flip a downstream round() at a .5
+   boundary (observed at sf0.1). Both paths share this tail. The
+   bit-exactness reference is DuckDB ``quantile_cont`` (the oracle
+   engine), applied unconditionally: Spark's builtin ``percentile``
+   uses the same weighted form but its value-deduplicated buffer
+   short-circuits tie runs (rank_lo and rank_hi on the same unique
+   value return it without arithmetic), so on ties Spark and DuckDB
+   themselves differ in the last ulp — this operator sides with the
+   oracle (and stays within 1 ulp of Spark, property-tested).
 
 The selected values are the exact stored doubles at the exact global
 ranks, so the grid form returns bit-identical results to the previous
 row-selection form — ties simply arrive pre-merged.
 
-Peak memory is one partition's slice of the GRID (value-domain-sized);
-total work is one map-side-combined corpus aggregate plus grid-sized
-exchanges. NULLs are excluded, matching ``percentile`` / DuckDB
+Peak memory is one partition's slice of the GRID (value-domain-sized),
+or the whole grid on the driver's local path; total work is one
+map-side-combined corpus aggregate plus grid-sized exchanges. NULLs are excluded, matching ``percentile`` / DuckDB
 ``quantile_cont`` semantics.
 """
 
@@ -57,8 +83,15 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Grid rows (distinct (column, value) pairs, all columns together) at
+# or under which selection runs on the driver; the module doc has the
+# timing that set it.
+LOCAL_MAX_GRID = 1_000_000
 
 
 def exact_quantiles_multi(
@@ -102,8 +135,9 @@ def exact_quantiles_multi_stats(
     re-scanned parquet for the moments).
 
     The mean is ``sum(v*cnt)/n`` on the grid; the variance is the
-    SHIFTED second moment ``sum(cnt*(v-mean)^2)/(n-1)`` computed in a
-    second grid-sized job with the mean as a literal — numerically
+    SHIFTED second moment ``sum(cnt*(v-mean)^2)/(n-1)`` — on the
+    driver over the collected grid, or in a second grid-sized job with
+    the mean as a literal on the distributed path — numerically
     stable (no ``E[x^2]-E[x]^2`` cancellation), agreeing with the
     row-wise central-moment accumulators of Spark/DuckDB to ~1e-15
     relative, the same envelope those two engines already differ by.
@@ -120,6 +154,21 @@ def exact_quantiles_multi_stats(
     )
 
 
+def _rank_positions(n: int, probs: Sequence[float], discrete: bool) -> list[float]:
+    """0-based rank of each prob in a column of ``n`` values: integral
+    for ``discrete``, fractional (interpolated between its floor and
+    ceiling) for ``percentile_cont``."""
+    if discrete:
+        return [float(max(0, math.ceil(p * n) - 1)) for p in probs]
+    return [(n - 1) * p for p in probs]
+
+
+def _needed_ranks(n: int, probs: Sequence[float], discrete: bool) -> list[int]:
+    return sorted(
+        {r for x in _rank_positions(n, probs, discrete) for r in (math.floor(x), math.ceil(x))}
+    )
+
+
 def _exact_quantiles_impl(
     df: DataFrame,
     cols: Sequence[str],
@@ -132,21 +181,98 @@ def _exact_quantiles_impl(
         raise ValueError(f"probs must be in [0,1], got {list(probs)}")
     if not cols or (not probs and not with_moments):
         return {c: [] for c in cols}, {}
-    spark = df.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     stack_args = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
     vals = df.selectExpr(f"stack({len(cols)}, {stack_args}) as (tag, v)").filter(
         F.col("v").isNotNull()
     )
     # corpus -> grid: the ONLY corpus-sized stage, map-side combined.
-    # The grid itself is persisted because repartitionByRange runs a
-    # RANGE-SAMPLING job over its input before the real exchange —
-    # unpersisted, that sampling pass would recompute the whole corpus
-    # aggregate a second time.
+    # The grid itself is persisted because the bounded collect below
+    # and, on the distributed path, repartitionByRange's RANGE-SAMPLING
+    # job would each recompute the whole corpus aggregate otherwise.
     grid = vals.groupBy("tag", "v").agg(
         F.count("*").cast("long").alias("cnt")
     ).persist()
+    try:
+        small = grid.limit(LOCAL_MAX_GRID + 1).toArrow()
+        if small.num_rows <= LOCAL_MAX_GRID:
+            n_by_tag, moments, got = _select_local(small, probs, discrete, with_moments)
+        else:
+            n_part = num_partitions or int(
+                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+            )
+            n_by_tag, moments, got = _select_distributed(
+                grid, n_part, probs, discrete, with_moments
+            )
+    finally:
+        grid.unpersist()
+
+    out: dict[str, list[float | None]] = {}
+    for c in cols:
+        if c not in n_by_tag:  # empty / all-NULL column
+            out[c] = [None] * len(probs)
+            continue
+        vals_out = []
+        for x in _rank_positions(n_by_tag[c], probs, discrete):
+            if discrete:
+                vals_out.append(got[(c, int(x))])
+            else:
+                lo, hi = math.floor(x), math.ceil(x)
+                v_lo, v_hi = got[(c, lo)], got[(c, hi)]
+                f = x - lo
+                # weighted form — bit-identical to DuckDB
+                # quantile_cont, the oracle engine (see module doc)
+                vals_out.append(v_lo * (1 - f) + v_hi * f)
+        out[c] = vals_out
+    return out, moments
+
+
+def _select_local(
+    grid: pa.Table, probs: Sequence[float], discrete: bool, with_moments: bool
+) -> tuple[dict[str, int], dict[str, dict], dict[tuple[str, int], float]]:
+    """Driver-side selection over the collected grid: per tag, the
+    values sorted with their cumulative counts, and each needed rank
+    is the first value whose cumulative count exceeds it. The moments
+    are correctly rounded sums (``math.fsum``) over the same sorted
+    grid, so they do not depend on how Spark partitioned it."""
+    tags = grid["tag"].to_numpy(zero_copy_only=False)
+    v_all, cnt_all = grid["v"].to_numpy(), grid["cnt"].to_numpy()
+    n_by_tag: dict[str, int] = {}
+    moments: dict[str, dict] = {}
+    got: dict[tuple[str, int], float] = {}
+    for tag in sorted(set(tags)):
+        mask = tags == tag
+        order = np.argsort(v_all[mask])
+        v, cnt = v_all[mask][order], cnt_all[mask][order]
+        cum = np.cumsum(cnt)
+        n = n_by_tag[tag] = int(cum[-1])
+        ranks = _needed_ranks(n, probs, discrete)
+        for r, i in zip(ranks, np.searchsorted(cum, ranks, side="right")):
+            got[(tag, r)] = float(v[i])
+        if with_moments:
+            mean = math.fsum(v * cnt) / n
+            d = v - mean
+            # cnt * d * d evaluates left to right, as the Spark
+            # expression of the distributed path does
+            m2 = math.fsum(cnt * d * d)
+            moments[tag] = {
+                "count": float(n),
+                "mean": mean,
+                "stddev": math.sqrt(m2 / (n - 1)) if n > 1 else float("nan"),
+                "min": float(v[0]),
+                "max": float(v[-1]),
+            }
+    return n_by_tag, moments, got
+
+
+def _select_distributed(
+    grid: DataFrame,
+    n_part: int,
+    probs: Sequence[float],
+    discrete: bool,
+    with_moments: bool,
+) -> tuple[dict[str, int], dict[str, dict], dict[tuple[str, int], float]]:
+    """Range-partitioned selection (module doc, steps 2-3)."""
     part = (
         grid.repartitionByRange(n_part, F.col("tag").asc(), F.col("v").asc())
         .withColumn("__pid", F.spark_partition_id())
@@ -217,30 +343,19 @@ def _exact_quantiles_impl(
                 }
 
         got: dict[tuple[str, int], float] = {}
-        pos: dict[str, list[tuple[float, float]]] = {}
         if probs:
-            # per tag: global 0-based ranks needed
-            needed: dict[str, set[int]] = {}
-            for tag, n in n_by_tag.items():
-                if discrete:
-                    pos[tag] = [(p, float(max(0, math.ceil(p * n) - 1))) for p in probs]
-                    needed[tag] = {int(x) for _, x in pos[tag]}
-                else:
-                    pos[tag] = [(p, (n - 1) * p) for p in probs]
-                    needed[tag] = {
-                        r for _, x in pos[tag] for r in (math.floor(x), math.ceil(x))
-                    }
-
             # rank -> (partition, local weighted rank): within a range
             # partition each tag's grid rows are one contiguous run
             pids_sorted = sorted({pid for pid, _ in weights})
+            offsets_by_tag: dict[str, dict[int, int]] = {}
             targets: list[tuple[int, str, int]] = []  # (pid, tag, local rank)
-            for tag, ranks in needed.items():
+            for tag, n in n_by_tag.items():
                 offsets, acc = {}, 0
                 for pid in pids_sorted:
                     offsets[pid] = acc
                     acc += weights.get((pid, tag), 0)
-                for r in sorted(ranks):
+                offsets_by_tag[tag] = offsets
+                for r in _needed_ranks(n, probs, discrete):
                     for pid in reversed(pids_sorted):
                         if weights.get((pid, tag), 0) > 0 and offsets[pid] <= r:
                             targets.append((pid, tag, r - offsets[pid]))
@@ -299,13 +414,6 @@ def _exact_quantiles_impl(
             by_pid_tag: dict[tuple[int, str], list] = {}
             for r in rows:
                 by_pid_tag.setdefault((r["__pid"], r["tag"]), []).append(r)
-            offsets_by_tag: dict[str, dict[int, int]] = {}
-            for tag in needed:
-                offs, acc = {}, 0
-                for pid in pids_sorted:
-                    offs[pid] = acc
-                    acc += weights.get((pid, tag), 0)
-                offsets_by_tag[tag] = offs
             for pid, tag, local in targets:
                 hit = None
                 for r in by_pid_tag.get((pid, tag), []):
@@ -321,26 +429,7 @@ def _exact_quantiles_impl(
                 got[(tag, offsets_by_tag[tag][pid] + local)] = hit["v"]
     finally:
         part.unpersist()
-        grid.unpersist()
-
-    out: dict[str, list[float | None]] = {}
-    for c in cols:
-        if c not in n_by_tag:  # empty / all-NULL column
-            out[c] = [None] * len(probs)
-            continue
-        vals_out = []
-        for _, x in pos.get(c, []):
-            if discrete:
-                vals_out.append(got[(c, int(x))])
-            else:
-                lo, hi = math.floor(x), math.ceil(x)
-                v_lo, v_hi = got[(c, lo)], got[(c, hi)]
-                f = x - lo
-                # weighted form — bit-identical to DuckDB
-                # quantile_cont, the oracle engine (see module doc)
-                vals_out.append(v_lo * (1 - f) + v_hi * f)
-        out[c] = vals_out
-    return out, moments
+    return n_by_tag, moments, got
 
 
 def exact_quantiles_distributed(

@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PHYS_BYTES = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
 # Defaults tuned for the local[32] test harness; on a real cluster the
 # same keys are what you would tune (shuffle partitions ~ 2-3x total
 # cores, maxPartitionBytes to keep scan tasks ~128-256 MB).
@@ -33,13 +35,15 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # 16g: local[32] means 32 concurrent tasks share ONE unified memory
-    # pool — at 8g the sf10 probes' explode-then-aggregate shapes
-    # (~1B gram rows, 32 partial-agg maps in flight) starved execution
-    # memory (UNABLE_TO_ACQUIRE_MEMORY) while the box has 128 GiB; on a
-    # real cluster this is executor memory ÷ executor cores, sized to
-    # the same ~0.5 GB/task-slot floor
-    "spark.driver.memory": "16g",
+    # Half of physical RAM, capped at 16g: local[32] means 32 concurrent
+    # tasks share ONE unified memory pool — at 8g the sf10 probes'
+    # explode-then-aggregate shapes (~1B gram rows, 32 partial-agg maps
+    # in flight) starved execution memory (UNABLE_TO_ACQUIRE_MEMORY) on
+    # a 128 GiB box. A fixed 16g on a 16 GB host let a long-lived
+    # session grow its heap until the kernel killed the JVM. On a real
+    # cluster this is executor memory ÷ executor cores, sized to the
+    # same ~0.5 GB/task-slot floor
+    "spark.driver.memory": f"{min(16 << 10, _PHYS_BYTES >> 21)}m",
     "spark.ui.enabled": "false",
     # Spark's default of 100 generated classes is smaller than one warm
     # pass: a perfbench query_mix pass needs 122 and a curate_job pass

@@ -42,3 +42,20 @@ def cc_paths(monkeypatch):
             yield path
 
     return paths
+
+
+@pytest.fixture
+def quantile_paths(monkeypatch):
+    """``for path in quantile_paths():`` runs the loop body once per
+    exact-quantile selection path, forced through ``LOCAL_MAX_GRID``
+    (-1: no value grid is small enough for the driver)."""
+    from classification_pyspark_spark.operators import quantiles
+
+    local = quantiles.LOCAL_MAX_GRID
+
+    def paths():
+        for path, bound in (("local", local), ("distributed", -1)):
+            monkeypatch.setattr(quantiles, "LOCAL_MAX_GRID", bound)
+            yield path
+
+    return paths

@@ -76,6 +76,36 @@ def test_register_views_sql(spark, sf_dir):
     assert out.count() == 5
 
 
+def test_load_table_infers_each_file_set_once(spark, sf_dir, tmp_path):
+    """A repeat read of an unchanged table runs no Spark job (its schema
+    is remembered); a rewrite at the same path is inferred again; a
+    missing path raises as before."""
+    import bench
+
+    def jobs_of(read):
+        jl = bench._store(spark).jobsList(None)
+        first = 0 if jl.isEmpty() else jl.head().jobId() + 1
+        df = read()
+        return df, bench._history(spark, first)[0]
+
+    region = load_table(spark, sf_dir, "region")
+    path = str(tmp_path / "t.parquet")
+    region.write.parquet(path)
+    first, _ = jobs_of(lambda: load_table(spark, str(tmp_path), "t"))
+    again, jobs = jobs_of(lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(region.collect())
+
+    region.withColumn("extra", F.lit(1)).write.mode("overwrite").parquet(path)
+    rewritten = load_table(spark, str(tmp_path), "t")
+    assert rewritten.columns == region.columns + ["extra"]
+    assert rewritten.filter("extra = 1").count() == region.count()
+
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "missing")
+
+
 def test_parse_byte_size_suffixes():
     from classification_pyspark_spark.catalog import _parse_byte_size
 

@@ -43,7 +43,7 @@ PROBS = [0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0]
     nparts=st.sampled_from([1, 3, 8]),
 )
 @settings(**SETTINGS)
-def test_equals_duckdb_quantile_cont(spark, vals, nparts):
+def test_equals_duckdb_quantile_cont(spark, quantile_paths, vals, nparts):
     import math
 
     import duckdb
@@ -51,7 +51,6 @@ def test_equals_duckdb_quantile_cont(spark, vals, nparts):
     import pandas as pd
 
     df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(nparts)
-    got = exact_quantiles_distributed(df, "x", PROBS, num_partitions=4)
     # values go to DuckDB via Arrow, NOT as SQL literals: DuckDB's
     # literal parser is off by 1 ulp for some doubles (e.g.
     # 1.9859126702649519), while binary transfer is exact — matching
@@ -60,17 +59,19 @@ def test_equals_duckdb_quantile_cont(spark, vals, nparts):
     con = duckdb.connect()
     con.register("vals_df", vals_df)
     want_duck = con.execute(f"select quantile_cont(x, {PROBS}) from vals_df").fetchone()[0]
-    # BIT equality vs the oracle engine: downstream round() calls can
-    # flip on a 1-ulp difference, and the driver's hash compare is
-    # full-precision
-    assert got == [float(v) for v in want_duck]
-    # Spark's builtin percentile agrees except for its tie
-    # short-circuit: never further than 1 ulp away
     want_spark = df.agg(
         F.expr(f"percentile(x, array({', '.join(map(str, PROBS))}))")
     ).first()[0]
-    for g, w in zip(got, list(want_spark)):
-        assert g == w or abs(g - w) <= math.ulp(w), (g, w)
+    for path in quantile_paths():
+        got = exact_quantiles_distributed(df, "x", PROBS, num_partitions=4)
+        # BIT equality vs the oracle engine: downstream round() calls can
+        # flip on a 1-ulp difference, and the driver's hash compare is
+        # full-precision
+        assert got == [float(v) for v in want_duck], path
+        # Spark's builtin percentile agrees except for its tie
+        # short-circuit: never further than 1 ulp away
+        for g, w in zip(got, list(want_spark)):
+            assert g == w or abs(g - w) <= math.ulp(w), (path, g, w)
 
 
 def test_lineitem_matches_duckdb(spark, sf_dir):
@@ -101,13 +102,14 @@ def test_probs_validated(spark):
         exact_quantiles_distributed(df, "x", [1.5])
 
 
-def test_no_lingering_persist(spark):
+def test_no_lingering_persist(spark, quantile_paths):
     # delta-based: the shared test session may carry other tests'
     # persisted frames; the operator itself must add none
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     df = spark.createDataFrame([(float(i),) for i in range(100)], "x double")
-    exact_quantiles_distributed(df, "x", [0.5])
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    for path in quantile_paths():
+        exact_quantiles_distributed(df, "x", [0.5])
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == before, path
 
 
 @given(
@@ -119,7 +121,9 @@ def test_no_lingering_persist(spark):
     nparts=st.sampled_from([1, 5]),
 )
 @settings(**SETTINGS)
-def test_discrete_mode_equals_exact_approx_and_quantile_disc(spark, vals, nparts):
+def test_discrete_mode_equals_exact_approx_and_quantile_disc(
+    spark, quantile_paths, vals, nparts
+):
     """discrete=True must match Spark percentile_approx at exact
     accuracy AND DuckDB quantile_disc (the engines agree; the operator
     must agree with both)."""
@@ -128,15 +132,16 @@ def test_discrete_mode_equals_exact_approx_and_quantile_disc(spark, vals, nparts
     from classification_pyspark_spark.operators.quantiles import exact_quantiles_multi
 
     df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(nparts)
-    got = exact_quantiles_multi(df, ["x"], PROBS, num_partitions=3, discrete=True)["x"]
     want_spark = df.agg(
         F.expr(f"percentile_approx(x, array({', '.join(map(str, PROBS))}), 2147483647)")
     ).first()[0]
     want_duck = duckdb.sql(
         f"select quantile_disc(x, {PROBS}) from (select unnest({vals}::DOUBLE[]) x)"
     ).fetchone()[0]
-    assert got == want_spark
-    assert got == [float(v) for v in want_duck]
+    for path in quantile_paths():
+        got = exact_quantiles_multi(df, ["x"], PROBS, num_partitions=3, discrete=True)["x"]
+        assert got == want_spark, path
+        assert got == [float(v) for v in want_duck], path
 
 
 def test_multi_column_single_pass_matches_per_column(spark, sf_dir):
@@ -154,3 +159,63 @@ def test_multi_column_single_pass_matches_per_column(spark, sf_dir):
             f"from read_parquet('{sf_dir}/lineitem.parquet')"
         ).fetchone()[0]
         assert multi[c] == [float(v) for v in want]
+
+
+@given(
+    cols=st.lists(
+        st.lists(
+            st.one_of(
+                st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False),
+                st.integers(min_value=-5, max_value=5).map(float),  # force ties
+                st.none(),
+            ),
+            max_size=40,
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    discrete=st.booleans(),
+)
+@settings(**SETTINGS)
+def test_local_and_distributed_paths_agree(spark, quantile_paths, cols, discrete):
+    """Both selection paths over several columns (ties, NULLs, and an
+    always-NULL column): identical quantiles, counts, minima and
+    maxima; means and standard deviations within the rounding of the
+    distributed path's partition-order sums."""
+    import math
+
+    from classification_pyspark_spark.operators.quantiles import exact_quantiles_multi_stats
+
+    names = [f"c{i}" for i in range(len(cols))] + ["empty"]
+    n_rows = max(len(c) for c in cols)
+    rows = [tuple(c[i] if i < len(c) else None for c in cols) + (None,) for i in range(n_rows)]
+    df = spark.createDataFrame(rows, ", ".join(f"{c} double" for c in names)).repartition(3)
+    res = {
+        path: exact_quantiles_multi_stats(df, names, PROBS, num_partitions=4, discrete=discrete)
+        for path in quantile_paths()
+    }
+    (q_local, m_local), (q_dist, m_dist) = res["local"], res["distributed"]
+    assert q_local == q_dist
+    assert q_local["empty"] == [None] * len(PROBS)
+    assert m_local.keys() == m_dist.keys() == {
+        n for n, c in zip(names, cols) if any(v is not None for v in c)
+    }
+    for name, ml in m_local.items():
+        md = m_dist[name]
+        assert {k: ml[k] for k in ("count", "min", "max")} == {
+            k: md[k] for k in ("count", "min", "max")
+        }
+        vals = [v for v in cols[names.index(name)] if v is not None]
+        # a floating-point sum of n terms is off by at most n/2 ulp of
+        # the sum of their magnitudes, so the distributed mean is off by
+        # at most half an ulp of that sum; the local sums are exact
+        mean_tol = math.ulp(math.fsum(map(abs, vals))) + math.ulp(ml["mean"])
+        assert abs(ml["mean"] - md["mean"]) <= mean_tol, (ml, md)
+        if len(vals) == 1:
+            assert math.isnan(ml["stddev"]) and math.isnan(md["stddev"])
+        else:
+            # the second moment's own sum, plus a shift of the mean it
+            # is centred on (which moves the deviation by about as much)
+            assert math.isclose(
+                ml["stddev"], md["stddev"], rel_tol=len(vals) * 2**-52, abs_tol=2 * mean_tol
+            ), (ml, md)
