@@ -20,16 +20,14 @@ Overflow envelope (documented, not silent): a 4dp product sum
 9.2e14 currency units **per group** — about a quadrillion dollars —
 and a 6dp double-product sum at 9.2e12 per group. Real-world money
 aggregates sit far inside that envelope; for synthetic data beyond
-it, set ``EXACT_DECIMAL = True`` to flip every helper back to the
-decimal path (slower, 38-digit headroom).
+it, :func:`decimal_sum` is the decimal path (slower, 38-digit
+headroom).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-EXACT_DECIMAL = False
 
 
 def cents_expr(col: Column | str, scale: int = 2) -> Column:
@@ -51,22 +49,6 @@ def sum_money(expr_cents: Column, scale: int = 2) -> Column:
     the resulting double is bit-identical across engines.
     """
     return F.sum(expr_cents) / F.lit(float(10**scale))
-
-
-def sum_money_sql(expr_cents: str, scale: int = 2) -> str:
-    """DuckDB twin of :func:`sum_money` (BIGINT sum, one division)."""
-    return f"CAST(SUM({expr_cents}) AS BIGINT) / {float(10 ** scale)}"
-
-
-# Revenue = extendedprice * (1 - discount): 2dp x 2dp -> 4dp product
-# held in cents*cents fixed point. Shared by every TPC-H-shaped query.
-# (A function, not a module constant: building a Column requires a
-# live SparkContext, which imports must not assume.)
-def rev_cents_expr() -> Column:
-    return cents_expr("l_extendedprice") * (100 - cents_expr("l_discount"))
-
-
-REV_CENTS_SQL = f"{cents_sql('l_extendedprice')} * (100 - {cents_sql('l_discount')})"
 
 
 def decimal_sum(col: Column, out_alias: str | None = None) -> Column:

@@ -13,7 +13,7 @@ symmetrized edge frame, the way SystemML (VLDB 2016) picks single-node
 or distributed execution from a size estimate:
 
 - **Local** (at most ``LOCAL_MAX_EDGES`` directed edges): one bounded
-  ``limit(LOCAL_MAX_EDGES + 1).toArrow()`` brings the edges to the
+  collect (``operators/local.py``) brings the edges to the
   driver, a vectorised numpy union-find labels them, and the labels
   come back as a ``createDataFrame`` local relation. Dedup graphs are
   this size: the sf0.1 curation graph has ~1,100 edges, on which the
@@ -40,6 +40,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .local import collect_if_small
 
 # Directed rows of the symmetrized edge frame (each undirected edge
 # counts twice) at or under which CC runs on the driver. Measured on
@@ -99,8 +101,9 @@ def connected_components(
     The edge list is symmetrized in ONE pass over the caller's pair
     pipeline (explode of both orientations; a two-branch union would
     re-run the pipeline per branch) and truncated, so the caller's
-    pipeline runs once whichever path follows. One bounded
-    ``limit(LOCAL_MAX_EDGES + 1).toArrow()`` then decides the path:
+    pipeline runs once whichever path follows. One bounded collect
+    (``local.collect_if_small(sym, LOCAL_MAX_EDGES)``) then decides the
+    path:
 
     - **Local** (at most ``LOCAL_MAX_EDGES`` rows, no null ids):
       ``_local_labels`` on the collected columns; the labels return
@@ -178,8 +181,8 @@ def connected_components(
         .distinct()
     )
 
-    small = sym.limit(LOCAL_MAX_EDGES + 1).toArrow()
-    if small.num_rows <= LOCAL_MAX_EDGES and small["a"].null_count == 0:
+    small = collect_if_small(sym, LOCAL_MAX_EDGES)
+    if small is not None and small["a"].null_count == 0:
         _release(sym)
         a = small["a"]
         ids, labels = _local_labels(a.to_numpy(), small["b"].to_numpy())

@@ -18,10 +18,10 @@ aggregation:
    typically 10-1000x smaller than the corpus; in the worst case
    (all-unique doubles) it degrades to exactly the row-shuffle the
    previous revision of this operator always paid.
-2. one bounded ``grid.limit(LOCAL_MAX_GRID + 1).toArrow()`` picks the
-   selection path, the way SystemML (VLDB 2016) picks single-node or
-   distributed execution from a size estimate (``graph``'s connected
-   components does the same):
+2. one bounded collect (``local.collect_if_small(grid,
+   LOCAL_MAX_GRID)``) picks the selection path, the way SystemML
+   (VLDB 2016) picks single-node or distributed execution from a size
+   estimate (``graph``'s connected components does the same):
 
    - **Local** (at most ``LOCAL_MAX_GRID`` grid rows, all columns
      together): per tag, numpy sorts the values, takes cumulative
@@ -33,18 +33,21 @@ aggregation:
      caller that plans a later pass with them as literals (the
      outlier count) reuses its generated classes. No further Spark
      job runs. Every grid at sf0.1 takes this path.
-   - **Distributed** (above it): ``repartitionByRange(tag, v)`` the
-     grid — every partition holds a contiguous value range with its
-     counts; per-(partition, tag) weights -> exclusive prefix offsets
-     (a partition-count-sized driver list, same envelope as
-     ``approxQuantile``'s own driver traffic). Each requested rank
-     maps to (partition, local weighted rank); a grid-sized windowed
-     running sum per (partition, tag) — hash exchange of the GRID,
-     not the corpus — plus a literal OR-predicate over the
-     <= 2 x len(probs) x len(cols) needed ranks selects the order
-     statistics. The mean is the sum of per-partition partials and
-     the second moment a second grid-sized job with the mean as a
-     literal. No Python, no Arrow transfer touches corpus-sized data.
+   - **Distributed** (above it): the grid's cumulative counts over
+     its global ``(tag, v)`` order come from ``windows.global_cumsum``,
+     the package's one range-prefix pipeline (range layout of the GRID,
+     not the corpus; per-partition totals; exclusive offsets; a
+     windowed running sum per partition, guarded by the layout
+     witness). One weight column per tag, ``cnt`` on that tag's rows,
+     makes each row's running count a rank within its tag, and a
+     literal OR-predicate over the <= (2 x len(probs) + 2) x len(cols)
+     needed ranks, ``cum - cnt <= r < cum``, selects the order
+     statistics. The ranks are global per tag, so they do not depend
+     on the range layout. The shared totals give each tag's ``n`` and
+     ``sum(v*cnt)`` (a sum in partition order), min and max are ranks
+     ``0`` and ``n-1``, and the second moment is a second grid-sized
+     job with the mean as a literal. No Python, no Arrow transfer
+     touches corpus-sized data.
 
    ``LOCAL_MAX_GRID`` (1M) was set by timing both paths on
    ``local[4]`` on a synthetic 4M-row parquet with a 1M-distinct
@@ -81,12 +84,18 @@ map-side-combined corpus aggregate plus grid-sized exchanges. NULLs are excluded
 from __future__ import annotations
 
 import math
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .caching import track_scope
+from .local import collect_if_small
+from .windows import _global_cumsum
 
 # Grid rows (distinct (column, value) pairs, all columns together) at
 # or under which selection runs on the driver; the module doc has the
@@ -188,21 +197,19 @@ def _exact_quantiles_impl(
     )
     # corpus -> grid: the ONLY corpus-sized stage, map-side combined.
     # The grid itself is persisted because the bounded collect below
-    # and, on the distributed path, repartitionByRange's RANGE-SAMPLING
-    # job would each recompute the whole corpus aggregate otherwise.
+    # and, on the distributed path, the range layout's SAMPLING job and
+    # the second-moment job would each recompute the whole corpus
+    # aggregate otherwise.
     grid = vals.groupBy("tag", "v").agg(
         F.count("*").cast("long").alias("cnt")
     ).persist()
     try:
-        small = grid.limit(LOCAL_MAX_GRID + 1).toArrow()
-        if small.num_rows <= LOCAL_MAX_GRID:
+        small = collect_if_small(grid, LOCAL_MAX_GRID)
+        if small is not None:
             n_by_tag, moments, got = _select_local(small, probs, discrete, with_moments)
         else:
-            n_part = num_partitions or int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-            )
             n_by_tag, moments, got = _select_distributed(
-                grid, n_part, probs, discrete, with_moments
+                grid, list(cols), num_partitions, probs, discrete, with_moments
             )
     finally:
         grid.unpersist()
@@ -267,168 +274,79 @@ def _select_local(
 
 def _select_distributed(
     grid: DataFrame,
-    n_part: int,
+    tags: Sequence[str],
+    num_partitions: int | None,
     probs: Sequence[float],
     discrete: bool,
     with_moments: bool,
 ) -> tuple[dict[str, int], dict[str, dict], dict[tuple[str, int], float]]:
-    """Range-partitioned selection (module doc, steps 2-3)."""
-    part = (
-        grid.repartitionByRange(n_part, F.col("tag").asc(), F.col("v").asc())
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        # one job carries the per-(partition, tag) rank weights AND the
-        # first-moment partials; per-tag totals combine driver-side in
-        # sorted-pid order (deterministic, ~n_part addends)
-        wrows = (
-            part.groupBy("__pid", "tag")
-            .agg(
-                F.sum("cnt").alias("w"),
-                F.sum(F.col("v") * F.col("cnt")).alias("sv"),
-                F.min("v").alias("mn"),
-                F.max("v").alias("mx"),
-            )
-            .collect()
-        )
-        weights: dict[tuple[int, str], int] = {
-            (r["__pid"], r["tag"]): r["w"] for r in wrows
+    """Selection over the grid's global ``(tag, v)`` order with
+    ``windows.global_cumsum`` (module doc, step 2). One weight column
+    per tag, ``cnt`` on that tag's rows, gives each row the cumulative
+    count of its own tag; the row with ``cum - cnt <= r < cum`` holds
+    rank ``r``, as in ``functions/metrics.auc_roc``. The grand totals
+    give each tag's ``n`` and ``sum(v*cnt)``, and min and max are ranks
+    ``0`` and ``n-1``. The range-partitioned grid persisted by the
+    shared code is released before returning."""
+    is_tag = {t: F.col("tag") == t for t in tags}
+    values = {f"__w{i}": F.when(is_tag[t], F.col("cnt")) for i, t in enumerate(tags)}
+    if with_moments:
+        values |= {
+            f"__s{i}": F.when(is_tag[t], F.col("v") * F.col("cnt"))
+            for i, t in enumerate(tags)
         }
-        n_by_tag: dict[str, int] = {}
-        for (_, tag), w in weights.items():
-            n_by_tag[tag] = n_by_tag.get(tag, 0) + w
+    with track_scope():
+        cum, totals = _global_cumsum(grid, ["tag", "v"], values, num_partitions)
+        n_by_tag = {t: int(totals[f"__w{i}"]) for i, t in enumerate(tags) if totals[f"__w{i}"]}
+        ranks = {
+            t: sorted({*_needed_ranks(n, probs, discrete), *((0, n - 1) if with_moments else ())})
+            for t, n in n_by_tag.items()
+        }
+        own_cum = F.coalesce(
+            *[F.when(is_tag[t], F.col(f"cum___w{i}")) for i, t in enumerate(tags)]
+        )
+        covers = [
+            is_tag[t] & (F.col("cum") - F.col("cnt") <= r) & (F.col("cum") > r)
+            for t, rs in ranks.items()
+            for r in rs
+        ]
+        rows = (
+            cum.select("tag", "v", "cnt", own_cum.alias("cum"))
+            .filter(reduce(operator.or_, covers))
+            .collect()
+            if covers
+            else []
+        )
+    got: dict[tuple[str, int], float] = {}
+    for row in rows:
+        # one tie run can cover several requested ranks
+        for r in ranks[row["tag"]]:
+            if row["cum"] - row["cnt"] <= r < row["cum"]:
+                got[(row["tag"], r)] = row["v"]
 
-        moments: dict[str, dict] = {}
-        if with_moments:
-            m1: dict[str, dict] = {}
-            for r in sorted(wrows, key=lambda r: (r["tag"], r["__pid"])):
-                t = r["tag"]
-                if t not in m1:
-                    m1[t] = {"n": 0, "sv": 0.0, "mn": r["mn"], "mx": r["mx"]}
-                a = m1[t]
-                a["n"] += r["w"]
-                a["sv"] += r["sv"]
-                a["mn"] = min(a["mn"], r["mn"])
-                a["mx"] = max(a["mx"], r["mx"])
-            mean_by_tag = {t: a["sv"] / a["n"] for t, a in m1.items()}
-            if mean_by_tag:
-                # per-tag mean as a literal CASE (<= len(cols) branches)
-                mean_expr = None
-                for t, m in mean_by_tag.items():
-                    mean_expr = (F.when if mean_expr is None else mean_expr.when)(
-                        F.col("tag") == t, F.lit(float(m))
-                    )
-                m2 = {
-                    r["tag"]: r["m2"]
-                    for r in part.groupBy("tag")
-                    .agg(
-                        F.sum(
-                            F.col("cnt")
-                            * (F.col("v") - mean_expr) * (F.col("v") - mean_expr)
-                        ).alias("m2")
-                    )
-                    .collect()
-                }
-            else:
-                m2 = {}
-            for t, r in m1.items():
-                n = r["n"]
-                moments[t] = {
-                    "count": float(n),
-                    "mean": mean_by_tag[t],
-                    "stddev": math.sqrt(m2[t] / (n - 1)) if n > 1 else float("nan"),
-                    "min": r["mn"],
-                    "max": r["mx"],
-                }
-
-        got: dict[tuple[str, int], float] = {}
-        if probs:
-            # rank -> (partition, local weighted rank): within a range
-            # partition each tag's grid rows are one contiguous run
-            pids_sorted = sorted({pid for pid, _ in weights})
-            offsets_by_tag: dict[str, dict[int, int]] = {}
-            targets: list[tuple[int, str, int]] = []  # (pid, tag, local rank)
-            for tag, n in n_by_tag.items():
-                offsets, acc = {}, 0
-                for pid in pids_sorted:
-                    offsets[pid] = acc
-                    acc += weights.get((pid, tag), 0)
-                offsets_by_tag[tag] = offsets
-                for r in _needed_ranks(n, probs, discrete):
-                    for pid in reversed(pids_sorted):
-                        if weights.get((pid, tag), 0) > 0 and offsets[pid] <= r:
-                            targets.append((pid, tag, r - offsets[pid]))
-                            break
-
-            # grid-sized selection: running weight per (partition, tag)
-            # — a hash exchange of the GRID — then a literal
-            # OR-predicate picks the row covering each local rank
-            # (rsum - cnt <= r < rsum). Corpus-sized data never moves.
-            w_run = (
-                Window.partitionBy("__pid", "tag")
-                .orderBy("v")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            # layout-integrity witness: the TOTAL weight of each
-            # (partition, tag) run, computed in the SAME selection job
-            # over the same exchange (unbounded frame shares w_run's
-            # sort). If the persisted `part` lineage was evicted and
-            # recomputed, repartitionByRange's order-sensitive range
-            # sampling can shift partition boundaries — a row could
-            # then still "cover" a stale local rank and return a
-            # silently wrong quantile. Comparing each selected row's
-            # run total against the recorded weights map makes a
-            # shifted layout loud instead (review finding).
-            w_tot = Window.partitionBy("__pid", "tag")
-            pred = None
-            for pid, tag, local in targets:
-                one = (
-                    (F.col("__pid") == pid)
-                    & (F.col("tag") == tag)
-                    & (F.col("rsum") - F.col("cnt") <= local)
-                    & (F.col("rsum") > local)
-                )
-                pred = one if pred is None else (pred | one)
-            rows = (
-                part.withColumn("rsum", F.sum("cnt").over(w_run))
-                .withColumn("wtot", F.sum("cnt").over(w_tot))
-                .filter(pred)
-                .select("__pid", "tag", "v", "cnt", "rsum", "wtot")
-                .collect()
-                if pred is not None
-                else []
-            )
-            for r in rows:
-                if r["wtot"] != weights.get((r["__pid"], r["tag"])):
-                    raise RuntimeError(
-                        "value-grid layout shifted between the weight pass and "
-                        f"the selection pass: partition {r['__pid']} tag "
-                        f"{r['tag']!r} now holds weight {r['wtot']}, recorded "
-                        f"{weights.get((r['__pid'], r['tag']))} — the persisted "
-                        "grid was likely evicted and recomputed with different "
-                        "range boundaries; rerun the profile"
-                    )
-            # map each selected grid row back to every local rank it
-            # covers (one tie run can satisfy several requested ranks)
-            by_pid_tag: dict[tuple[int, str], list] = {}
-            for r in rows:
-                by_pid_tag.setdefault((r["__pid"], r["tag"]), []).append(r)
-            for pid, tag, local in targets:
-                hit = None
-                for r in by_pid_tag.get((pid, tag), []):
-                    if r["rsum"] - r["cnt"] <= local < r["rsum"]:
-                        hit = r
-                        break
-                if hit is None:
-                    raise RuntimeError(
-                        "weighted rank selection missed rank "
-                        f"{local} of tag {tag!r} in partition {pid}; "
-                        "recorded offsets no longer match the cached grid"
-                    )
-                got[(tag, offsets_by_tag[tag][pid] + local)] = hit["v"]
-    finally:
-        part.unpersist()
+    moments: dict[str, dict] = {}
+    if with_moments and n_by_tag:
+        mean_by_tag = {
+            t: totals[f"__s{i}"] / n_by_tag[t] for i, t in enumerate(tags) if t in n_by_tag
+        }
+        # the shifted second moment: a second grid-sized job with each
+        # tag's mean as a literal (<= len(cols) CASE branches)
+        mean = None
+        for t, m in mean_by_tag.items():
+            mean = (F.when if mean is None else mean.when)(is_tag[t], F.lit(m))
+        d = F.col("v") - mean
+        m2 = {
+            r["tag"]: r["m2"]
+            for r in grid.groupBy("tag").agg(F.sum(F.col("cnt") * d * d).alias("m2")).collect()
+        }
+        for t, n in n_by_tag.items():
+            moments[t] = {
+                "count": float(n),
+                "mean": mean_by_tag[t],
+                "stddev": math.sqrt(m2[t] / (n - 1)) if n > 1 else float("nan"),
+                "min": got[(t, 0)],
+                "max": got[(t, n - 1)],
+            }
     return n_by_tag, moments, got
 
 

@@ -7,14 +7,23 @@ distributed: ranked top-k per group, lag/lead deltas, frequency top-N,
 and event sessionization (gap > timeout -> new session), which the
 engine adds as the idiomatic-Spark replacement for "days since last
 event" style features.
+
+This module also holds the package's one range-prefix pipeline
+(``_range_partition_with_offsets``: range layout -> per-partition totals
+-> exclusive offsets) and its layout-integrity witness
+(``_witnessed``). ``global_cumsum`` and ``global_row_number`` run on it,
+and so do their callers and the distributed exact-quantile selection
+(``operators/quantiles.py``), so every one of them fails loudly instead
+of returning a wrong prefix when the range layout shifts under it.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from itertools import accumulate
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from .caching import track
@@ -67,67 +76,137 @@ def lag_delta(
 
 def _range_partition_with_offsets(
     df: DataFrame,
-    order_col: str,
-    value_cols: Sequence[str],
+    order_cols: Sequence[str],
+    values: Mapping[str, Column],
     num_partitions: int | None = None,
-):
-    """Shared machinery for global-order computations WITHOUT a
-    single-partition window: range-partition on the order column, take
-    per-partition totals of ``value_cols`` (one tiny job — one row per
-    partition, metadata-sized like ``approxQuantile``), and return the
-    pinned partitioned frame plus a broadcastable exclusive-prefix
-    offset frame keyed by partition id.
+) -> tuple[DataFrame, dict[str, float]]:
+    """The package's one range-prefix layout, shared by every global-order
+    computation that avoids a single-partition window: range-partition on
+    ``order_cols``, add the ``values`` columns (evaluated after the
+    exchange, so it carries only ``df``'s columns), take each
+    partition's row count and ``values`` totals (one tiny job: one row
+    per partition, metadata-sized like ``approxQuantile``), and give
+    every row its partition's ``__rows``, the ``__before`` rows of
+    earlier partitions and the exclusive prefix ``__off_<name>`` of each
+    value. Also returns each value's grand total.
 
-    Rows with equal ``order_col`` values never straddle a range-partition
-    boundary (RangePartitioner bounds are key values), so downstream
-    tie-group logic stays partition-local. The partitioned frame is
-    persisted so the offset job and the consumer see the same partition
-    assignment.
+    The per-partition figures reach the rows as array literals indexed
+    by partition id, not as a joined frame: an array literal is a
+    reference object of the generated code, so new figures reuse the
+    compiled classes, and no broadcast job ships them. A partition that
+    was empty in the totals job reads 0 rows.
+
+    Rows with equal order keys never straddle a range-partition boundary
+    (RangePartitioner bounds are key values), so downstream tie-group
+    logic stays partition-local. The partitioned frame is persisted so
+    the totals job and the consumer see the same partition assignment;
+    :func:`_witnessed` makes a consumer fail loudly when they do not.
     """
     spark = df.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     part = track(
-        df.repartitionByRange(n_part, F.col(order_col).asc())
-        .withColumn("__pid", F.spark_partition_id())
+        df.repartitionByRange(n_part, *[F.col(c).asc() for c in order_cols])
+        .withColumns({"__pid": F.spark_partition_id(), **values})
     )
-    totals = (
-        part.groupBy("__pid")
-        .agg(*[F.sum(c).cast("double").alias(c) for c in value_cols])
+    totals = _partition_totals(part, values)
+    per_part = {
+        c: [totals.get(pid, {}).get(c) or 0 for pid in range(n_part)] for c in ["__rows", *values]
+    }
+    # exclusive prefixes over partition order; the last entry is the grand total
+    prefix = {c: list(accumulate(xs, initial=0)) for c, xs in per_part.items()}
+    arrays = {
+        "__rows": F.lit(per_part["__rows"]).cast("array<bigint>"),
+        "__before": F.lit(prefix["__rows"][:-1]).cast("array<bigint>"),
+        **{f"__off_{c}": F.lit(prefix[c][:-1]).cast("array<double>") for c in values},
+    }
+    return (
+        part.withColumns({name: a[F.col("__pid")] for name, a in arrays.items()}),
+        {c: float(prefix[c][-1]) for c in values},
+    )
+
+
+def _partition_totals(part: DataFrame, values: Mapping[str, Column]) -> dict[int, dict]:
+    """Row count ``__rows`` and the total of each of ``values`` per
+    partition id of the range layout, for the non-empty partitions."""
+    return {
+        r["__pid"]: r.asDict()
+        for r in part.groupBy("__pid")
+        .agg(
+            F.count(F.lit(1)).alias("__rows"),
+            *[F.sum(c).cast("double").alias(c) for c in values],
+        )
         .collect()
+    }
+
+
+def _witnessed(expr: Column, w: WindowSpec) -> Column:
+    """``expr`` on a row of :func:`_range_partition_with_offsets`'s
+    frame, evaluated in the same ``WindowExec`` as the partition's row
+    count over ``w``'s whole frame, or a raised error when that count is
+    not the recorded ``__rows``.
+
+    The layout-integrity witness: if the persisted range-partitioned
+    frame was evicted and recomputed between the totals job and the
+    consumer, RangePartitioner's order-sensitive sampling can shift the
+    partition bounds, and every recorded offset would then be added to
+    the wrong rows — a silently wrong prefix. Range partitions are
+    contiguous runs of the global order, so their row counts pin the
+    whole layout: equal counts on every non-empty partition mean equal
+    bounds, and any shift changes the count of some partition."""
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    shifted = (
+        "range layout shifted between the totals pass and the prefix pass: a "
+        "partition no longer holds the row count recorded for it. The persisted "
+        "range-partitioned frame was likely evicted and recomputed with "
+        "different range bounds; rerun"
     )
-    running = {c: 0.0 for c in value_cols}
-    rows = []
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        rows.append((r["__pid"], *[running[c] for c in value_cols]))
-        for c in value_cols:
-            running[c] += r[c] or 0.0
-    schema = "__pid int, " + ", ".join(f"__off_{c} double" for c in value_cols)
-    offsets = spark.createDataFrame(rows, schema=schema)
-    grand_totals = dict(running)
-    return part, offsets, grand_totals
+    return F.when(F.count(F.lit(1)).over(whole) == F.col("__rows"), expr).otherwise(
+        F.raise_error(F.lit(shifted))
+    )
 
 
 def global_cumsum(
     df: DataFrame,
-    order_col: str,
+    order_col: str | Sequence[str],
     value_cols: Sequence[str],
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Inclusive cumulative sums of ``value_cols`` over the global
-    ascending order of ``order_col``, fully distributed: range
-    repartition + per-partition local windows + broadcast-joined prefix
-    offsets. Adds ``cum_<col>`` (double) per value column.
+    ascending order of ``order_col`` (a column name, or a list of them
+    for a lexicographic order), fully distributed: range repartition +
+    per-partition local windows + per-partition prefix offsets. Adds
+    ``cum_<col>`` (double) per value column. The frame is the window
+    default, RANGE: rows with equal order keys share their tie group's
+    last running value, as under ``Window.orderBy``; NULL keys sort
+    first.
 
     This replaces ``F.sum().over(Window.orderBy(...))`` — which moves
     ALL rows to one partition (WindowExec warning; OOM at 100 TB) —
     with one range shuffle and a partition-count-sized driver exchange.
     """
-    part, offsets, _ = _range_partition_with_offsets(df, order_col, value_cols, num_partitions)
-    w = Window.partitionBy("__pid").orderBy(F.col(order_col).asc())
-    out = part.join(F.broadcast(offsets), "__pid")
-    for c in value_cols:
-        out = out.withColumn(f"cum_{c}", F.sum(F.col(c).cast("double")).over(w) + F.col(f"__off_{c}"))
-    return out.drop("__pid", *[f"__off_{c}" for c in value_cols])
+    return _global_cumsum(df, order_col, {c: F.col(c) for c in value_cols}, num_partitions)[0]
+
+
+def _global_cumsum(
+    df: DataFrame,
+    order_col: str | Sequence[str],
+    values: Mapping[str, Column],
+    num_partitions: int | None,
+) -> tuple[DataFrame, dict[str, float]]:
+    """:func:`global_cumsum` of ``values`` (name -> column, evaluated
+    after the range exchange), also returning each value's grand total."""
+    keys = [order_col] if isinstance(order_col, str) else list(order_col)
+    part, totals = _range_partition_with_offsets(df, keys, values, num_partitions)
+    w = Window.partitionBy("__pid").orderBy(*[F.col(c).asc() for c in keys])
+    out = part.withColumns(
+        {
+            f"cum_{c}": _witnessed(
+                F.sum(F.col(c).cast("double")).over(w) + F.col(f"__off_{c}"), w
+            )
+            for c in values
+        }
+    )
+    return out.drop("__pid", "__rows", "__before", *[f"__off_{c}" for c in values]), totals
 
 
 def global_row_number(
@@ -140,16 +219,12 @@ def global_row_number(
     single-partition window. ``order_cols[0]`` (a column name) drives
     the range partitioning; remaining entries refine the within-
     partition order."""
-    first = order_cols[0]
-    part, offsets, _ = _range_partition_with_offsets(
-        df.withColumn("__one", F.lit(1)), first, ["__one"], num_partitions
-    )
+    part, _ = _range_partition_with_offsets(df, [order_cols[0]], {}, num_partitions)
     w = Window.partitionBy("__pid").orderBy(*[F.col(c).asc() if isinstance(c, str) else c for c in order_cols])
-    out = (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(row_col, (F.row_number().over(w) + F.col("__off___one")).cast("long"))
+    out = part.withColumn(
+        row_col, _witnessed(F.row_number().over(w) + F.col("__before"), w).cast("long")
     )
-    return out.drop("__pid", "__one", "__off___one")
+    return out.drop("__pid", "__rows", "__before")
 
 
 def sessionize(

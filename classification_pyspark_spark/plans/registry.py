@@ -40,7 +40,3 @@ def get_processor(job_name: str, task_name: str) -> Callable:
             f"no processor registered for job={job_name!r} task={task_name!r}; "
             f"known: {sorted(_REGISTRY)}"
         ) from None
-
-
-def list_processors() -> list[tuple[str, str]]:
-    return sorted(_REGISTRY)

@@ -59,3 +59,20 @@ def quantile_paths(monkeypatch):
             yield path
 
     return paths
+
+
+@pytest.fixture
+def shifted_range_layout(monkeypatch):
+    """Make the range-prefix pipeline record one row too many for its
+    first non-empty partition, as when the persisted range-partitioned
+    frame is recomputed with other bounds after the totals job."""
+    from classification_pyspark_spark.operators import windows
+
+    real = windows._partition_totals
+
+    def shifted(part, values):
+        totals = real(part, values)
+        totals[min(totals)]["__rows"] += 1
+        return totals
+
+    monkeypatch.setattr(windows, "_partition_totals", shifted)

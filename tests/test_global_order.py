@@ -5,6 +5,7 @@ forms they replace (which are correct but unscalable)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Window
 
 from classification_pyspark_spark.operators.binning import ntile_bin
@@ -25,11 +26,33 @@ def _frame(spark, n=500, dupes=True):
 
 
 def test_global_cumsum_matches_single_partition_window(spark):
-    df = _frame(spark, dupes=False)  # unique keys -> total order
-    got = {r["k"]: r["cum_v"] for r in global_cumsum(df, "k", ["v"], num_partitions=6).collect()}
-    w = Window.orderBy(F.col("k").asc())
-    want = {r["k"]: r["c"] for r in df.withColumn("c", F.sum("v").over(w)).collect()}
-    assert got == want
+    """Against ``Window.orderBy``'s single-partition form: unique keys;
+    tied keys, where a tie group shares its last running value (the
+    RANGE frame); NULL keys, which sort first; empty input; and a
+    two-column order, itself with ties."""
+    tied = _frame(spark)
+    cases = {
+        "unique": (_frame(spark, dupes=False), "k"),
+        "tied": (tied, "k"),
+        "null keys": (tied.withColumn("k", F.when(F.col("id") % 9 != 0, F.col("k"))), "k"),
+        "empty": (spark.createDataFrame([], tied.schema), "k"),
+        "two columns": (tied.withColumn("k2", F.col("id") % 3), ["k", "k2"]),
+    }
+    for name, (df, order) in cases.items():
+        w = Window.orderBy(*([order] if isinstance(order, str) else order))
+        want = {r["id"]: r["c"] for r in df.withColumn("c", F.sum("v").over(w)).collect()}
+        for n in (1, 6):
+            got = global_cumsum(df, order, ["v"], num_partitions=n).collect()
+            assert {r["id"]: r["cum_v"] for r in got} == want, (name, n)
+
+
+def test_shifted_layout_raises(spark, shifted_range_layout):
+    """The layout witness: when the row counts recorded for the range
+    partitions no longer match the partitions the prefix pass reads (a
+    recomputed layout), the action fails instead of adding the recorded
+    offsets to the wrong rows."""
+    with pytest.raises(Exception, match="layout shifted"):
+        global_cumsum(_frame(spark), "k", ["v"], num_partitions=6).collect()
 
 
 def test_global_row_number_is_a_permutation_and_ordered(spark):

@@ -112,6 +112,45 @@ def test_no_lingering_persist(spark, quantile_paths):
         assert spark.sparkContext._jsc.getPersistentRDDs().size() == before, path
 
 
+def test_distributed_path_raises_on_a_shifted_layout(spark, quantile_paths, shifted_range_layout):
+    """The range-prefix layout witness guards the distributed selection:
+    recorded partition row counts that disagree with the grid's range
+    partitions fail the call, and its persists are still released."""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    df = spark.createDataFrame([(float(i % 37),) for i in range(200)], "x double")
+    for path in quantile_paths():
+        if path == "local":
+            assert exact_quantiles_distributed(df, "x", [0.5]) == [16.5]
+        else:
+            with pytest.raises(Exception, match="layout shifted"):
+                exact_quantiles_distributed(df, "x", [0.5])
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == before, path
+
+
+def test_warm_rep_compiles_nothing(spark, sf_dir, quantile_paths):
+    """A repeated call on the same data reuses every generated class on
+    both paths: the distributed path's ranks are literals that do not
+    depend on the range layout, and its per-partition offsets reach the
+    rows as array literals, which the generated code takes by
+    reference."""
+    import bench
+
+    from classification_pyspark_spark.operators.quantiles import exact_quantiles_multi
+
+    df = spark.range(20_000).select(
+        (F.col("id") % 503).cast("double").alias("x"),
+        (F.col("id") % 17).cast("double").alias("y"),
+    )
+
+    def rep(spark, _sf_dir):
+        exact_quantiles_multi(df, ["x", "y"], [0.25, 0.5, 0.75])
+        return spark.range(0)
+
+    for path in quantile_paths():
+        compiles = [bench.timed_rep(spark, rep, sf_dir)[3] for _ in range(2)]
+        assert compiles[-1] == 0, (path, compiles)
+
+
 @given(
     vals=st.lists(
         st.integers(min_value=-8, max_value=8).map(float),
